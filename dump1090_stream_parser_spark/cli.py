@@ -6,6 +6,8 @@ L10-L28), driving the Spark-native pipeline:
 
 Option mapping (reference -> here):
     -l/--location, -p/--port        -> sbs1 source options (unchanged)
+    (one receiver only)             -> --hosts h1:p1,h2:p2 (JVM sbs1-jvm
+                                       source, one drain thread each)
     -d/--database                   -> output directory (parquet Silver +
                                        dead-letter); add --sqlite for the
                                        drop-in SQLite parity artifact
@@ -43,15 +45,9 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--connect-attempt-delay", type=float, default=5.0,
                    help="seconds to wait after a failed connection attempt")
     p.add_argument("--hosts", default=None,
-                   help="comma-separated host:port receivers (multi-"
-                   "receiver fan-in; overrides -l/-p)")
-    p.add_argument("--engine", choices=("python", "jvm"),
-                   default="python",
-                   help="ingest source engine: 'python' (the default "
-                   "zero-dependency sbs1 source; ceiling ~300k rows/s "
-                   "per box) or 'jvm' (the Java DataSource V2 source -- "
-                   "framing below Python, 0.9-1.6M rows/s measured; "
-                   "needs java/sbs1-jvm-source.jar, committed)")
+                   help="comma-separated host[:port] receivers, read by "
+                   "the JVM sbs1-jvm source (overrides -l/-p; needs "
+                   "java/sbs1-jvm-source.jar, committed)")
     p.add_argument("--master", default="local[*]")
     return p
 
@@ -65,16 +61,23 @@ def main(argv: list[str] | None = None) -> None:
     from .streaming.pipeline import (
         bronze_from_sbs1,
         bronze_from_sbs1_jvm,
-        bronze_from_sbs1_multi,
         silver_batch_writer,
         silver_stream,
     )
     from .streaming.sinks import write_sqlite_batch
 
+    hosts = None
     extra_conf = None
-    if args.engine == "jvm":
+    if args.hosts:
         from .sources.sbs1_jvm import jvm_source_conf
 
+        hosts = [
+            (h.rsplit(":", 1)[0], int(h.rsplit(":", 1)[1]))
+            if ":" in h
+            else (h, 30003)
+            for h in (p.strip() for p in args.hosts.split(","))
+            if h
+        ]
         extra_conf = jvm_source_conf()
     spark = get_spark(
         master=args.master, app_name="sbs1-ingest", extra_conf=extra_conf
@@ -90,28 +93,14 @@ def main(argv: list[str] | None = None) -> None:
         if args.sqlite:
             write_sqlite_batch(silver(batch), args.sqlite, batch_id)
 
-    hosts = None
-    if args.hosts:
-        hosts = [
-            (h.rsplit(":", 1)[0], int(h.rsplit(":", 1)[1]))
-            if ":" in h
-            else (h, 30003)
-            for h in (p.strip() for p in args.hosts.split(","))
-            if h
-        ]
-
     def start():
         opts = dict(
             buffer_size=args.buffer_size,
             connect_attempt_limit=args.connect_attempt_limit,
             connect_attempt_delay=args.connect_attempt_delay,
         )
-        if args.engine == "jvm":
-            bronze = bronze_from_sbs1_jvm(
-                spark, hosts or [(args.location, args.port)], **opts
-            )
-        elif hosts:
-            bronze = bronze_from_sbs1_multi(spark, hosts, **opts)
+        if hosts:
+            bronze = bronze_from_sbs1_jvm(spark, hosts, **opts)
         else:
             bronze = bronze_from_sbs1(
                 spark, args.location, args.port, **opts

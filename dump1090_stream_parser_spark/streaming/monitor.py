@@ -10,9 +10,12 @@ reference's reconnect loop restarts its socket (Appendix A L155-L166)
 
 from __future__ import annotations
 
+import logging
 import time
 
 from pyspark.sql.streaming import StreamingQueryListener
+
+log = logging.getLogger(__name__)
 
 
 class IngestCounters(StreamingQueryListener):
@@ -51,14 +54,22 @@ def supervise(start_query, attempt_limit: int = 10, delay: float = 5.0):
     ``start_query()`` must return a started StreamingQuery. Mirrors the
     reference's connect_attempt_limit/_delay semantics at the query
     level; returns when the query stops cleanly or attempts exhaust.
+    Each failure is logged with its exception, and the final
+    ``RuntimeError`` chains the last one as its ``__cause__``.
     """
-    attempts = 0
-    while attempts < attempt_limit:
+    last: Exception | None = None
+    for attempt in range(1, attempt_limit + 1):
         query = start_query()
         try:
             query.awaitTermination()
             return  # clean stop
-        except Exception:
-            attempts += 1
+        except Exception as exc:
+            last = exc
+            log.warning(
+                "stream failed (attempt %d of %d)",
+                attempt, attempt_limit, exc_info=exc,
+            )
             time.sleep(delay)
-    raise RuntimeError(f"stream failed {attempts} times; giving up")
+    raise RuntimeError(
+        f"stream failed {attempt_limit} times; giving up"
+    ) from last

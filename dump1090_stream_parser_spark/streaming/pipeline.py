@@ -4,8 +4,9 @@ The reference's whole runtime is one loop: recv -> frame -> validate ->
 stamp -> batched INSERT with commit every N rows and reconnect
 supervision (SURVEY.md §3.1). Its Spark-native equivalent:
 
-- source: custom ``sbs1`` data source (prod), builtin socket (dev), or
-  file replay (tests) -- all produce the same Bronze schema;
+- source: the ``sbs1`` data source (one feed), the JVM ``sbs1-jvm``
+  source (many receivers), or file replay (tests) -- all produce the
+  same Bronze schema;
 - transform: :func:`sources.sbs1.parse_lines` -- the SAME expression set
   batch uses, so stream/batch parity holds by construction;
 - sink: ``foreachBatch`` appending partitioned parquet. Checkpointed
@@ -38,16 +39,6 @@ def bronze_from_file_replay(spark: SparkSession, path: str) -> DataFrame:
     return spark.readStream.text(path)
 
 
-def bronze_from_socket(spark: SparkSession, host: str, port: int) -> DataFrame:
-    """Builtin socket source -- dev only, no fault tolerance (A1 dev path)."""
-    return (
-        spark.readStream.format("socket")
-        .option("host", host)
-        .option("port", port)
-        .load()
-    )
-
-
 def bronze_from_sbs1(
     spark: SparkSession, host: str = "localhost", port: int = 30003, **options
 ) -> DataFrame:
@@ -68,113 +59,32 @@ def bronze_from_sbs1(
     return reader.load()
 
 
-def bronze_from_sbs1_multi(
-    spark: SparkSession, hosts: list[tuple[str, int]], **options
-) -> DataFrame:
-    """Multi-receiver ``sbs1`` source: the partitioned reader
-    (one concurrent drain thread + one executor partition per
-    receiver -- sources/sbs1_source.py Sbs1PartitionedStreamReader).
-    ``hosts`` is a list of (host, port) pairs."""
-    from ..sources.sbs1_source import register
-
-    register(spark)
-    reader = spark.readStream.format("sbs1").option(
-        "hosts", ",".join(f"{h}:{p}" for h, p in hosts)
-    )
-    for k, v in options.items():
-        reader = reader.option(k, str(v))
-    return reader.load()
-
-
-def bronze_from_sbs1_fanin(
-    spark: SparkSession,
-    host_groups: list[list[tuple[str, int]]],
-    **options,
-) -> DataFrame:
-    """Fan-in across receiver groups: one partitioned ``sbs1`` source
-    INSTANCE per host group, unioned into one streaming query.
-
-    MEASURED LIMIT (BASELINE.md round-11 row, correcting this
-    docstring's original claim): source instances do NOT get separate
-    Python processes -- SimpleDataSourceStreamReader prefetch runs in
-    the DRIVER process, so every group's drain threads share the one
-    driver GIL and only the TOTAL thread count matters: 2x4 fan-in
-    measures 155k rows/s ~= the single-source 8-receiver point (145k),
-    and 2x2 measures 250k ~= the single-source 4-receiver point
-    (a process census during the run shows exactly one Python process).
-    Use this form for its real benefits -- per-group source options,
-    per-source offset logs, bounded per-source replay buffers -- and
-    keep total receivers <= ~4 per DRIVER for throughput. Scaling
-    drain capacity past one driver's GIL means separate ingest jobs on
-    separate MACHINES (or a box with idle cores), or moving framing
-    out of Python; recv() itself releases the GIL -- the ceiling is
-    the Python-side line splitting and offset bookkeeping. Same-box
-    multi-process is ALSO measured and does NOT pay
-    (`tools/ingest_bench.py procs`): two concurrent drivers on this
-    32-core box get ~105k rows/s each vs 305k solo -- the second
-    driver's executors cannibalize the cores the first one's
-    decode/parse stages were using.
-
-    Union of streaming DataFrames keeps
-    per-source offsets independent in the checkpoint -- exactly-once
-    delivery per receiver is preserved (pinned end-to-end in
-    tests/test_streaming.py)."""
-    if not host_groups:
-        raise ValueError(
-            "bronze_from_sbs1_fanin needs at least one host group"
-            " (got an empty host_groups list)"
-        )
-    streams = [
-        bronze_from_sbs1_multi(spark, group, **options)
-        for group in host_groups
-    ]
-    out = streams[0]
-    for s in streams[1:]:
-        out = out.unionAll(s)
-    return out
-
-
 def bronze_from_sbs1_jvm(
     spark: SparkSession, hosts: list[tuple[str, int]], **options
 ) -> DataFrame:
-    """High-throughput multi-receiver ingest with framing BELOW Python
-    (VERDICT r11 ask #1): the custom JVM ``sbs1-jvm`` source
-    (``java/src/sbs1/Sbs1JvmSource.java``).
+    """Multi-receiver ingest: the custom JVM ``sbs1-jvm`` source
+    (``java/src/sbs1/Sbs1JvmSource.java``). ``hosts`` is a list of
+    (host, port) pairs.
 
-    The round-11 measurements established the one-box ingest ceiling of
-    the Python ``sbs1`` source at ~300k rows/s: every drain thread --
-    however receivers are grouped into source instances -- shares the
-    ONE driver-process GIL, and the GIL-bound work is the Python-side
-    line framing + offset bookkeeping (recv() itself releases it). The
-    named lever was moving framing below Python. This source is the
-    Python partitioned reader's EXACT design (drain thread per
-    receiver with reconnect/backoff, partial-line carry, blob-
-    granularity replay buffer with recv BACKPRESSURE, per-receiver
-    line-count offsets, data-bearing partitions bounded to
-    rows_per_partition) re-implemented against the Java DataSource V2
+    One drain thread per receiver (reconnect/backoff, partial-line
+    carry, blob-granularity replay buffer with recv BACKPRESSURE,
+    per-receiver line-count offsets, data-bearing partitions bounded to
+    ``rows_per_partition``), written against the Java DataSource V2
     API: framing runs on plain JVM threads (no GIL), partitions carry
     a few large byte[] blobs (size-proportional Java serialization,
     no per-row cost), executor tasks split lines as zero-copy
     UTF8String slices -- and the downstream ``parse_lines`` ->
-    ``silver`` path is already pure JVM expressions, so the ENTIRE
-    pipeline never touches a Python worker. Measured numbers live in
+    ``silver`` path is pure JVM expressions, so the ENTIRE pipeline
+    never touches a Python worker. Measured numbers live in
     BASELINE.md's round-12 ingest row (`tools/ingest_bench.py jvm`).
 
-    Spark's BUILTIN ``socket`` source union is NOT this lever, by
-    measurement: its JVM reader thread frames fast, but every buffered
-    row ships to tasks through per-row closure serialization --
-    addBatch ran at ~56k rows/s on this box (8M x 8 receivers measured
-    46k end-to-end), 5x WORSE than the Python source. Recorded as the
-    honest negative in BASELINE.md round 12.
-
-    Semantics vs the Python ``sbs1`` source: identical contract --
-    per-row receive timestamps, in-source reconnect/backoff,
+    Contract: per-row receive timestamps, in-source reconnect/backoff,
     exactly-once into the batch (planned ranges are re-read from the
-    replay payload on task retry), commit-pruned replay buffer,
-    restart-ahead fast-forward; replay beyond the in-memory buffer is
-    equally unavailable (ephemeral TCP -- the reference's own
-    semantics, SURVEY.md §3.2). The jar must be on the session
-    classpath at JVM launch: build the session with
+    replay payload on task retry), commit-pruned replay buffer, and a
+    restart that rebases the fresh connection onto the checkpointed
+    offsets; replay beyond the in-memory buffer is unavailable
+    (ephemeral TCP -- the reference's own semantics, SURVEY.md §3.2). The jar must be on the
+    session classpath at JVM launch: build the session with
     ``extra_conf=sources.sbs1_jvm.jvm_source_conf()``.
     """
     if not hosts:
@@ -198,40 +108,6 @@ def bronze_from_sbs1_jvm(
     for k, v in options.items():
         reader = reader.option(k, str(v))
     return reader.load()
-
-
-def bronze_from_socket_fanin(
-    spark: SparkSession, hosts: list[tuple[str, int]]
-) -> DataFrame:
-    """Union of builtin JVM ``socket`` sources with per-row receive
-    timestamps -- kept as the reproduction harness for a MEASURED
-    NEGATIVE (BASELINE.md round 12): the builtin source's framing is
-    fast (JVM reader thread), but each buffered row ships to executor
-    tasks inside the task closure via per-row Java serialization;
-    addBatch measured ~56k rows/s on 2M-row batches, so end-to-end
-    throughput (46k rows/s at 8M x 8 receivers) lands 5x BELOW the
-    Python sbs1 source's GIL-bound ~300k. Use
-    :func:`bronze_from_sbs1_jvm` for throughput; this form remains
-    useful only for dependency-free dev sessions at wire-rate feeds."""
-    if not hosts:
-        raise ValueError(
-            "bronze_from_socket_fanin needs at least one (host, port)"
-        )
-    streams = [
-        (
-            spark.readStream.format("socket")
-            .option("host", host)
-            .option("port", str(port))
-            .option("includeTimestamp", "true")
-            .load()
-            .toDF("value", "ingest_ts")
-        )
-        for host, port in hosts
-    ]
-    out = streams[0]
-    for s in streams[1:]:
-        out = out.unionByName(s)
-    return out
 
 
 # --------------------------------------------------------------------------

@@ -1,33 +1,30 @@
 /*
- * JVM-native SBS-1 multi-receiver streaming source (VERDICT r11 ask #1:
- * "move framing below Python").
+ * JVM-native SBS-1 multi-receiver streaming source.
  *
- * This is the same design as the Python partitioned reader in
- * dump1090_stream_parser_spark/sources/sbs1_source.py -- one drain
- * thread per receiver (connect with retry/backoff, recv into a
- * partial-line carry, frame on '\n', stamp receive time, blob-
- * granularity replay buffer with BACKPRESSURE instead of eviction,
- * per-receiver line-count offsets, data-bearing partitions split to
- * rows_per_partition lines/task) -- but implemented against Spark's
- * Java DataSource V2 API so that
+ * One drain thread per receiver (connect with retry/backoff, recv into
+ * a partial-line carry, frame on '\n', stamp receive time, blob-
+ * granularity replay buffer with BACKPRESSURE instead of eviction),
+ * per-receiver line-count offsets, and data-bearing partitions split
+ * to rows_per_partition lines/task, implemented against Spark's Java
+ * DataSource V2 API so that
  *
  *   (a) framing runs on plain JVM threads: N receivers genuinely
- *       drain in parallel (the Python source's measured ~300k rows/s
- *       one-box ceiling is the driver-process GIL serializing every
- *       drain thread's framing + offset bookkeeping), and
+ *       drain in parallel (a Python source's drain threads share one
+ *       driver-process GIL, measured at a ~300k rows/s one-box
+ *       ceiling), and
  *   (b) partitions carry a handful of large byte[] blobs through Java
  *       serialization (fast, size-proportional) instead of per-row
  *       payloads -- the builtin TextSocket source ships each buffered
  *       row through the task closure, measured at ~56k rows/s of
- *       addBatch serialization on this box, which is WHY a custom
- *       source exists instead of a socket-source union.
+ *       addBatch serialization, which is WHY a custom source exists
+ *       instead of a socket-source union.
  *
- * Semantics mirror the Python source exactly: per-row receive
- * timestamps, exactly-once into the batch (planned ranges re-read
- * from the replay buffer on task retry), commit() prunes below the
- * checkpointed offset, restart-ahead-of-history fast-forwards
- * (ephemeral TCP cannot replay a gap -- identical to the reference's
- * reconnect semantics and the Python source's documented contract).
+ * Semantics: per-row receive timestamps, exactly-once into the batch
+ * (planned ranges re-read from the replay buffer on task retry),
+ * commit() prunes below the checkpointed offset, and a restart rebases
+ * the fresh connection onto the checkpoint frontier (ephemeral TCP
+ * cannot replay a gap -- identical to the reference's reconnect
+ * semantics).
  */
 package sbs1;
 
@@ -194,7 +191,7 @@ public class Sbs1JvmSource implements TableProvider, DataSourceRegister {
   }
 
   // ------------------------------------------------------------------
-  // Receiver drain thread: the Python _ReceiverThread, in Java
+  // Receiver drain thread
   // ------------------------------------------------------------------
 
   static class Receiver extends Thread {
@@ -285,8 +282,8 @@ public class Sbs1JvmSource implements TableProvider, DataSourceRegister {
         }
         if (full) {
           // BACKPRESSURE, not eviction: pause reads and let TCP
-          // flow-control the sender (the Python source's measured
-          // rule -- eviction dropped 10% of an 8M-row run).
+          // flow-control the sender (eviction was measured to drop
+          // 10% of an 8M-row run).
           sleepQuietly(50);
           continue;
         }

@@ -78,10 +78,12 @@ import re as _re
 #: subprocess bench runs, socket-server kill/recovery streaming, the
 #: recall-vs-brute-force quality sweeps, snapshot-store concurrency
 #: e2e. Sum measured 636 s of the round-14 full run's 1499 s.
+#: test_sbs1_jvm.py is NOT listed: its restart/kill tests are slow by
+#: name (_SLOW_NAME), and the rest keep a socket-source ingest check
+#: in the default run.
 _SLOW_FILES = {
     "test_bench_contract.py",   # subprocess bench e2e (~115 s)
     "test_streaming.py",        # socket kill/restart resilience (~130 s)
-    "test_sbs1_jvm.py",         # JVM-source kill/restart e2e (~61 s)
     "test_streaming_gold.py",   # stream-stream join e2e (~70 s)
     "test_approx.py",           # recall vs brute force sweeps (~124 s)
     "test_snapshots.py",        # snapshot-store e2e + concurrency (~56 s)

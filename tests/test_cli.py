@@ -1,5 +1,5 @@
 """CLI option surface (A13): the reference-mirroring flags plus the
-round-12 multi-receiver / engine selectors parse and default sanely."""
+multi-receiver ``--hosts`` selector parse and default sanely."""
 
 from __future__ import annotations
 
@@ -12,20 +12,23 @@ def test_defaults_mirror_reference():
     assert a.buffer_size == 65536
     assert a.connect_attempt_limit == 10
     assert a.connect_attempt_delay == 5.0
-    assert a.engine == "python" and a.hosts is None
+    assert a.hosts is None
 
 
-def test_multi_receiver_and_engine_flags():
-    a = build_parser().parse_args(
-        ["--hosts", "r1:31003,r2", "--engine", "jvm", "-d", "/tmp/out"]
-    )
+def test_hosts_flag():
+    a = build_parser().parse_args(["--hosts", "r1:31003,r2", "-d", "/tmp/out"])
     assert a.hosts == "r1:31003,r2"
-    assert a.engine == "jvm"
     assert a.database == "/tmp/out"
 
 
-def test_engine_rejects_unknown():
-    import pytest
-
-    with pytest.raises(SystemExit):
-        build_parser().parse_args(["--engine", "scala"])
+def test_option_surface():
+    """The input picks the source (``--hosts`` -> JVM source, -l/-p ->
+    simple reader), so there is no source-selector flag."""
+    dests = {
+        a.dest for a in build_parser()._actions if a.dest != "help"
+    }
+    assert dests == {
+        "location", "port", "database", "sqlite", "buffer_size",
+        "batch_seconds", "connect_attempt_limit", "connect_attempt_delay",
+        "hosts", "master",
+    }

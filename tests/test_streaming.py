@@ -386,574 +386,3 @@ def test_sbs1_reader_replay_protocol():
     finally:
         server.shutdown()
         server.server_close()
-
-
-def test_sbs1_partitioned_source_end_to_end(spark, tmp_path):
-    """The multi-receiver partitioned reader (hosts=...): every
-    receiver's lines arrive exactly once, partial-line carry reassembles
-    per receiver, and per-row ingest_ts is stamped. Each server tags its
-    callsign so delivery can be attributed per receiver."""
-    import socketserver
-
-    from dump1090_stream_parser_spark.streaming.pipeline import (
-        bronze_from_sbs1_multi,
-    )
-
-    n_receivers = 3
-    per_recv = {}
-    servers = []
-    hosts = []
-    try:
-        for i in range(n_receivers):
-            lines = [
-                f"MSG,1,1,1,4CA2D{i},1,2026/08/13,10:00:01.000,"
-                f"2026/08/13,10:00:01.050,RX{i}N{j},,,,,,,,,,,"
-                for j in range(40)
-            ]
-            per_recv[i] = lines
-            payload = ("\n".join(lines) + "\n").encode()
-            cut = len(payload) // 2  # mid-stream split: carry per receiver
-
-            class Handler(socketserver.BaseRequestHandler):
-                _payload = payload
-                _cut = cut
-
-                def handle(self):
-                    self.request.sendall(self._payload[: self._cut])
-                    time.sleep(0.2)
-                    self.request.sendall(self._payload[self._cut:])
-                    time.sleep(30)
-
-            server = socketserver.ThreadingTCPServer(("127.0.0.1", 0), Handler)
-            server.daemon_threads = True
-            servers.append(server)
-            hosts.append(("127.0.0.1", server.server_address[1]))
-            threading.Thread(target=server.serve_forever, daemon=True).start()
-
-        bronze = bronze_from_sbs1_multi(
-            spark, hosts, connect_attempt_limit=5, connect_attempt_delay=0.2
-        )
-        q = (
-            bronze.writeStream.format("memory")
-            .queryName("sbs1_part_test")
-            .option("checkpointLocation", str(tmp_path / "pckpt"))
-            .trigger(processingTime="1 second")
-            .start()
-        )
-        try:
-            want = n_receivers * 40
-            deadline = time.time() + 90
-            while time.time() < deadline:
-                n = spark.sql(
-                    "SELECT count(*) FROM sbs1_part_test"
-                ).collect()[0][0]
-                if n >= want:
-                    break
-                time.sleep(1)
-            rows = spark.sql("SELECT * FROM sbs1_part_test").collect()
-            got = sorted(r["value"] for r in rows)
-            expect = sorted(l for ls in per_recv.values() for ls in [ls] for l in ls)
-            assert got == expect  # exactly once per line, all receivers
-            assert all(r["ingest_ts"] is not None for r in rows)
-        finally:
-            q.stop()
-    finally:
-        for s in servers:
-            s.shutdown()
-            s.server_close()
-
-
-def test_sbs1_partitioned_reader_replay_and_commit():
-    """Unit-level offset protocol: partitions(start, end) re-reads the
-    same rows for the same range (task-retry exactly-once), commit
-    prunes the replay buffer, and a checkpoint-ahead restart
-    fast-forwards instead of wedging."""
-    import socketserver
-
-    from dump1090_stream_parser_spark.sources.sbs1_source import (
-        Sbs1PartitionedStreamReader,
-    )
-
-    lines = [f"MSG,8,1,1,ABC00{i},1,,,,,,,,,,,,,,,,0" for i in range(25)]
-    payload = ("\n".join(lines) + "\n").encode()
-
-    class Handler(socketserver.BaseRequestHandler):
-        def handle(self):
-            self.request.sendall(payload)
-            time.sleep(30)
-
-    server = socketserver.ThreadingTCPServer(("127.0.0.1", 0), Handler)
-    server.daemon_threads = True
-    port = server.server_address[1]
-    threading.Thread(target=server.serve_forever, daemon=True).start()
-    reader = None
-    try:
-        reader = Sbs1PartitionedStreamReader(
-            {
-                "hosts": f"127.0.0.1:{port}",
-                "connect_attempt_limit": "5",
-                "connect_attempt_delay": "0.2",
-            }
-        )
-        assert reader.initialOffset() == {"r0": 0}
-        deadline = time.time() + 10
-        while time.time() < deadline:
-            end = reader.latestOffset()
-            if end["r0"] >= len(lines):
-                break
-            time.sleep(0.1)
-        assert end["r0"] == len(lines)
-        start = {"r0": 0}
-
-        def materialize(parts):
-            out = []
-            for p in parts:
-                for batch in reader.read(p):
-                    out.extend(
-                        (r["value"], r["ingest_ts"])
-                        for r in batch.to_pylist()
-                    )
-            return out
-
-        parts1 = reader.partitions(start, end)
-        parts2 = reader.partitions(start, end)  # task retry: same rows
-        rows1 = materialize(parts1)
-        rows2 = materialize(parts2)
-        assert [v for v, _ in rows1] == lines
-        assert rows1 == rows2
-        assert all(ts is not None for _, ts in rows1)
-        # commit prunes: a re-plan of the committed range is now empty
-        reader.commit(end)
-        assert not materialize(reader.partitions(start, end))
-        # checkpoint-ahead restart: fast-forward, no wedge, no rows
-        ahead = {"r0": end["r0"] + 1000}
-        assert reader.partitions(ahead, ahead) == []
-        later = reader.latestOffset()
-        assert later["r0"] >= end["r0"]
-    finally:
-        if reader is not None:
-            reader.stop()
-        server.shutdown()
-        server.server_close()
-
-
-def test_sbs1_partitioned_reader_connect_failure_raises():
-    """A9 parity for the partitioned form: a receiver that exhausts its
-    connect attempts surfaces the ConnectionError on latestOffset."""
-    from dump1090_stream_parser_spark.sources.sbs1_source import (
-        Sbs1PartitionedStreamReader,
-    )
-
-    s = socket.socket()
-    s.bind(("127.0.0.1", 0))
-    dead_port = s.getsockname()[1]
-    s.close()
-
-    reader = Sbs1PartitionedStreamReader(
-        {
-            "hosts": f"127.0.0.1:{dead_port}",
-            "connect_attempt_limit": "2",
-            "connect_attempt_delay": "0.05",
-        }
-    )
-    try:
-        deadline = time.time() + 10
-        raised = False
-        while time.time() < deadline:
-            try:
-                reader.latestOffset()
-            except ConnectionError:
-                raised = True
-                break
-            time.sleep(0.05)
-        assert raised
-    finally:
-        reader.stop()
-
-
-def test_sbs1_partitioned_source_silver_parity(spark, tmp_path):
-    """The simple-reader end-to-end contract re-run on the PARTITIONED
-    reader: the same GOLDEN + INVALID fixture lines (served across two
-    receivers, each split mid-stream to exercise per-receiver carry)
-    through silver_stream -- good rows parse, invalid rows dead-letter,
-    parsed_time is stamped per row."""
-    import socketserver
-
-    from dump1090_stream_parser_spark.streaming.pipeline import (
-        bronze_from_sbs1_multi,
-        silver_stream,
-    )
-
-    shards = [GOLDEN, INVALID]
-    servers, hosts = [], []
-    try:
-        for lines in shards:
-            payload = ("\n".join(lines) + "\n").encode()
-            cut = len(payload) // 2
-
-            class Handler(socketserver.BaseRequestHandler):
-                _payload = payload
-                _cut = cut
-
-                def handle(self):
-                    self.request.sendall(self._payload[: self._cut])
-                    time.sleep(0.2)
-                    self.request.sendall(self._payload[self._cut:])
-                    time.sleep(30)
-
-            server = socketserver.ThreadingTCPServer(
-                ("127.0.0.1", 0), Handler
-            )
-            server.daemon_threads = True
-            servers.append(server)
-            hosts.append(("127.0.0.1", server.server_address[1]))
-            threading.Thread(target=server.serve_forever, daemon=True).start()
-
-        bronze = bronze_from_sbs1_multi(
-            spark, hosts, connect_attempt_limit=5, connect_attempt_delay=0.2
-        )
-        parsed = silver_stream(bronze)
-        q = (
-            parsed.writeStream.format("memory")
-            .queryName("sbs1_part_silver")
-            .option("checkpointLocation", str(tmp_path / "psckpt"))
-            .trigger(processingTime="1 second")
-            .start()
-        )
-        try:
-            want = len(GOLDEN) + len(INVALID)
-            deadline = time.time() + 90
-            while time.time() < deadline:
-                n = spark.sql(
-                    "SELECT count(*) FROM sbs1_part_silver"
-                ).collect()[0][0]
-                if n >= want:
-                    break
-                time.sleep(1)
-            rows = spark.sql("SELECT * FROM sbs1_part_silver").collect()
-            good = [r for r in rows if r["_corrupt_record"] is None]
-            bad = [r for r in rows if r["_corrupt_record"] is not None]
-            assert len(good) == len(GOLDEN)
-            assert len(bad) == len(INVALID)
-            assert all(r["parsed_time"] is not None for r in good)
-            msg3 = [r for r in good if r["transmission_type"] == 3]
-            assert any(abs(r["lat"] - 51.46720) < 1e-9 for r in msg3)
-        finally:
-            q.stop()
-    finally:
-        for s in servers:
-            s.shutdown()
-            s.server_close()
-
-
-def test_sbs1_partitioned_source_restart_no_duplicates(spark, tmp_path):
-    """Restart-from-checkpoint e2e on the partitioned reader: a fresh
-    run against the same checkpoint must never re-emit committed rows
-    (the fresh connection fast-forwards to the checkpointed offset) and
-    must keep delivering rows served after the restart. Loss of rows
-    served across the restart gap is inherent to ephemeral TCP and
-    documented; duplication would be a bug."""
-    import socketserver
-
-    from dump1090_stream_parser_spark.streaming.pipeline import (
-        bronze_from_sbs1_multi,
-    )
-
-    counter = {"n": 0}
-
-    class Handler(socketserver.BaseRequestHandler):
-        def handle(self):
-            try:
-                while True:
-                    i = counter["n"]
-                    counter["n"] += 1
-                    line = f"MSG,8,1,1,AB{i:04d},1,,,,,,,,,,,,,,,,0\n"
-                    self.request.sendall(line.encode())
-                    time.sleep(0.05)
-            except OSError:
-                pass
-
-    server = socketserver.ThreadingTCPServer(("127.0.0.1", 0), Handler)
-    server.daemon_threads = True
-    port = server.server_address[1]
-    threading.Thread(target=server.serve_forever, daemon=True).start()
-
-    out = tmp_path / "restart_out"
-    ckpt = str(tmp_path / "restart_ckpt")
-
-    def run_phase(seconds: float) -> None:
-        bronze = bronze_from_sbs1_multi(
-            spark,
-            [("127.0.0.1", port)],
-            connect_attempt_limit=5,
-            connect_attempt_delay=0.2,
-        )
-        q = (
-            bronze.writeStream.format("parquet")
-            .option("path", str(out))
-            .option("checkpointLocation", ckpt)
-            .trigger(processingTime="1 second")
-            .start()
-        )
-        try:
-            time.sleep(seconds)
-        finally:
-            q.stop()
-            q.awaitTermination(30)
-
-    try:
-        run_phase(14)
-        phase1 = [r["value"] for r in spark.read.parquet(str(out)).collect()]
-        assert phase1, "phase 1 delivered nothing"
-        served_before_restart = counter["n"]
-        run_phase(14)
-        rows = [r["value"] for r in spark.read.parquet(str(out)).collect()]
-        # exactly-once across the restart: no value appears twice
-        assert len(rows) == len(set(rows)), "duplicate rows after restart"
-        # and the restarted query delivered NEW data (ids the server
-        # only produced after phase 1 ended)
-        new_ids = {
-            int(v.split(",")[4][2:])
-            for v in rows
-            if int(v.split(",")[4][2:]) >= served_before_restart
-        }
-        assert new_ids, "restarted query delivered no post-restart rows"
-    finally:
-        server.shutdown()
-        server.server_close()
-
-
-def test_sbs1_partitioned_reader_restart_rebase_preserves_fresh_lines():
-    """Review finding (round 12): on restart, the fresh connection may
-    out-frame the checkpointed offset during recovery. The old guard
-    then delivered NEW lines mislabeled as the replayed WAL batch and
-    silently dropped the lines below the offset. The rebase contract:
-    the first externally-supplied offset renumbers the fresh stream to
-    start AT it -- the replayed range reads EMPTY (the documented
-    ephemeral-TCP loss), and every recovery-framed line is preserved
-    and delivered after it."""
-    import socketserver
-
-    from dump1090_stream_parser_spark.sources.sbs1_source import (
-        Sbs1PartitionedStreamReader,
-    )
-
-    lines = [f"MSG,8,1,1,RB00{i:02d},1,,,,,,,,,,,,,,,,0" for i in range(25)]
-    payload = ("\n".join(lines) + "\n").encode()
-
-    class Handler(socketserver.BaseRequestHandler):
-        def handle(self):
-            self.request.sendall(payload)
-            time.sleep(30)
-
-    server = socketserver.ThreadingTCPServer(("127.0.0.1", 0), Handler)
-    server.daemon_threads = True
-    port = server.server_address[1]
-    threading.Thread(target=server.serve_forever, daemon=True).start()
-    reader = None
-    try:
-        reader = Sbs1PartitionedStreamReader(
-            {
-                "hosts": f"127.0.0.1:{port}",
-                "connect_attempt_limit": "5",
-                "connect_attempt_delay": "0.2",
-            }
-        )
-        # let the drain thread frame everything BEFORE any offset call
-        # (the recovery window: connection live, checkpoint not yet
-        # consulted) -- poke the thread without latestOffset's sync
-        reader._ensure_started()
-        deadline = time.time() + 10
-        while time.time() < deadline:
-            if reader.receivers[0].snapshot_count() >= len(lines):
-                break
-            time.sleep(0.1)
-        assert reader.receivers[0].snapshot_count() == len(lines)
-
-        # first external offsets = the WAL's pending batch [10, 20):
-        # must replay EMPTY, not serve fresh lines mislabeled as it
-        def materialize(parts):
-            out = []
-            for p in parts:
-                for batch in reader.read(p):
-                    out.extend(r["value"] for r in batch.to_pylist())
-            return out
-
-        assert materialize(reader.partitions({"r0": 10}, {"r0": 20})) == []
-        # the fresh lines were PRESERVED: renumbered to start at 20
-        end = reader.latestOffset()
-        assert end["r0"] == 20 + len(lines)
-        got = materialize(reader.partitions({"r0": 20}, end))
-        assert got == lines
-    finally:
-        if reader is not None:
-            reader.stop()
-
-
-def test_sbs1_partitioned_source_survives_server_kill(spark, tmp_path):
-    """A9 end-to-end on the PARTITIONED reader: one of two receivers'
-    feeds dies mid-stream and comes back; its drain thread reconnects
-    and every line from both phases (and from the untouched receiver)
-    lands exactly once."""
-    part1, part2 = GOLDEN[: len(GOLDEN) // 2], GOLDEN[len(GOLDEN) // 2:]
-    steady = [f"MSG,8,1,1,CC{i:04d},1,,,,,,,,,,,,,,,,0" for i in range(10)]
-
-    from dump1090_stream_parser_spark.streaming.pipeline import (
-        bronze_from_sbs1_multi,
-    )
-
-    probe = socket.socket()
-    probe.bind(("127.0.0.1", 0))
-    kill_port = probe.getsockname()[1]
-    probe.close()
-
-    # long-hold server: _serve_once's 30 s hold would close the
-    # connection mid-test, and on reconnect it re-serves the same
-    # payload -- a harness artifact (a real feed never resends), so
-    # the steady receiver gets a handler that holds for the whole test
-    class _SteadyHandler(socketserver.BaseRequestHandler):
-        def handle(self):
-            self.request.sendall(("\n".join(steady) + "\n").encode())
-            time.sleep(600)
-
-    steady_server = _PhaseServer(("127.0.0.1", 0), _SteadyHandler)
-    threading.Thread(
-        target=steady_server.serve_forever, daemon=True
-    ).start()
-    steady_port = steady_server.server_address[1]
-    server = _serve_once(kill_port, part1)
-    q = None
-    try:
-        bronze = bronze_from_sbs1_multi(
-            spark,
-            [("127.0.0.1", kill_port), ("127.0.0.1", steady_port)],
-            connect_attempt_limit=100,
-            connect_attempt_delay=0.2,
-        )
-        q = (
-            bronze.writeStream.format("memory")
-            .queryName("sbs1_pkill_test")
-            .option("checkpointLocation", str(tmp_path / "pkckpt"))
-            .trigger(processingTime="1 second")
-            .start()
-        )
-
-        def count() -> int:
-            return spark.sql(
-                "SELECT count(*) FROM sbs1_pkill_test"
-            ).collect()[0][0]
-
-        want1 = len(part1) + len(steady)
-        deadline = time.time() + 60
-        while time.time() < deadline and count() < want1:
-            time.sleep(0.5)
-        assert count() == want1, "phase-1 lines not all delivered"
-
-        server.shutdown()
-        server.server_close()
-        time.sleep(1.0)
-        server = _serve_once(kill_port, part2)
-
-        want = want1 + len(part2)
-        deadline = time.time() + 60
-        while time.time() < deadline and count() < want:
-            time.sleep(0.5)
-
-        rows = [r["value"] for r in spark.sql(
-            "SELECT value FROM sbs1_pkill_test"
-        ).collect()]
-        assert sorted(rows) == sorted(part1 + part2 + steady)
-    finally:
-        if q is not None:
-            q.stop()
-        server.shutdown()
-        server.server_close()
-        steady_server.shutdown()
-        steady_server.server_close()
-
-
-def test_sbs1_fanin_rejects_empty_host_groups(spark):
-    """ADVICE r10: an empty host_groups list must be a clear
-    ValueError, not a bare IndexError from streams[0]."""
-    import pytest
-
-    from dump1090_stream_parser_spark.streaming.pipeline import (
-        bronze_from_sbs1_fanin,
-    )
-
-    with pytest.raises(ValueError, match="host group"):
-        bronze_from_sbs1_fanin(spark, [])
-
-
-def test_sbs1_fanin_union_of_source_instances(spark, tmp_path):
-    """The past-the-drain-ceiling fan-in form: TWO partitioned sbs1
-    source INSTANCES (each its own runner process / offset log)
-    unioned into one stream -- every group's lines arrive exactly
-    once, attributable per group by callsign."""
-    import socketserver
-
-    from dump1090_stream_parser_spark.streaming.pipeline import (
-        bronze_from_sbs1_fanin,
-    )
-
-    groups, servers, per_group = [], [], {}
-    try:
-        for g in range(2):
-            lines = [
-                f"MSG,1,1,1,4CB{g}D0,1,2026/08/13,11:00:01.000,"
-                f"2026/08/13,11:00:01.050,FG{g}N{j},,,,,,,,,,,"
-                for j in range(25)
-            ]
-            per_group[g] = lines
-            payload = ("\n".join(lines) + "\n").encode()
-
-            class Handler(socketserver.BaseRequestHandler):
-                _payload = payload
-
-                def handle(self):
-                    self.request.sendall(self._payload)
-                    time.sleep(30)
-
-            server = socketserver.ThreadingTCPServer(
-                ("127.0.0.1", 0), Handler
-            )
-            server.daemon_threads = True
-            servers.append(server)
-            groups.append([("127.0.0.1", server.server_address[1])])
-            threading.Thread(
-                target=server.serve_forever, daemon=True
-            ).start()
-
-        bronze = bronze_from_sbs1_fanin(
-            spark,
-            groups,
-            connect_attempt_limit=5,
-            connect_attempt_delay=0.2,
-        )
-        q = (
-            bronze.writeStream.format("memory")
-            .queryName("sbs1_fanin_test")
-            .option("checkpointLocation", str(tmp_path / "fckpt"))
-            .trigger(processingTime="1 second")
-            .start()
-        )
-        try:
-            want = sum(len(v) for v in per_group.values())
-            deadline = time.time() + 90
-            while time.time() < deadline:
-                n = spark.sql(
-                    "SELECT count(*) FROM sbs1_fanin_test"
-                ).collect()[0][0]
-                if n >= want:
-                    break
-                time.sleep(1)
-            rows = spark.sql("SELECT * FROM sbs1_fanin_test").collect()
-            got = sorted(r["value"] for r in rows)
-            expect = sorted(l for ls in per_group.values() for l in ls)
-            assert got == expect  # exactly once across both instances
-        finally:
-            q.stop()
-    finally:
-        for server in servers:
-            server.shutdown()
-            server.server_close()

@@ -10,6 +10,11 @@ Generation is INCLUDED in the measurement (same discipline as the
 original round-2 number): the point is an end-to-end lower bound on
 what one box pushes through the full typed Silver projection, not a
 parser microbenchmark.
+
+Two source-inclusive modes serve the same lines over localhost TCP:
+
+    python tools/ingest_bench.py source [n_rows]             # sbs1, one feed
+    python tools/ingest_bench.py jvm [n_rows] [n_receivers]  # sbs1-jvm
 """
 
 from __future__ import annotations
@@ -202,260 +207,6 @@ def source_main() -> None:
     spark.stop()
 
 
-def multi_main() -> None:
-    """Multi-receiver source-inclusive throughput (VERDICT r9 ask #1):
-    the same deterministic MSG,3 lines sharded over N localhost TCP
-    servers, read by the PARTITIONED ``sbs1`` reader (one concurrent
-    drain thread + one executor partition per receiver) into
-    ``parse_lines`` -> ``silver`` under Structured Streaming. The
-    figure to beat is the single-receiver ``source`` mode's ~78k
-    rows/s -- the drain loop there is single-threaded and serialized
-    with batch processing; here N receivers drain concurrently while
-    executors decode and parse in parallel.
-
-        python tools/ingest_bench.py multi [n_rows] [n_receivers]
-    """
-    import socket
-    import threading
-
-    n = int(sys.argv[2]) if len(sys.argv) > 2 else 2_000_000
-    n_recv = int(sys.argv[3]) if len(sys.argv) > 3 else 4
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_spark(
-        master=f"local[{cpus}]",
-        app_name="ingest_bench_multi",
-        shuffle_partitions=int(cpus),
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-
-    events = synth_events(spark, n, int(cpus))
-    lines = sbs1_lines_from_events(events).toPandas()["value"]
-    shard = (len(lines) + n_recv - 1) // n_recv
-    payloads = [
-        ("\n".join(lines[i * shard:(i + 1) * shard]).encode() + b"\n")
-        for i in range(n_recv)
-    ]
-
-    servers, hosts = [], []
-    for payload in payloads:
-        srv = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
-        srv.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
-        srv.bind(("127.0.0.1", 0))
-        srv.listen(1)
-        servers.append(srv)
-        hosts.append(("127.0.0.1", srv.getsockname()[1]))
-
-        def serve(sock=srv, data=payload) -> None:
-            conn, _ = sock.accept()
-            try:
-                conn.sendall(data)
-                conn.recv(1)  # hold open until the bench closes
-            except OSError:
-                pass
-            finally:
-                conn.close()
-
-        threading.Thread(target=serve, daemon=True).start()
-
-    from dump1090_stream_parser_spark.streaming.pipeline import (
-        bronze_from_sbs1_multi,
-    )
-
-    bronze = bronze_from_sbs1_multi(
-        # batch << buffer so the drain threads keep filling while a
-        # batch processes (buffer-sized batches serialize drain against
-        # processing -- measured 106k rows/s vs ~180k decoupled)
-        spark, hosts, max_lines_per_batch=250_000, replay_capacity=2_000_000
-    )
-    sq = silver(parse_lines(bronze, parsed_time=F.col("ingest_ts")))
-
-    got = {"rows": 0}
-    lock = threading.Lock()
-
-    def count_batch(df, _epoch) -> None:
-        c = df.count()
-        with lock:
-            got["rows"] += c
-
-    import tempfile
-
-    t0 = time.perf_counter()
-    query = (
-        sq.writeStream.foreachBatch(count_batch)
-        .option(
-            "checkpointLocation",
-            tempfile.mkdtemp(prefix="ingest_bench_multi_"),
-        )
-        .trigger(processingTime="0 seconds")
-        .start()
-    )
-    deadline = time.time() + 600
-    while time.time() < deadline:
-        with lock:
-            if got["rows"] >= n:
-                break
-        time.sleep(0.2)
-    sec = time.perf_counter() - t0
-    query.stop()
-    for srv in servers:
-        srv.close()
-    assert got["rows"] >= n, f"stream delivered {got['rows']}/{n} rows"
-    print(
-        json.dumps(
-            {
-                "metric": "silver_ingest_multi_source_rows_per_sec",
-                "value": round(n / sec),
-                "unit": "rows/sec",
-                "n_rows": n,
-                "n_receivers": n_recv,
-                "seconds": round(sec, 3),
-                "cpus": int(cpus),
-                "note": (
-                    "end-to-end incl. TCP socket drain + streaming "
-                    "micro-batches; partitioned reader, one concurrent "
-                    "drain thread + one executor partition per receiver"
-                ),
-            }
-        )
-    )
-    spark.stop()
-
-
-def fanin_main() -> None:
-    """Fan-in throughput measurement (VERDICT r10 ask #4): the same
-    deterministic MSG,3 lines sharded over n_groups x recv_per_group
-    localhost TCP servers, read by ``bronze_from_sbs1_fanin`` -- one
-    partitioned ``sbs1`` source INSTANCE per group, unioned. MEASURED
-    RESULT (BASELINE.md round-11 row): the union does NOT scale --
-    simple-reader prefetch runs in the DRIVER process, so every
-    group's drain threads share the one driver GIL and only TOTAL
-    thread count matters (2x4 = 155k rows/s ~= the 1x8 point; a
-    process census shows exactly one Python process). The mode stays
-    as the reproduction harness for that negative.
-
-        python tools/ingest_bench.py fanin [n_rows] [n_groups] [recv_per_group]
-
-    Compare against ``multi`` at the same total receiver count to
-    isolate the runner-process effect (e.g. fanin 8000000 2 4 vs
-    multi 8000000 4 -- BASELINE.md round-11 row).
-    """
-    import socket
-    import tempfile
-    import threading
-
-    n = int(sys.argv[2]) if len(sys.argv) > 2 else 2_000_000
-    n_groups = int(sys.argv[3]) if len(sys.argv) > 3 else 2
-    per_group = int(sys.argv[4]) if len(sys.argv) > 4 else 4
-    n_recv = n_groups * per_group
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_spark(
-        master=f"local[{cpus}]",
-        app_name="ingest_bench_fanin",
-        shuffle_partitions=int(cpus),
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-
-    events = synth_events(spark, n, int(cpus))
-    lines = sbs1_lines_from_events(events).toPandas()["value"]
-    shard = (len(lines) + n_recv - 1) // n_recv
-    payloads = [
-        ("\n".join(lines[i * shard:(i + 1) * shard]).encode() + b"\n")
-        for i in range(n_recv)
-    ]
-
-    servers, hosts = [], []
-    for payload in payloads:
-        srv = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
-        srv.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
-        srv.bind(("127.0.0.1", 0))
-        srv.listen(1)
-        servers.append(srv)
-        hosts.append(("127.0.0.1", srv.getsockname()[1]))
-
-        def serve(sock=srv, data=payload) -> None:
-            conn, _ = sock.accept()
-            try:
-                conn.sendall(data)
-                conn.recv(1)  # hold open until the bench closes
-            except OSError:
-                pass
-            finally:
-                conn.close()
-
-        threading.Thread(target=serve, daemon=True).start()
-
-    host_groups = [
-        hosts[g * per_group:(g + 1) * per_group] for g in range(n_groups)
-    ]
-
-    from dump1090_stream_parser_spark.streaming.pipeline import (
-        bronze_from_sbs1_fanin,
-    )
-
-    bronze = bronze_from_sbs1_fanin(
-        # per-group batch cap: same decoupled drain-vs-processing
-        # sizing as the multi bench, split across group sources
-        spark,
-        host_groups,
-        max_lines_per_batch=max(250_000 // n_groups, 50_000),
-        replay_capacity=2_000_000,
-    )
-    sq = silver(parse_lines(bronze, parsed_time=F.col("ingest_ts")))
-
-    got = {"rows": 0}
-    lock = threading.Lock()
-
-    def count_batch(df, _epoch) -> None:
-        c = df.count()
-        with lock:
-            got["rows"] += c
-
-    t0 = time.perf_counter()
-    query = (
-        sq.writeStream.foreachBatch(count_batch)
-        .option(
-            "checkpointLocation",
-            tempfile.mkdtemp(prefix="ingest_bench_fanin_"),
-        )
-        .trigger(processingTime="0 seconds")
-        .start()
-    )
-    deadline = time.time() + 600
-    while time.time() < deadline:
-        with lock:
-            if got["rows"] >= n:
-                break
-        time.sleep(0.2)
-    sec = time.perf_counter() - t0
-    query.stop()
-    for srv in servers:
-        srv.close()
-    assert got["rows"] >= n, f"stream delivered {got['rows']}/{n} rows"
-    print(
-        json.dumps(
-            {
-                "metric": "silver_ingest_fanin_rows_per_sec",
-                "value": round(n / sec),
-                "unit": "rows/sec",
-                "n_rows": n,
-                "n_groups": n_groups,
-                "recv_per_group": per_group,
-                "seconds": round(sec, 3),
-                "cpus": int(cpus),
-                "note": (
-                    "end-to-end incl. TCP socket drain + streaming "
-                    "micro-batches; one partitioned sbs1 source "
-                    "instance per group, unioned (all groups share "
-                    "the one driver process -- see BASELINE.md r11)"
-                ),
-            }
-        )
-    )
-    spark.stop()
-
-
 def jvm_main() -> None:
     """JVM-framed ingest throughput (VERDICT r11 ask #1): the same
     deterministic MSG,3 lines sharded over N localhost TCP servers,
@@ -463,8 +214,7 @@ def jvm_main() -> None:
     source (drain + framing on JVM threads, blob-granularity
     partitions, zero-copy executor line split; no Python anywhere in
     the pipeline) -- into ``parse_lines`` -> ``silver`` under
-    Structured Streaming. The figure to beat is the Python source's
-    ~300k rows/s one-box ceiling (BASELINE.md round-11 rows).
+    Structured Streaming.
 
         python tools/ingest_bench.py jvm [n_rows] [n_receivers]
     """
@@ -578,75 +328,10 @@ def jvm_main() -> None:
     spark.stop()
 
 
-def procs_main() -> None:
-    """The lever the round-11 fan-in measurement names: drain capacity
-    scales with DRIVER PROCESSES, not with receivers or unioned source
-    instances (both share one driver's Python GIL). This mode runs
-    n_procs INDEPENDENT `multi` benches concurrently -- each its own
-    Python driver + JVM, the one-ingest-job-per-receiver-group
-    deployment shape -- and reports aggregate rows/s over the shared
-    wall clock.
-
-        python tools/ingest_bench.py procs [n_rows_total] [n_procs] [recv_each]
-    """
-    import subprocess
-
-    n = int(sys.argv[2]) if len(sys.argv) > 2 else 8_000_000
-    n_procs = int(sys.argv[3]) if len(sys.argv) > 3 else 2
-    recv = int(sys.argv[4]) if len(sys.argv) > 4 else 4
-    per = n // n_procs
-    here = os.path.abspath(__file__)
-
-    t0 = time.perf_counter()
-    children = [
-        subprocess.Popen(
-            [sys.executable, here, "multi", str(per), str(recv)],
-            stdout=subprocess.PIPE,
-            stderr=subprocess.DEVNULL,
-            text=True,
-        )
-        for _ in range(n_procs)
-    ]
-    outs = [c.communicate(timeout=900)[0] for c in children]
-    wall = time.perf_counter() - t0
-    assert all(c.returncode == 0 for c in children), [
-        c.returncode for c in children
-    ]
-    per_proc = []
-    for o in outs:
-        line = [ln for ln in o.splitlines() if ln.startswith('{"metric"')][-1]
-        per_proc.append(json.loads(line))
-    print(
-        json.dumps(
-            {
-                "metric": "silver_ingest_multiproc_rows_per_sec",
-                "value": round(n / wall),
-                "unit": "rows/sec",
-                "n_rows": n,
-                "n_procs": n_procs,
-                "recv_each": recv,
-                "wall_seconds": round(wall, 3),
-                "per_proc_rows_per_sec": [p["value"] for p in per_proc],
-                "note": (
-                    "n_procs independent driver processes (own Python"
-                    " runner + JVM each), aggregate over shared wall"
-                    " clock incl. per-process Spark startup"
-                ),
-            }
-        )
-    )
-
-
 if __name__ == "__main__":
     if len(sys.argv) > 1 and sys.argv[1] == "source":
         source_main()
-    elif len(sys.argv) > 1 and sys.argv[1] == "multi":
-        multi_main()
-    elif len(sys.argv) > 1 and sys.argv[1] == "fanin":
-        fanin_main()
     elif len(sys.argv) > 1 and sys.argv[1] == "jvm":
         jvm_main()
-    elif len(sys.argv) > 1 and sys.argv[1] == "procs":
-        procs_main()
     else:
         main()
