@@ -74,6 +74,9 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", memory)
         .config("spark.driver.maxResultSize", "4g")
+        # static: Spark's default of 100 generated classes thrashes on
+        # query sets above about 100 classes, recompiling every pass
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
     )
     for key, value in RUNTIME_CONF.items():
         builder = builder.config(key, value)

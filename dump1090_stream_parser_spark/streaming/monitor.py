@@ -54,22 +54,30 @@ def supervise(start_query, attempt_limit: int = 10, delay: float = 5.0):
     ``start_query()`` must return a started StreamingQuery. Mirrors the
     reference's connect_attempt_limit/_delay semantics at the query
     level; returns when the query stops cleanly or attempts exhaust.
+    A query that read input rows before it failed resets the budget, as
+    the sources' connect loops reset theirs on a connect: only failures
+    in a row without input use it up. A progress event alone is not
+    input: Spark reports triggers that read nothing, such as those of a
+    restarted query whose receivers are still retrying a dead feed.
     Each failure is logged with its exception, and the final
     ``RuntimeError`` chains the last one as its ``__cause__``.
     """
     last: Exception | None = None
-    for attempt in range(1, attempt_limit + 1):
+    attempt = 0
+    while attempt < attempt_limit:
         query = start_query()
         try:
             query.awaitTermination()
             return  # clean stop
         except Exception as exc:
             last = exc
+            read = any(p["numInputRows"] > 0 for p in query.recentProgress)
+            attempt = 1 if read else attempt + 1
             log.warning(
                 "stream failed (attempt %d of %d)",
                 attempt, attempt_limit, exc_info=exc,
             )
             time.sleep(delay)
     raise RuntimeError(
-        f"stream failed {attempt_limit} times; giving up"
+        f"stream failed {attempt_limit} times in a row; giving up"
     ) from last

@@ -22,7 +22,8 @@ files are partitioned by parse date so downstream scans prune.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.sbs1 import dead_letter, parse_lines, silver
@@ -34,9 +35,23 @@ from ..sources.sbs1 import dead_letter, parse_lines, silver
 # --------------------------------------------------------------------------
 
 
+#: Input bytes a file-replay micro-batch reads before it stops taking
+#: files (it always takes at least one): about the JVM source's default
+#: cap of 1,000,000 lines per batch.
+FILE_REPLAY_BYTES_PER_TRIGGER = 128 << 20
+
+
 def bronze_from_file_replay(spark: SparkSession, path: str) -> DataFrame:
-    """Line-framed file replay -- the test/CI source (SURVEY.md §7.1 M3)."""
-    return spark.readStream.text(path)
+    """Line-framed file replay -- the test/CI source (SURVEY.md §7.1 M3).
+
+    A backfill of a whole directory is cut into micro-batches of about
+    :data:`FILE_REPLAY_BYTES_PER_TRIGGER` input bytes, which bounds the
+    malformed lines one batch sends through :func:`silver_batch_writer`'s
+    driver.
+    """
+    return spark.readStream.option(
+        "maxBytesPerTrigger", FILE_REPLAY_BYTES_PER_TRIGGER
+    ).text(path)
 
 
 def bronze_from_sbs1(
@@ -125,7 +140,24 @@ def silver_stream(bronze: DataFrame) -> DataFrame:
 
 def silver_batch_writer(out_dir: str):
     """The foreachBatch function for :func:`write_silver`, exposed so
-    tests can drive a batch replay directly."""
+    tests can drive a batch replay directly.
+
+    One Spark job per micro-batch: the Silver write. ``foreachBatch``
+    hands the sink a ``LogicalRDD`` over the parsed batch, so every
+    action on it re-runs the source scan and the full parse (column
+    pruning cannot reach through it). The malformed lines therefore
+    ride along on the Silver write as an ``Observation``
+    (``collect_list`` skips the NULL ``_corrupt_record`` of every valid
+    row), and the driver writes them through Arrow and
+    :func:`dead_letter`, with no second scan. The
+    write plans no Exchange, so each task's observed list is merged
+    exactly once, retries included. The dead letters of one batch pass
+    through the driver, so the source must bound a batch:
+    ``max_lines_per_batch`` does for ``sbs1`` and ``sbs1-jvm``, and
+    :data:`FILE_REPLAY_BYTES_PER_TRIGGER` does for
+    :func:`bronze_from_file_replay`. A stream without such a cap sends
+    every malformed line of a batch through the driver.
+    """
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
         # Idempotence: each micro-batch owns a batch_id=N directory and
@@ -133,15 +165,23 @@ def silver_batch_writer(out_dir: str):
         # write and offset commit) replaces its own output instead of
         # double-appending. batch_id surfaces as a partition column on
         # read; parsed_date partitioning under it keeps date pruning.
-        good = silver(batch).withColumn(
+        corrupt = Observation()
+        observed = batch.observe(
+            corrupt,
+            F.collect_list("_corrupt_record").alias("_corrupt_record"),
+        )
+        good = silver(observed).withColumn(
             "parsed_date", F.to_date("parsed_time")
         )
         good.write.mode("overwrite").partitionBy("parsed_date").parquet(
             f"{out_dir}/squitters/batch_id={batch_id}"
         )
-        bad = dead_letter(batch)
-        if not bad.isEmpty():
-            bad.write.mode("overwrite").parquet(
+        raw = corrupt.get["_corrupt_record"]
+        if raw:
+            bad = batch.sparkSession.createDataFrame(
+                pa.table({"_corrupt_record": raw})
+            )
+            dead_letter(bad).coalesce(1).write.mode("overwrite").parquet(
                 f"{out_dir}/dead_letter/batch_id={batch_id}"
             )
 

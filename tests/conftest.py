@@ -83,7 +83,8 @@ import re as _re
 #: in the default run.
 _SLOW_FILES = {
     "test_bench_contract.py",   # subprocess bench e2e (~115 s)
-    "test_streaming.py",        # socket kill/restart resilience (~130 s)
+    "test_streaming.py",        # socket kill/restart resilience (~130 s);
+                                # its fast cases are in test_ingest.py
     "test_streaming_gold.py",   # stream-stream join e2e (~70 s)
     "test_approx.py",           # recall vs brute force sweeps (~124 s)
     "test_snapshots.py",        # snapshot-store e2e + concurrency (~56 s)

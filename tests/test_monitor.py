@@ -1,5 +1,7 @@
 """supervise() keeps the cause of every failure: each one is logged
-with its exception, and the final RuntimeError chains the last."""
+with its exception, and the final RuntimeError chains the last. A
+query that read input rows before it failed resets the attempt budget;
+progress events that read nothing do not."""
 
 from __future__ import annotations
 
@@ -11,8 +13,10 @@ from dump1090_stream_parser_spark.streaming.monitor import supervise
 
 
 class _FailingQuery:
-    def __init__(self, exc: Exception | None):
+    def __init__(self, exc: Exception | None, rows: tuple[int, ...] = ()):
         self.exc = exc
+        # one progress event per trigger, with its input row count
+        self.recentProgress = [{"numInputRows": n} for n in rows]
 
     def awaitTermination(self):
         if self.exc is not None:
@@ -36,3 +40,24 @@ def test_supervise_returns_on_clean_stop_after_failure():
     queries = iter([_FailingQuery(ValueError("feed down")), _FailingQuery(None)])
     supervise(lambda: next(queries), attempt_limit=3, delay=0)
     assert next(queries, None) is None
+
+
+def test_supervise_resets_budget_after_input():
+    # four failures, the third after reading rows: it starts a new
+    # count, so no three failures in a row are without input
+    rows = [(), (0,), (0, 7), (0,)]
+    queries = iter(
+        [_FailingQuery(ValueError(f"feed down {i}"), r) for i, r in enumerate(rows)]
+        + [_FailingQuery(None)]
+    )
+    supervise(lambda: next(queries), attempt_limit=3, delay=0)
+    assert next(queries, None) is None
+
+
+def test_supervise_gives_up_despite_no_data_progress():
+    # each restart reports a trigger that read nothing before it fails,
+    # as against a dead feed: the third failure in a row gives up
+    queries = iter([_FailingQuery(ValueError(f"feed down {i}"), (0,)) for i in range(4)])
+    with pytest.raises(RuntimeError, match="failed 3 times"):
+        supervise(lambda: next(queries), attempt_limit=3, delay=0)
+    assert next(queries, None) is not None
