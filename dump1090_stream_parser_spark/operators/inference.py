@@ -1,13 +1,11 @@
 """Model-adjacent pipeline operators: batched classifier inference over
 documents and per-group PCA over embeddings.
 
-Registration note: window membership is decided by
-``EVAL_TAIL_RATIONALE`` in ``operators/__init__.py`` (rationale-listed
-queries are moved to the tail; everything else competes for the first
-50 driver-evaluated slots in registration order). q_model_score and
-q_hybrid_search were rotated INTO the window in round 4; q_label_pca
-is tail. A new query added here without a rationale entry WILL enter
-the evaluated window -- see the registry comment before adding one.
+Registration note: window membership is derived
+(``operators/registry.py`` ``window_order``). A query whose source block
+differs from the one the driver last certified (``operators/green.json``),
+or that was never certified, enters the first 50 driver-evaluated slots
+on its own; the rest fill the window oldest certification first.
 
 Both operators are the Spark-side PLUMBING for steps that in production
 wrap a real model:

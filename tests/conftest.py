@@ -102,43 +102,33 @@ _SLOW_NAME = _re.compile(
     r"|property|random_histories|zorder"
 )
 
-#: Parity canaries: the head of the CURRENT oracle window (minus the
-#: iterative/CPU-heavy operators that have dedicated tests and 15-25 s
-#: oracles) stays in the default run, so the riskiest recently-touched
-#: queries keep a per-commit cross-engine gate. The FULL 161-query
-#: sweep is slow-marked; it runs in the once-per-round full suite and
-#: in tools/parity.py sweeps.
+#: Parity canaries, all derived from the oracle-window ledger
+#: (operators/green.json): every query whose source block changed since
+#: its last green driver row (the drifted set), the head of the derived
+#: window, and the queries the newest driver round certified -- so a
+#: query keeps its per-commit cross-engine gate for one more round after
+#: the driver re-certifies it. The FULL 161-query sweep is slow-marked;
+#: it runs in the once-per-round full suite and in tools/parity.py sweeps.
 _PARITY_CANARY_N = 16
-_PARITY_CANARY_SKIP = {
-    "q_dedup_clusters",
-    "q_dedup_clusters_lsh",
-    "q_containment",
-}
 
-#: Queries whose plan was restructured in the CURRENT round -- update
-#: alongside the EVAL_TAIL_RATIONALE rotation stamp each round so the
-#: riskiest recent edits keep a per-commit cross-engine gate (each is
-#: ~0.5-3 s at sf0.001).
-_ROUND_CANARIES = {
-    "q_ks_test",
-    "q_mann_whitney",
-    "q_triangles",
-    "q_near_dedup_minhash",
-    "q_chi2",
-    "q_sax",
-    "q_decile_lift",
-    "q_theil_sen",
-    "q_pagerank",
-}
+
+def parity_canaries(window, drifted, ledger: dict[str, dict]) -> set[str]:
+    newest = max(v["round"] for v in ledger.values())
+    return (
+        set(drifted)
+        | set(window[:_PARITY_CANARY_N])
+        | {q for q, v in ledger.items() if v["round"] == newest}
+    )
 
 
 def _parity_canaries() -> set[str]:
-    import __spark_entry__ as entry_mod
+    import dump1090_stream_parser_spark.operators  # noqa: F401 -- registers
+    from dump1090_stream_parser_spark.operators.registry import (
+        derived_order,
+        load_ledger,
+    )
 
-    window = list(entry_mod.queries())[:_PARITY_CANARY_N]
-    return {
-        n for n in window if n not in _PARITY_CANARY_SKIP
-    } | _ROUND_CANARIES
+    return parity_canaries(*derived_order(), load_ledger())
 
 
 def pytest_collection_modifyitems(config, items):

@@ -17,6 +17,7 @@ be IDENTICAL to a fresh re-derivation -- asserted directly below.
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 import __spark_entry__ as entry_mod
 from dump1090_stream_parser_spark import tables
@@ -95,3 +96,40 @@ def test_adc_lut_text_cached_and_stable(spark):
     before = list(S._ADC_LUT_TEXT_CACHE[key])
     QUERIES["q_ann_pq"](spark, SF_DIR)
     assert S._ADC_LUT_TEXT_CACHE[key] == before
+
+
+def test_clear_plan_caches_rereads_a_rewritten_schema(spark, tmp_path):
+    """The schema cache keys on the path alone, so a file rewritten in
+    place keeps its stale schema until ``clear_plan_caches()`` runs."""
+    sf_dir = str(tmp_path)
+    path = tables.table_path(sf_dir, "part")
+    spark.createDataFrame([(1,)], "a bigint").write.parquet(path)
+    assert tables.load_table(spark, sf_dir, "part").columns == ["a"]
+    spark.createDataFrame([(1, "x")], "a bigint, b string").write.mode(
+        "overwrite"
+    ).parquet(path)
+    assert tables.load_table(spark, sf_dir, "part").columns == ["a"]
+    tables.clear_plan_caches()
+    assert tables.load_table(spark, sf_dir, "part").columns == ["a", "b"]
+
+
+def test_ckpt_ab_off_arm_returns_the_input_frame(spark):
+    """tools/ckpt_ab.py's off arm must really turn checkpoints off on
+    a classic session: a patch on ``pyspark.sql.DataFrame`` alone is
+    shadowed by the classic subclass's own ``localCheckpoint``."""
+    import os
+    import sys
+
+    sys.path.insert(
+        0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools")
+    )
+    from ckpt_ab import CHECKPOINT_MARKERS, checkpoints_off
+
+    from dump1090_stream_parser_spark.plans.inspect import formatted_plan
+
+    df = spark.range(10).groupBy((F.col("id") % 3).alias("k")).count()
+    with checkpoints_off():
+        assert df.localCheckpoint(eager=False) is df
+    ckpt = df.localCheckpoint(eager=False)
+    assert ckpt is not df
+    assert any(m in formatted_plan(ckpt) for m in CHECKPOINT_MARKERS)

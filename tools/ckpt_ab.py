@@ -5,17 +5,40 @@ re-run guards) and which are pure overhead (ReuseExchange already
 covers the fan-out).
 
 Usage: python tools/ckpt_ab.py q_a q_b ...
+
+The off arm patches the classic DataFrame class: a classic session's
+frames are ``pyspark.sql.classic.dataframe.DataFrame``, whose own
+``localCheckpoint`` shadows any patch on ``pyspark.sql.DataFrame``.
+Before timing it, the off arm's plan is checked for checkpoint scans,
+so an A/B whose off arm still checkpoints fails instead of reporting.
 """
 
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame  # noqa: E402
+
 from dump1090_stream_parser_spark.session import get_spark  # noqa: E402
+
+#: What a checkpointed subtree prints as in a formatted plan.
+CHECKPOINT_MARKERS = ("Scan ExistingRDD", "LogicalRDD")
+
+
+@contextlib.contextmanager
+def checkpoints_off():
+    """Make ``localCheckpoint`` return its input frame unchanged."""
+    orig = ClassicDataFrame.localCheckpoint
+    ClassicDataFrame.localCheckpoint = lambda self, eager=True, storageLevel=None: self
+    try:
+        yield
+    finally:
+        ClassicDataFrame.localCheckpoint = orig
 
 
 def main() -> None:
@@ -24,6 +47,7 @@ def main() -> None:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
     import __spark_entry__ as entry_mod
+    from dump1090_stream_parser_spark.plans.inspect import formatted_plan
     from dump1090_stream_parser_spark.plans.metrics import (
         executed_stage_signature,
     )
@@ -40,10 +64,6 @@ def main() -> None:
         "overwrite"
     ).save()
 
-    from pyspark.sql import DataFrame
-
-    orig = DataFrame.localCheckpoint
-
     def run(name):
         fn = queries[name]
         reps = []
@@ -55,11 +75,15 @@ def main() -> None:
         return min(reps), sig["shuffle_records"], sig["n_stages"]
 
     for name in names:
-        DataFrame.localCheckpoint = orig
         t_on, rec_on, st_on = run(name)
-        DataFrame.localCheckpoint = lambda self, eager=True: self
-        t_off, rec_off, st_off = run(name)
-        DataFrame.localCheckpoint = orig
+        with checkpoints_off():
+            plan = formatted_plan(queries[name](spark, sf_dir))
+            found = [m for m in CHECKPOINT_MARKERS if m in plan]
+            if found:
+                raise RuntimeError(
+                    f"{name}: off arm still checkpoints ({', '.join(found)} in plan)"
+                )
+            t_off, rec_off, st_off = run(name)
         verdict = "SAME-RECORDS" if rec_on == rec_off else "RECORDS-DIFFER"
         print(
             f"{name}: on {t_on:.3f}s/{rec_on}rec/{st_on}st"

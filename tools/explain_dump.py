@@ -8,16 +8,9 @@ With no query names, dumps every headline query. Writes
 plans/$SPARK_GRAFT_PLAN_ROUND/<query>_<tag>.txt (round defaults to
 r14). Uses the same session shape as bench.py.
 
-For queries whose operators cut lineage with localCheckpoint, the
-formatted dump hides every checkpointed subtree behind a
-``Scan ExistingRDD`` stub (VERDICT r13 "What's wrong" #4: before/after
-node counts were unverifiable from such dumps). So each query is
-ALSO dumped with ``DataFrame.localCheckpoint`` monkeypatched to
-identity, as ``<query>_<tag>_full.txt`` -- the complete pre-checkpoint
-lineage. The ``_full`` variant shows WHAT the checkpointed subtrees
-compute; the plain variant shows the execution shape (where the cuts
-are). Queries with no checkpoint produce identical pairs and the
-``_full`` file is skipped.
+A query that cuts lineage with localCheckpoint shows each checkpointed
+subtree as a ``Scan ExistingRDD`` stub: the dump is the execution shape
+(where the cuts are), not what the cut subtrees compute.
 """
 
 from __future__ import annotations
@@ -63,38 +56,12 @@ def main() -> None:
         rnd,
     )
     os.makedirs(out_dir, exist_ok=True)
-    from pyspark.sql import DataFrame
-
-    real_ckpt = DataFrame.localCheckpoint
     for name in names:
-        df = queries[name](spark, sf_dir)
-        txt = _explain(df)
+        txt = _explain(queries[name](spark, sf_dir))
         path = os.path.join(out_dir, f"{name}_{tag}.txt")
         with open(path, "w") as f:
             f.write(txt)
         print(f"wrote {path} ({len(txt)} chars)")
-        # Full-lineage variant: rebuild the query with localCheckpoint
-        # a no-op so checkpointed subtrees print instead of stubbing
-        # out as Scan ExistingRDD. Never executed -- explain only.
-        # Opt out with SPARK_GRAFT_PLAN_FULL=0 (iterative operators
-        # that run convergence collects at BUILD time would execute on
-        # uncheckpointed, exponentially growing lineage).
-        if "Scan ExistingRDD" not in txt or (
-            os.environ.get("SPARK_GRAFT_PLAN_FULL", "1") == "0"
-        ):
-            continue
-        DataFrame.localCheckpoint = lambda self, eager=True: self
-        try:
-            full_txt = _explain(queries[name](spark, sf_dir))
-        except Exception as exc:  # noqa: BLE001 -- best-effort variant
-            print(f"skip {name}_{tag}_full.txt: {exc}")
-            continue
-        finally:
-            DataFrame.localCheckpoint = real_ckpt
-        full_path = os.path.join(out_dir, f"{name}_{tag}_full.txt")
-        with open(full_path, "w") as f:
-            f.write(full_txt)
-        print(f"wrote {full_path} ({len(full_txt)} chars)")
     spark.stop()
 
 

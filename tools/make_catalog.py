@@ -14,15 +14,15 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from dump1090_stream_parser_spark.operators import (  # noqa: E402
-    EVAL_TAIL_RATIONALE,
     REGISTRY,
+    queries_map,
 )
 
 
 def main() -> None:
     full = {n: e for n, e in REGISTRY.items() if e.oracle}
     rows_only = {n: e for n, e in REGISTRY.items() if not e.oracle}
-    n_window = len(REGISTRY) - len(EVAL_TAIL_RATIONALE)
+    window = set(list(queries_map())[:50])
     print("# Query catalog (generated -- do not edit)")
     print()
     print(f"{len(REGISTRY)} registered queries: {len(full)} with a full")
@@ -31,13 +31,15 @@ def main() -> None:
     print("or unit tests instead). Regenerate with "
           "`python tools/make_catalog.py > docs/QUERIES.md`.")
     print()
-    print(f"eval = `window`: one of the {n_window} queries the external")
+    print(f"eval = `window`: one of the {len(window)} queries the external")
     print("driver's per-round correctness gate evaluates (it reads the")
-    print("first 50 registry entries); `tail`: past that window, with the")
-    print("in-window query that proves the same capability listed in the")
-    print("second table. EVERY query, windowed or not, is held to the")
-    print("same DuckDB parity locally (tests/test_parity.py at sf0.001;")
-    print("tools/parity.py sweeps sf0.01/0.1).")
+    print("first 50 registry entries); `tail`: past that window. The")
+    print("window is derived (`operators/registry.py` `window_order`):")
+    print("queries whose code changed since their last green driver row")
+    print("first, then the oldest certifications. EVERY query, windowed or")
+    print("not, is held to the same DuckDB parity locally")
+    print("(tests/test_parity.py at sf0.001; tools/parity.py sweeps")
+    print("sf0.01/0.1).")
     print()
     print("| query | oracle | eval | summary |")
     print("| --- | --- | --- | --- |")
@@ -45,20 +47,8 @@ def main() -> None:
         entry = REGISTRY[name]
         first_line = (entry.doc.splitlines() or [""])[0].strip()
         kind = "full" if entry.oracle else "rows-only"
-        ev = "tail" if name in EVAL_TAIL_RATIONALE else "window"
+        ev = "window" if name in window else "tail"
         print(f"| `{name}` | {kind} | {ev} | {first_line} |")
-    print()
-    print("## Deferred-tail capability map")
-    print()
-    print("Why each tail query can sit outside the driver window -- the")
-    print("capability it exercises is already proven by an in-window")
-    print("query (source of truth: `operators/__init__.py`")
-    print("`EVAL_TAIL_RATIONALE`, which also fixes the rotation order):")
-    print()
-    print("| tail query | capability held in-window by |")
-    print("| --- | --- |")
-    for name, why in EVAL_TAIL_RATIONALE.items():
-        print(f"| `{name}` | {why} |")
 
 
 if __name__ == "__main__":

@@ -19,6 +19,7 @@ and review the diff like code: every changed count needs a reason.
 from __future__ import annotations
 
 import json
+import os
 import sys
 
 sys.path.insert(0, "/root/repo")
@@ -88,19 +89,22 @@ EXEC_PINNED = (
 )
 
 
-def exec_pinned_names() -> list[str]:
-    """The exec-pin coverage set (VERDICT r10 ask #3): the
-    multi-consumer watchlist above PLUS every current driver-window
-    query -- so each in-window line in the per-round bench carries a
-    (shuffle_records, n_stages) pin to adjudicate wobble against (the
-    q_benford r10 lesson: a 1.65x bench swing on a plan-neutral diff
-    could not be settled from pins because it had none). The window
-    rotates; regenerating after a rotation adds the entrants' pins and
-    retires none of the watchlist's."""
-    import __spark_entry__ as e
+#: The pinned executed-stage records, regenerated with ``--executed``.
+EXEC_SNAPSHOT_PATH = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "docs",
+    "PLAN_SNAPSHOT_EXEC.json",
+)
 
-    window = list(e.queries())[:50]
-    return sorted(set(EXEC_PINNED) | set(window))
+
+def exec_pinned_names() -> list[str]:
+    """The exec-pin coverage set: the multi-consumer watchlist above
+    plus every query already pinned in the executed snapshot. The set
+    does not follow the oracle window, so a window change never forces
+    the pins to be regenerated. To pin another query, add it to
+    EXEC_PINNED and regenerate with ``--executed``."""
+    with open(EXEC_SNAPSHOT_PATH) as f:
+        return sorted(set(EXEC_PINNED) | set(json.load(f)))
 
 
 #: Queries with a once-per-session build or probe step (layout caches,
