@@ -12,7 +12,7 @@ Layout
 - ``session``    SparkSession factory + runtime conf (AQE, UTC, nanos).
 - ``tables``     testdata loaders (TPC-H-ish star schema + events/docs/embeddings).
 - ``operators``  the relational + extension query surface (SURVEY.md §2).
-- ``sources``    SBS-1 parsing and the custom ``sbs1`` streaming source.
+- ``sources``    SBS-1 parsing and the custom ``sbs1-jvm`` streaming source.
 - ``streaming``  Structured Streaming pipelines (Bronze -> Silver -> Gold).
 - ``functions``  reusable column expressions (geo, vectors, portable hashing).
 - ``plans``      plan inspection / scale-posture helpers.

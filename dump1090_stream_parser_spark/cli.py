@@ -4,17 +4,20 @@ L10-L28), driving the Spark-native pipeline:
     python -m dump1090_stream_parser_spark \\
         -l localhost -p 30003 -d ./adsb_out --batch-seconds 5
 
+Every feed is read by the JVM ``sbs1-jvm`` source (one drain thread
+per receiver; ``java/sbs1-jvm-source.jar``, committed).
+
 Option mapping (reference -> here):
-    -l/--location, -p/--port        -> sbs1 source options (unchanged)
-    (one receiver only)             -> --hosts h1:p1,h2:p2 (JVM sbs1-jvm
-                                       source, one drain thread each)
+    -l/--location, -p/--port        -> one receiver (unchanged)
+    (one receiver only)             -> --hosts h1:p1,h2:p2 (overrides
+                                       -l/-p)
     -d/--database                   -> output directory (parquet Silver +
                                        dead-letter); add --sqlite for the
                                        drop-in SQLite parity artifact
-    --buffer-size                   -> sbs1 source buffer_size (unchanged)
+    --buffer-size                   -> source buffer_size (unchanged)
     --batch-size (rows/commit)      -> --batch-seconds (trigger interval;
                                        micro-batch = the commit unit)
-    --connect-attempt-limit/-delay  -> sbs1 source options (unchanged)
+    --connect-attempt-limit/-delay  -> source options (unchanged)
 """
 
 from __future__ import annotations
@@ -45,70 +48,81 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--connect-attempt-delay", type=float, default=5.0,
                    help="seconds to wait after a failed connection attempt")
     p.add_argument("--hosts", default=None,
-                   help="comma-separated host[:port] receivers, read by "
-                   "the JVM sbs1-jvm source (overrides -l/-p; needs "
-                   "java/sbs1-jvm-source.jar, committed)")
+                   help="comma-separated host[:port] receivers "
+                   "(overrides -l/-p)")
     p.add_argument("--master", default="local[*]")
     return p
+
+
+def receivers(args: argparse.Namespace) -> list[tuple[str, int]]:
+    """The (host, port) receivers to read: ``--hosts`` when given
+    (port 30003 when a host names none), else the one ``-l/-p`` feed."""
+    if not args.hosts:
+        return [(args.location, args.port)]
+    return [
+        (h.rsplit(":", 1)[0], int(h.rsplit(":", 1)[1]))
+        if ":" in h
+        else (h, 30003)
+        for h in (p.strip() for p in args.hosts.split(","))
+        if h
+    ]
+
+
+def batch_writer(out_dir: str, sqlite_path: str | None = None):
+    """The CLI's foreachBatch function: Silver parquet and dead letters
+    through :func:`streaming.pipeline.silver_batch_writer`, then, with
+    ``sqlite_path``, the batch's committed ``squitters/batch_id=N``
+    files appended to SQLite. Reading the committed files back keeps
+    the batch to one scan of the source, and SQLite holds exactly what
+    parquet committed. The explicit schema covers an all-malformed
+    batch, which commits no parquet file."""
+    from .sources.sbs1 import SQUITTERS_DDL
+    from .streaming.pipeline import silver_batch_writer
+    from .streaming.sinks import write_sqlite_batch
+
+    parquet_writer = silver_batch_writer(out_dir)  # idempotent per batch id
+    if sqlite_path is None:
+        return parquet_writer
+
+    def write_batch(batch, batch_id: int) -> None:
+        parquet_writer(batch, batch_id)
+        committed = batch.sparkSession.read.schema(SQUITTERS_DDL).parquet(
+            f"{out_dir}/squitters/batch_id={batch_id}"
+        )
+        write_sqlite_batch(committed, sqlite_path, batch_id)
+
+    return write_batch
 
 
 def main(argv: list[str] | None = None) -> None:
     args = build_parser().parse_args(argv)
 
     from .session import get_spark
-    from .sources.sbs1 import silver
+    from .sources.sbs1_jvm import jvm_source_conf
     from .streaming.monitor import IngestCounters, supervise
-    from .streaming.pipeline import (
-        bronze_from_sbs1,
-        bronze_from_sbs1_jvm,
-        silver_batch_writer,
-        silver_stream,
-    )
-    from .streaming.sinks import write_sqlite_batch
+    from .streaming.pipeline import bronze_from_sbs1_jvm, silver_stream
 
-    hosts = None
-    extra_conf = None
-    if args.hosts:
-        from .sources.sbs1_jvm import jvm_source_conf
-
-        hosts = [
-            (h.rsplit(":", 1)[0], int(h.rsplit(":", 1)[1]))
-            if ":" in h
-            else (h, 30003)
-            for h in (p.strip() for p in args.hosts.split(","))
-            if h
-        ]
-        extra_conf = jvm_source_conf()
+    hosts = receivers(args)
     spark = get_spark(
-        master=args.master, app_name="sbs1-ingest", extra_conf=extra_conf
+        master=args.master, app_name="sbs1-ingest", extra_conf=jvm_source_conf()
     )
     counters = IngestCounters(verbose=True)
     spark.streams.addListener(counters)
 
-    out, ckpt = args.database, f"{args.database}/_checkpoint"
-    parquet_writer = silver_batch_writer(out)  # idempotent per batch id
-
-    def write_batch(batch, batch_id):
-        parquet_writer(batch, batch_id)
-        if args.sqlite:
-            write_sqlite_batch(silver(batch), args.sqlite, batch_id)
+    write_batch = batch_writer(args.database, args.sqlite)
 
     def start():
-        opts = dict(
+        bronze = bronze_from_sbs1_jvm(
+            spark,
+            hosts,
             buffer_size=args.buffer_size,
             connect_attempt_limit=args.connect_attempt_limit,
             connect_attempt_delay=args.connect_attempt_delay,
         )
-        if hosts:
-            bronze = bronze_from_sbs1_jvm(spark, hosts, **opts)
-        else:
-            bronze = bronze_from_sbs1(
-                spark, args.location, args.port, **opts
-            )
         return (
             silver_stream(bronze)
             .writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", ckpt)
+            .option("checkpointLocation", f"{args.database}/_checkpoint")
             .trigger(processingTime=f"{args.batch_seconds} seconds")
             .start()
         )

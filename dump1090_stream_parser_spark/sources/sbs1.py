@@ -97,7 +97,7 @@ def parse_lines(
 
     ``parsed_time`` defaults to ``current_timestamp()``; the reference
     stamps per-row at parse time (Appendix A L86), Spark stamps per-batch
-    -- documented divergence (SURVEY.md §7.4.2). The custom ``sbs1``
+    -- documented divergence (SURVEY.md §7.4.2). The ``sbs1-jvm``
     source supplies a receive-side timestamp instead (the faithful path).
     """
     if parsed_time is None:
@@ -118,7 +118,7 @@ def parse_lines(
     fields = F.split(
         F.rtrim(F.col(value_col), F.lit("\r")), ",", -1
     )
-    # Pass through non-value Bronze columns (e.g. the sbs1 source's
+    # Pass through non-value Bronze columns (e.g. the sbs1-jvm source's
     # ingest_ts) so the parsed_time expression may reference them too.
     extras = [c for c in lines.columns if c != value_col]
     staged = lines.select(F.col(value_col), *extras, fields.alias("_fields"))

@@ -2,8 +2,8 @@
 
 The source itself is ~500 lines of Java (``java/src/sbs1/
 Sbs1JvmSource.java``) implementing Spark's DataSource V2 streaming API
-for many receivers (drain thread per receiver, blob-granularity replay
-buffer with recv backpressure, per-receiver line-count offsets,
+for one receiver or many (drain thread per receiver, blob-granularity
+replay buffer with recv backpressure, per-receiver line-count offsets,
 bounded data-bearing partitions), with framing BELOW Python:
 
 - drain + framing run on plain JVM threads -- no GIL, so N receivers

@@ -4,9 +4,8 @@ The reference's whole runtime is one loop: recv -> frame -> validate ->
 stamp -> batched INSERT with commit every N rows and reconnect
 supervision (SURVEY.md §3.1). Its Spark-native equivalent:
 
-- source: the ``sbs1`` data source (one feed), the JVM ``sbs1-jvm``
-  source (many receivers), or file replay (tests) -- all produce the
-  same Bronze schema;
+- source: the JVM ``sbs1-jvm`` source (one receiver or many) or file
+  replay (tests) -- both produce the same Bronze schema;
 - transform: :func:`sources.sbs1.parse_lines` -- the SAME expression set
   batch uses, so stream/batch parity holds by construction;
 - sink: ``foreachBatch`` appending partitioned parquet. Checkpointed
@@ -54,32 +53,14 @@ def bronze_from_file_replay(spark: SparkSession, path: str) -> DataFrame:
     ).text(path)
 
 
-def bronze_from_sbs1(
-    spark: SparkSession, host: str = "localhost", port: int = 30003, **options
-) -> DataFrame:
-    """The custom ``sbs1`` source: reconnect/backoff + per-row receive
-    timestamps (A1/A2/A9/A13). Options mirror the reference CLI
-    (Appendix A L13-L26): buffer_size, connect_attempt_limit,
-    connect_attempt_delay."""
-    from ..sources.sbs1_source import register
-
-    register(spark)
-    reader = (
-        spark.readStream.format("sbs1")
-        .option("location", host)
-        .option("port", str(port))
-    )
-    for k, v in options.items():
-        reader = reader.option(k, str(v))
-    return reader.load()
-
-
 def bronze_from_sbs1_jvm(
     spark: SparkSession, hosts: list[tuple[str, int]], **options
 ) -> DataFrame:
-    """Multi-receiver ingest: the custom JVM ``sbs1-jvm`` source
-    (``java/src/sbs1/Sbs1JvmSource.java``). ``hosts`` is a list of
-    (host, port) pairs.
+    """SBS-1 socket ingest, one receiver or many: the custom JVM
+    ``sbs1-jvm`` source (``java/src/sbs1/Sbs1JvmSource.java``).
+    ``hosts`` is a list of (host, port) pairs. Options mirror the
+    reference CLI (Appendix A L13-L26): buffer_size,
+    connect_attempt_limit, connect_attempt_delay.
 
     One drain thread per receiver (reconnect/backoff, partial-line
     carry, blob-granularity replay buffer with recv BACKPRESSURE,

@@ -43,9 +43,9 @@ def write_sqlite_batch(
 ) -> int:
     """Append one micro-batch of Silver rows to the SQLite parity DB.
 
-    Use inside foreachBatch:
-        write_silver-style fn that calls
-        ``write_sqlite_batch(silver(batch), "adsb_messages.db", batch_id)``.
+    Use inside foreachBatch on rows already computed, as the CLI's
+    ``cli.batch_writer`` does with each batch's committed Silver
+    parquet: ``silver(batch)`` would parse the batch a second time.
     Returns rows written. One transaction per micro-batch = the
     reference's batched commit -- and when ``batch_id`` is given, the
     batch-ledger insert rides in the SAME transaction, so a re-delivered

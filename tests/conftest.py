@@ -1,10 +1,11 @@
 from __future__ import annotations
 
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from dump1090_stream_parser_spark.session import get_spark
 from dump1090_stream_parser_spark.sources.sbs1_jvm import jvm_source_conf
@@ -83,7 +84,7 @@ import re as _re
 #: in the default run.
 _SLOW_FILES = {
     "test_bench_contract.py",   # subprocess bench e2e (~115 s)
-    "test_streaming.py",        # socket kill/restart resilience (~130 s);
+    "test_streaming.py",        # checkpoint resume + supervised restart;
                                 # its fast cases are in test_ingest.py
     "test_streaming_gold.py",   # stream-stream join e2e (~70 s)
     "test_approx.py",           # recall vs brute force sweeps (~124 s)

@@ -26,6 +26,8 @@ import os
 import subprocess
 import sys
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def test_bench_emits_driver_contract_json():
     env = dict(
@@ -40,7 +42,7 @@ def test_bench_emits_driver_contract_json():
     )
     out = subprocess.run(
         [sys.executable, "bench.py"],
-        cwd="/root/repo",
+        cwd=REPO,
         env=env,
         capture_output=True,
         text=True,
@@ -125,7 +127,7 @@ def test_contract_line_holds_grain_at_150_queries():
     import importlib.util
 
     spec = importlib.util.spec_from_file_location(
-        "bench_mod", "/root/repo/bench.py"
+        "bench_mod", os.path.join(REPO, "bench.py")
     )
     bench = importlib.util.module_from_spec(spec)
     # Don't execute main(); replicate the emission logic on synthetic

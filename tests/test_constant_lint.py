@@ -20,13 +20,15 @@ from __future__ import annotations
 
 import ast
 import glob
+import os
 
-PACKAGES = (
-    "/root/repo/dump1090_stream_parser_spark/operators/*.py",
-    "/root/repo/dump1090_stream_parser_spark/functions/*.py",
-    "/root/repo/dump1090_stream_parser_spark/plans/*.py",
-    "/root/repo/dump1090_stream_parser_spark/streaming/*.py",
-    "/root/repo/dump1090_stream_parser_spark/sources/*.py",
+_PKG = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "dump1090_stream_parser_spark",
+)
+PACKAGES = tuple(
+    os.path.join(_PKG, sub, "*.py")
+    for sub in ("operators", "functions", "plans", "streaming", "sources")
 )
 
 

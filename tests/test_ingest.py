@@ -1,113 +1,31 @@
-"""Default-run ingest tests: the ``sbs1`` TCP source end to end, its
-reconnect backoff and replay protocol, and the Silver ``foreachBatch``
-sink (batch-id idempotence, the Bronze archive, and one scan of each
-micro-batch). The socket kill/restart tests stay in the slow
-``test_streaming.py``."""
+"""Default-run ingest tests: the Silver ``foreachBatch`` sink
+(batch-id idempotence, the Bronze archive, and one scan of each
+micro-batch, with and without the CLI's SQLite append). The socket
+source's tests live in ``test_sbs1_jvm.py``; the slow checkpoint and
+restart tests in ``test_streaming.py``."""
 
 from __future__ import annotations
 
 import os
-import socket
-import socketserver
-import threading
-import time
+import sqlite3
 from collections import Counter
 
 from pyspark.sql import functions as F
 
-from dump1090_stream_parser_spark.sources.sbs1 import parse_lines, silver
+from dump1090_stream_parser_spark.cli import batch_writer
+from dump1090_stream_parser_spark.sources.sbs1 import (
+    SBS1_FIELDS,
+    parse_lines,
+    silver,
+)
 from dump1090_stream_parser_spark.streaming import pipeline
 from dump1090_stream_parser_spark.streaming.pipeline import (
     bronze_from_file_replay,
-    bronze_from_sbs1,
     silver_batch_writer,
     silver_stream,
 )
 
 from .test_sbs1_parser import GOLDEN, INVALID
-
-
-class _Broadcast(socketserver.BaseRequestHandler):
-    """Serves the fixture lines once, in two chunks split mid-field to
-    exercise partial-line carry (FIXTURES.md §1.2), then keeps the
-    connection open."""
-
-    def handle(self):
-        payload = ("\n".join(GOLDEN + INVALID) + "\n").encode()
-        cut = payload.index(b"51.46720") + 4  # mid-field split
-        self.request.sendall(payload[:cut])
-        time.sleep(0.3)
-        self.request.sendall(payload[cut:])
-        time.sleep(30)
-
-
-def test_sbs1_source_end_to_end(spark, tmp_path):
-    server = socketserver.ThreadingTCPServer(("127.0.0.1", 0), _Broadcast)
-    server.daemon_threads = True
-    port = server.server_address[1]
-    threading.Thread(target=server.serve_forever, daemon=True).start()
-    try:
-        bronze = bronze_from_sbs1(
-            spark, "127.0.0.1", port, connect_attempt_limit=3
-        )
-        parsed = silver_stream(bronze)
-        q = (
-            parsed.writeStream.format("memory")
-            .queryName("sbs1_test")
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(processingTime="1 second")
-            .start()
-        )
-        try:
-            deadline = time.time() + 90
-            want = len(GOLDEN) + len(INVALID)
-            while time.time() < deadline:
-                n = spark.sql("SELECT count(*) FROM sbs1_test").collect()[0][0]
-                if n >= want:
-                    break
-                time.sleep(1)
-            rows = spark.sql("SELECT * FROM sbs1_test").collect()
-            good = [r for r in rows if r["_corrupt_record"] is None]
-            bad = [r for r in rows if r["_corrupt_record"] is not None]
-            # partial-line carry reassembled the split MSG,3 line exactly once
-            assert len(good) == len(GOLDEN)
-            assert len(bad) == len(INVALID)
-            assert all(r["parsed_time"] is not None for r in good)
-            msg3 = [r for r in good if r["transmission_type"] == 3]
-            assert any(abs(r["lat"] - 51.46720) < 1e-9 for r in msg3)
-        finally:
-            q.stop()
-    finally:
-        server.shutdown()
-        server.server_close()
-
-
-def test_sbs1_source_reconnect_backoff():
-    """A9 parity: reader retries with delay, then raises after the limit."""
-    from dump1090_stream_parser_spark.sources.sbs1_source import Sbs1StreamReader
-
-    # Find a port with nothing listening.
-    s = socket.socket()
-    s.bind(("127.0.0.1", 0))
-    dead_port = s.getsockname()[1]
-    s.close()
-
-    reader = Sbs1StreamReader(
-        {
-            "location": "127.0.0.1",
-            "port": str(dead_port),
-            "connect_attempt_limit": "2",
-            "connect_attempt_delay": "0.05",
-        }
-    )
-    t0 = time.time()
-    try:
-        reader.read(reader.initialOffset())
-        raised = False
-    except ConnectionError:
-        raised = True
-    assert raised
-    assert time.time() - t0 >= 0.05  # at least one backoff sleep happened
 
 
 def test_silver_sink_idempotent_on_batch_replay(spark, tmp_path):
@@ -158,80 +76,35 @@ def test_bronze_archive_and_silver_from_one_stream(spark, tmp_path):
     assert replay.count() == len(GOLDEN)
 
 
-def test_sbs1_reader_replay_protocol():
-    """The offset/replay contract that exactly-once delivery rests on,
-    driven directly on the reader object: a re-read of an already-read
-    offset range (micro-batch retry) returns the identical rows, and
-    commit(end) prunes the replay cache below the checkpointed offset."""
-    from dump1090_stream_parser_spark.sources.sbs1_source import (
-        Sbs1StreamReader,
-    )
-
-    class _Serve(socketserver.BaseRequestHandler):
-        def handle(self):
-            self.request.sendall(("\n".join(GOLDEN) + "\n").encode())
-            time.sleep(10)
-
-    server = socketserver.ThreadingTCPServer(("127.0.0.1", 0), _Serve)
-    server.daemon_threads = True
-    port = server.server_address[1]
-    threading.Thread(target=server.serve_forever, daemon=True).start()
-    try:
-        reader = Sbs1StreamReader(
-            {"location": "127.0.0.1", "port": str(port)}
-        )
-        rows: list = []
-        start = reader.initialOffset()
-        deadline = time.time() + 30
-        end = start
-        while len(rows) < len(GOLDEN) and time.time() < deadline:
-            it, end = reader.read(end)
-            rows.extend(it)
-            time.sleep(0.1)
-        assert [r[0] for r in rows] == GOLDEN
-        assert end == {"line": len(GOLDEN)}
-
-        # retry of the full range -> identical rows, same order
-        replay = list(reader.readBetweenOffsets(start, end))
-        assert replay == rows
-        # partial range
-        mid = {"line": 2}
-        assert list(reader.readBetweenOffsets(start, mid)) == rows[:2]
-
-        # checkpoint commit prunes the cache below the offset...
-        reader.commit(mid)
-        assert list(reader.readBetweenOffsets(start, end)) == rows[2:]
-        # ...and the still-uncommitted suffix remains retryable
-        assert list(reader.readBetweenOffsets(mid, end)) == rows[2:]
-    finally:
-        server.shutdown()
-        server.server_close()
+def _parsed_golden(spark):
+    return parse_lines(spark.createDataFrame([(l,) for l in GOLDEN], "value string"))
 
 
-def test_silver_sink_scans_each_batch_once(spark, tmp_path, monkeypatch):
-    """The sink writes Silver and the dead letters from one scan of
-    each micro-batch: progress counts every line sent exactly once, a
-    batch without malformed lines writes no dead-letter directory, and
-    an all-malformed batch dead-letters every line."""
+#: One file per micro-batch: mixed, all valid, all malformed.
+_BATCH_FILES = {
+    "a_mixed.txt": GOLDEN + INVALID,
+    "b_valid.txt": GOLDEN,
+    "c_malformed.txt": INVALID,
+}
+
+
+def _replay_one_file_per_batch(spark, tmp_path, monkeypatch, write_batch):
+    """Stream :data:`_BATCH_FILES` through ``write_batch``, one file per
+    micro-batch, and check that progress counts every line sent exactly
+    once: a second scan of a batch would count its lines twice."""
     src = tmp_path / "lines"
     src.mkdir()
-    files = {
-        "a_mixed.txt": GOLDEN + INVALID,
-        "b_valid.txt": GOLDEN,
-        "c_malformed.txt": INVALID,
-    }
-    for k, (name, lines) in enumerate(files.items()):
+    for k, (name, lines) in enumerate(_BATCH_FILES.items()):
         path = src / name
         path.write_text("\n".join(lines) + "\n")
         os.utime(path, (1_000_000 + k, 1_000_000 + k))  # batch order
 
-    out = tmp_path / "out"
     # a 1-byte cap still takes one file per batch: the replay's bound
     monkeypatch.setattr(pipeline, "FILE_REPLAY_BYTES_PER_TRIGGER", 1)
     bronze = bronze_from_file_replay(spark, str(src))
     q = (
         silver_stream(bronze)
-        .writeStream.foreachBatch(silver_batch_writer(str(out)))
+        .writeStream.foreachBatch(write_batch)
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)
         .start()
@@ -240,11 +113,22 @@ def test_silver_sink_scans_each_batch_once(spark, tmp_path, monkeypatch):
     assert q.exception() is None
     progress = q.recentProgress
     assert [p["batchId"] for p in progress] == [0, 1, 2]
-    sent = sum(len(lines) for lines in files.values())
+    sent = sum(len(lines) for lines in _BATCH_FILES.values())
     assert sum(p["numInputRows"] for p in progress) == sent
 
+
+def test_silver_sink_scans_each_batch_once(spark, tmp_path, monkeypatch):
+    """The sink writes Silver and the dead letters from one scan of
+    each micro-batch: progress counts every line sent exactly once, a
+    batch without malformed lines writes no dead-letter directory, and
+    an all-malformed batch dead-letters every line."""
+    out = tmp_path / "out"
+    _replay_one_file_per_batch(
+        spark, tmp_path, monkeypatch, silver_batch_writer(str(out))
+    )
+
     # every Silver column but the stream's own parse-time stamp
-    expect = silver(parse_lines(spark.createDataFrame([(l,) for l in GOLDEN], "value string")))
+    expect = silver(_parsed_golden(spark))
     cols = [c for c in expect.columns if c != "parsed_time"]
     golden = sorted(map(tuple, expect.select(*cols).collect()))
 
@@ -264,3 +148,32 @@ def test_silver_sink_scans_each_batch_once(spark, tmp_path, monkeypatch):
     assert not (out / "dead_letter" / "batch_id=1").exists()
     assert dead_letters(2) == Counter(INVALID)
     assert not list((out / "squitters" / "batch_id=2").glob("**/*.parquet"))
+
+
+def test_cli_sqlite_sink_scans_each_batch_once(spark, tmp_path, monkeypatch):
+    """With ``--sqlite`` the CLI's batch function still scans each
+    micro-batch once: SQLite is filled from the committed parquet, so it
+    holds GOLDEN once per batch that had valid lines, row for row what
+    parquet holds, and a replayed batch id adds nothing to it."""
+    out, db = tmp_path / "out", str(tmp_path / "adsb.db")
+    write_batch = batch_writer(str(out), db)
+    _replay_one_file_per_batch(spark, tmp_path, monkeypatch, write_batch)
+
+    fields = [name for name, _ in SBS1_FIELDS]
+    golden = sorted(map(tuple, silver(_parsed_golden(spark)).select(*fields).collect()))
+
+    def sqlite_rows(cols: list[str]) -> list[tuple]:
+        conn = sqlite3.connect(db)
+        try:
+            return sorted(conn.execute(f"SELECT {', '.join(cols)} FROM squitters"))
+        finally:
+            conn.close()
+
+    assert sqlite_rows(fields) == sorted(golden * 2)
+    parquet = spark.read.parquet(str(out / "squitters")).select(*fields, "parsed_time")
+    assert sqlite_rows(fields + ["parsed_time"]) == sorted(
+        (*r[:-1], r[-1].isoformat()) for r in parquet.collect()
+    )
+
+    write_batch(_parsed_golden(spark), 1)  # re-delivery of batch 1
+    assert sqlite_rows(fields) == sorted(golden * 2)

@@ -155,11 +155,11 @@ def test_queries_map_is_the_registry_reordered():
     names = list(QUERIES)
     assert len(names) == len(set(names)) == len(ops.REGISTRY) == 161
     assert set(names) == set(ops.REGISTRY)
-    digest = hashlib.sha256(
-        json.dumps(sorted(ORACLES.items())).encode()
-    ).hexdigest()
+    # the oracles read fixtures through this checkout's absolute path
+    text = json.dumps(sorted(ORACLES.items())).replace(str(ROOT), "<checkout>")
+    digest = hashlib.sha256(text.encode()).hexdigest()
     assert digest == (
-        "74e61f9d31a7800d541cfe94050cf4f6ba0929fadcb1f3b74dccc18b3c6700be"
+        "4763f9b95ecea1ecd3d94f108fb25688795ac370dc32f8c1c24d33938df9ac41"
     )
     lazy = subprocess.run(
         [sys.executable, "-c",

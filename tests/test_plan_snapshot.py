@@ -8,20 +8,21 @@ why in the commit."""
 from __future__ import annotations
 
 import json
+import os
+import sys
 
 import pytest
 
 import __spark_entry__ as entry_mod
 from dump1090_stream_parser_spark.plans.inspect import formatted_plan
 
-import sys
-
-sys.path.insert(0, "/root/repo/tools")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(REPO, "tools"))
 from plan_snapshot import SKIP, signature  # noqa: E402
 
 from .conftest import SF_DIR
 
-with open("/root/repo/docs/PLAN_SNAPSHOT.json") as f:
+with open(os.path.join(REPO, "docs", "PLAN_SNAPSHOT.json")) as f:
     SNAPSHOT = json.load(f)
 
 QUERIES = entry_mod.queries()
@@ -43,7 +44,7 @@ def test_plan_signature_unchanged(spark, name):
 
 from plan_snapshot import EXEC_PINNED, exec_pinned_names  # noqa: E402
 
-with open("/root/repo/docs/PLAN_SNAPSHOT_EXEC.json") as f:
+with open(os.path.join(REPO, "docs", "PLAN_SNAPSHOT_EXEC.json")) as f:
     EXEC_SNAPSHOT = json.load(f)
 
 

@@ -1,10 +1,11 @@
-"""Suite for the JVM-native ``sbs1-jvm`` multi-receiver source
-(java/src/sbs1/Sbs1JvmSource.java):
+"""Suite for the JVM-native ``sbs1-jvm`` source, the engine's one
+socket source (java/src/sbs1/Sbs1JvmSource.java):
 
 - multi-receiver exactly-once delivery with per-receiver partial-line
   carry and per-row ingest_ts;
 - the GOLDEN + INVALID fixture lines through the production
-  silver_stream (parse parity on the JVM path);
+  silver_stream (parse parity on the JVM path), from one receiver (the
+  CLI's ``-l/-p`` shape) and from two;
 - a receiver that exhausts its connect attempts fails the query, and
   the error names the attempts;
 - the offset protocol, driven over py4j through the public DSv2
@@ -23,6 +24,8 @@ import socket
 import socketserver
 import threading
 import time
+
+import pytest
 
 from dump1090_stream_parser_spark.streaming.pipeline import (
     bronze_from_sbs1_jvm,
@@ -105,11 +108,15 @@ def test_jvm_source_multi_receiver_exactly_once(spark, tmp_path):
             s.server_close()
 
 
-def test_jvm_source_through_silver(spark, tmp_path):
+@pytest.mark.parametrize(
+    "shards",
+    [[GOLDEN + INVALID], [GOLDEN, INVALID]],
+    ids=["one_receiver", "two_receivers"],
+)
+def test_jvm_source_through_silver(spark, tmp_path, shards):
     """GOLDEN + INVALID through the production parse on the JVM path:
     good rows parse (values identical to the batch parser), invalid
     rows dead-letter, parsed_time stamped per row."""
-    shards = [GOLDEN, INVALID]
     servers, hosts = [], []
     try:
         for lines in shards:
@@ -156,7 +163,6 @@ def test_jvm_source_through_silver(spark, tmp_path):
 def test_jvm_source_connect_failure_fails_query(spark, tmp_path):
     """A9: a receiver that exhausts connect_attempt_limit fails the
     query, and the failure names the attempts it made."""
-    import pytest
     from pyspark.errors import StreamingQueryException
 
     probe = socket.socket()
@@ -306,8 +312,7 @@ def test_jvm_source_restart_no_duplicates(spark, tmp_path):
     must never re-emit committed rows (the fresh connection
     fast-forwards to the checkpointed offset) and keeps delivering rows
     served after the restart. Loss across the restart gap is inherent
-    to ephemeral TCP (same contract as the Python source); duplication
-    would be a bug."""
+    to ephemeral TCP; duplication would be a bug."""
     counter = {"n": 0}
 
     class Handler(socketserver.BaseRequestHandler):
@@ -445,8 +450,6 @@ def test_jvm_source_survives_server_kill(spark, tmp_path):
 def test_jvm_source_requires_classpath_and_hosts(spark):
     """Misuse errors are clear: empty hosts is a ValueError before any
     JVM work."""
-    import pytest
-
     with pytest.raises(ValueError, match="at least one"):
         bronze_from_sbs1_jvm(spark, [])
 
@@ -456,7 +459,6 @@ def test_offset_receiver_set_mismatch_fails_fast(spark):
     with the configured hosts must throw (the Kafka partition-set
     rule), not silently drop extra receivers' progress or zero-fill
     missing ones."""
-    import pytest
     from py4j.protocol import Py4JJavaError
 
     # nested static class: py4j addresses it by its binary name
@@ -477,8 +479,6 @@ def test_jar_rebuilds_on_content_change_only(tmp_path):
     jar, while a content edit must rebuild it."""
     import os
     import shutil
-
-    import pytest
 
     from dump1090_stream_parser_spark.sources.sbs1_jvm import (
         _JAVA_DIR,

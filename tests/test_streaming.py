@@ -1,21 +1,16 @@
-"""Streaming integration tests (SURVEY.md §5.2 item 4): file replay and
-the custom sbs1 TCP source, each checked against batch-mode parity.
+"""Streaming integration tests (SURVEY.md §5.2 item 4): file replay
+checked against batch-mode parity, checkpoint resume, and supervised
+restart.
 
-This whole file is slow-marked (tests/conftest.py): checkpoint resume,
-supervised restart and a server kill. The fast ingest tests live in
-``test_ingest.py``, which the default run keeps."""
+This whole file is slow-marked (tests/conftest.py). The fast ingest
+tests live in ``test_ingest.py``, which the default run keeps; the
+socket source's kill and restart tests live in ``test_sbs1_jvm.py``."""
 
 from __future__ import annotations
-
-import socket
-import socketserver
-import threading
-import time
 
 from dump1090_stream_parser_spark.sources.sbs1 import parse_lines, silver
 from dump1090_stream_parser_spark.streaming.pipeline import (
     bronze_from_file_replay,
-    bronze_from_sbs1,
     silver_stream,
     write_silver,
 )
@@ -123,89 +118,3 @@ def test_supervise_restarts_failed_query(spark, tmp_path):
     assert attempts == ["fail", "ok"]
     got = spark.read.parquet(str(tmp_path / "sout" / "squitters"))
     assert got.count() == len(GOLDEN)
-
-
-class _PhaseServer(socketserver.ThreadingTCPServer):
-    allow_reuse_address = True
-    daemon_threads = True
-
-
-def _serve_once(port: int, lines: list[str]) -> socketserver.TCPServer:
-    """A server on `port` that sends `lines` to each client then holds
-    the connection open."""
-
-    class Handler(socketserver.BaseRequestHandler):
-        def handle(self):
-            self.request.sendall(("\n".join(lines) + "\n").encode())
-            time.sleep(30)
-
-    server = _PhaseServer(("127.0.0.1", port), Handler)
-    threading.Thread(target=server.serve_forever, daemon=True).start()
-    return server
-
-
-def test_sbs1_source_survives_server_kill(spark, tmp_path):
-    """A9 end-to-end: the feed dies mid-stream and comes back; committed
-    offsets must survive -- every line delivered before the kill and
-    every line after the reconnect lands exactly once (ephemeral-TCP
-    semantics: nothing is sent while disconnected, so nothing is lost)."""
-    part1, part2 = GOLDEN[: len(GOLDEN) // 2], GOLDEN[len(GOLDEN) // 2 :]
-
-    # OS-assigned free port, then release it for the phase-1 server.
-    probe = socket.socket()
-    probe.bind(("127.0.0.1", 0))
-    port = probe.getsockname()[1]
-    probe.close()
-
-    server = _serve_once(port, part1)
-    q = None
-    try:
-        bronze = bronze_from_sbs1(
-            spark,
-            "127.0.0.1",
-            port,
-            connect_attempt_limit=100,
-            connect_attempt_delay=0.2,
-        )
-        q = (
-            bronze.writeStream.format("memory")
-            .queryName("sbs1_kill_test")
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(processingTime="1 second")
-            .start()
-        )
-
-        def count() -> int:
-            return spark.sql(
-                "SELECT count(*) FROM sbs1_kill_test"
-            ).collect()[0][0]
-
-        deadline = time.time() + 60
-        while time.time() < deadline and count() < len(part1):
-            time.sleep(0.5)
-        assert count() == len(part1), "phase-1 lines not all delivered"
-
-        # Hard kill: connections drop, reader sees empty recv and enters
-        # its reconnect loop.
-        server.shutdown()
-        server.server_close()
-        time.sleep(1.0)
-        server = _serve_once(port, part2)
-
-        want = len(part1) + len(part2)
-        deadline = time.time() + 60
-        while time.time() < deadline and count() < want:
-            time.sleep(0.5)
-
-        rows = [r["value"] for r in spark.sql(
-            "SELECT value FROM sbs1_kill_test"
-        ).collect()]
-        # exactly once: no pre-kill line replayed, no post-kill line lost
-        assert sorted(rows) == sorted(part1 + part2)
-    finally:
-        if q is not None:
-            q.stop()
-        server.shutdown()
-        server.server_close()
-
-

@@ -11,10 +11,11 @@ original round-2 number): the point is an end-to-end lower bound on
 what one box pushes through the full typed Silver projection, not a
 parser microbenchmark.
 
-Two source-inclusive modes serve the same lines over localhost TCP:
+The source-inclusive ``jvm`` mode serves the same lines over localhost
+TCP, sharded over ``n_receivers`` servers, through the ``sbs1-jvm``
+source (``n_receivers`` 1 is the CLI's ``-l/-p`` shape):
 
-    python tools/ingest_bench.py source [n_rows]             # sbs1, one feed
-    python tools/ingest_bench.py jvm [n_rows] [n_receivers]  # sbs1-jvm
+    python tools/ingest_bench.py jvm [n_rows] [n_receivers]
 """
 
 from __future__ import annotations
@@ -84,123 +85,6 @@ def main() -> None:
                 "n_rows": n,
                 "seconds": round(sec, 3),
                 "cpus": int(cpus),
-            }
-        )
-    )
-    spark.stop()
-
-
-def source_main() -> None:
-    """Source-INCLUSIVE throughput (VERDICT r5 #6): the same
-    deterministic MSG,3 lines, but delivered over a real localhost TCP
-    socket through the production ``sbs1`` streaming source
-    (connect/recv/carry-buffer framing/ingest_ts stamping) into
-    ``parse_lines`` -> ``silver`` under Structured Streaming. This
-    bounds the whole ingest path, not just the typed projection: the
-    sbs1 reader is a driver-side SimpleDataSourceStreamReader (one
-    socket == one receiver, SURVEY.md §3.2), so its drain loop is
-    single-threaded by design and the number here is expected to sit
-    well below the parallel parse-path figure -- that is the point of
-    recording it separately.
-
-        python tools/ingest_bench.py source [n_rows]
-    """
-    import socket
-    import threading
-
-    n = int(sys.argv[2]) if len(sys.argv) > 2 else 2_000_000
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_spark(
-        master=f"local[{cpus}]",
-        app_name="ingest_bench_source",
-        shuffle_partitions=int(cpus),
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-
-    events = synth_events(spark, n, int(cpus))
-    payload = (
-        "\n".join(
-            sbs1_lines_from_events(events).toPandas()["value"]
-        ).encode()
-        + b"\n"
-    )
-
-    server = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
-    server.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
-    server.bind(("127.0.0.1", 0))
-    server.listen(1)
-    port = server.getsockname()[1]
-
-    def serve() -> None:
-        conn, _ = server.accept()
-        try:
-            conn.sendall(payload)
-            # keep the socket open: an EOF would trigger the reader's
-            # reconnect loop mid-measurement
-            conn.recv(1)  # blocks until the bench closes the server
-        except OSError:
-            pass
-        finally:
-            conn.close()
-
-    threading.Thread(target=serve, daemon=True).start()
-
-    from dump1090_stream_parser_spark.sources import sbs1_source
-
-    sbs1_source.register(spark)
-    bronze = (
-        spark.readStream.format("sbs1")
-        .option("location", "127.0.0.1")
-        .option("port", str(port))
-        .option("max_lines_per_batch", "1000000")
-        .load()
-    )
-    sq = silver(parse_lines(bronze, parsed_time=F.col("ingest_ts")))
-
-    got = {"rows": 0}
-    lock = threading.Lock()
-
-    def count_batch(df, _epoch) -> None:
-        c = df.count()
-        with lock:
-            got["rows"] += c
-
-    import tempfile
-
-    t0 = time.perf_counter()
-    query = (
-        sq.writeStream.foreachBatch(count_batch)
-        .option(
-            "checkpointLocation",
-            tempfile.mkdtemp(prefix="ingest_bench_src_"),
-        )
-        .trigger(processingTime="0 seconds")
-        .start()
-    )
-    deadline = time.time() + 600
-    while time.time() < deadline:
-        with lock:
-            if got["rows"] >= n:
-                break
-        time.sleep(0.2)
-    sec = time.perf_counter() - t0
-    query.stop()
-    server.close()
-    assert got["rows"] >= n, f"stream delivered {got['rows']}/{n} rows"
-    print(
-        json.dumps(
-            {
-                "metric": "silver_ingest_source_rows_per_sec",
-                "value": round(n / sec),
-                "unit": "rows/sec",
-                "n_rows": n,
-                "seconds": round(sec, 3),
-                "cpus": int(cpus),
-                "note": (
-                    "end-to-end incl. TCP socket drain + streaming "
-                    "micro-batches; single receiver by design"
-                ),
             }
         )
     )
@@ -329,9 +213,7 @@ def jvm_main() -> None:
 
 
 if __name__ == "__main__":
-    if len(sys.argv) > 1 and sys.argv[1] == "source":
-        source_main()
-    elif len(sys.argv) > 1 and sys.argv[1] == "jvm":
+    if len(sys.argv) > 1 and sys.argv[1] == "jvm":
         jvm_main()
     else:
         main()

@@ -13,11 +13,12 @@ this flag is the local proof that it does.
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 import traceback
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from dump1090_stream_parser_spark.session import get_spark
 from dump1090_stream_parser_spark.testing import compare, duckdb_oracle

@@ -22,7 +22,8 @@ import json
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -90,11 +91,7 @@ EXEC_PINNED = (
 
 
 #: The pinned executed-stage records, regenerated with ``--executed``.
-EXEC_SNAPSHOT_PATH = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "docs",
-    "PLAN_SNAPSHOT_EXEC.json",
-)
+EXEC_SNAPSHOT_PATH = os.path.join(REPO, "docs", "PLAN_SNAPSHOT_EXEC.json")
 
 
 def exec_pinned_names() -> list[str]:

@@ -14,11 +14,12 @@ bit-equality of the RocksDB run (tests/test_novelty_stream.py).
 from __future__ import annotations
 
 import json
+import os
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 ROCKSDB = (
     "org.apache.spark.sql.execution.streaming.state."

@@ -24,7 +24,8 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SRC = "/root/testdata/sf0.1"
 
@@ -1528,7 +1529,7 @@ def pq_main() -> None:
 
     cents = (
         pq_pa.read_table(
-            "/root/repo/fixtures/ivf_centroids.parquet"
+            os.path.join(REPO, "fixtures", "ivf_centroids.parquet")
         )
         .to_pandas()
         .sort_values("cell_id")
@@ -1537,7 +1538,7 @@ def pq_main() -> None:
     cell_ids = cents["cell_id"].to_numpy()
 
     cb = (
-        pq_pa.read_table("/root/repo/fixtures/pq_codebook.parquet")
+        pq_pa.read_table(os.path.join(REPO, "fixtures", "pq_codebook.parquet"))
         .to_pandas()
         .sort_values(["m", "code_id"])
     )

@@ -25,9 +25,13 @@ Usage: python tools/train_quantizer.py [sf_dir] [out_path]
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+#: Where the trained quantizers are committed.
+FIXTURES = os.path.join(REPO, "fixtures")
 
 
 def _load_embeddings(sf_dir: str):
@@ -201,17 +205,17 @@ def main() -> int:
             sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.01",
             sys.argv[3]
             if len(sys.argv) > 3
-            else "/root/repo/fixtures/pq_codebook.parquet",
+            else os.path.join(FIXTURES, "pq_codebook.parquet"),
         )
     if len(sys.argv) > 1 and sys.argv[1] == "opq":
         return train_opq(
             sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.01",
             sys.argv[3]
             if len(sys.argv) > 3
-            else "/root/repo/fixtures/opq_rotation.parquet",
+            else os.path.join(FIXTURES, "opq_rotation.parquet"),
             sys.argv[4]
             if len(sys.argv) > 4
-            else "/root/repo/fixtures/opq_codebook.parquet",
+            else os.path.join(FIXTURES, "opq_codebook.parquet"),
         )
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -229,7 +233,7 @@ def main() -> int:
     out = (
         sys.argv[2]
         if len(sys.argv) > 2
-        else "/root/repo/fixtures/ivf_centroids.parquet"
+        else os.path.join(FIXTURES, "ivf_centroids.parquet")
     )
     spark = get_spark(master="local[8]", shuffle_partitions=16)
     spark.sparkContext.setLogLevel("ERROR")
