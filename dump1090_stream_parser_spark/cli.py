@@ -23,6 +23,8 @@ Option mapping (reference -> here):
 from __future__ import annotations
 
 import argparse
+import signal
+import threading
 
 
 def build_parser() -> argparse.ArgumentParser:
@@ -127,10 +129,27 @@ def main(argv: list[str] | None = None) -> None:
             .start()
         )
 
+    # Ctrl-C / SIGTERM: flag the stop, then stop the query from a
+    # thread -- the main thread is inside a py4j awaitTermination call,
+    # and a default KeyboardInterrupt there surfaces as a query failure
+    # that supervise() would restart
+    stop = threading.Event()
+
+    def stop_queries() -> None:
+        for query in spark.streams.active:
+            query.stop()
+
+    def on_signal(signum, frame) -> None:
+        stop.set()
+        threading.Thread(target=stop_queries, daemon=True).start()
+
+    signal.signal(signal.SIGINT, on_signal)
+    signal.signal(signal.SIGTERM, on_signal)
     supervise(
         start,
         attempt_limit=args.connect_attempt_limit,
         delay=args.connect_attempt_delay,
+        stop=stop,
     )
 
 

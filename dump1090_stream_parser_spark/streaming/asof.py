@@ -16,7 +16,8 @@ look it up when an event arrives. That is exactly
   stream-stream join state, no watermark coupling;
 - within a micro-batch the group's rows sort by (ts, tiebreak), and a
   running scan emits each event with the latest reference value at or
-  before it; state persists (last_ts, last_value) across batches;
+  before it; state persists (last_ts, last_value) across batches
+  (``streaming/fold.py`` owns the state protocol);
 - state is TWO scalars per key -- bounded regardless of stream length
   (the interval-join alternative buffers a watermark-wide window of
   BOTH sides).
@@ -31,12 +32,11 @@ the same append-mode semantics every streaming enrichment has.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from .fold import fold_stream
 
 _STATE_SCHEMA = "last_ts double, last_value double"
 
@@ -45,19 +45,8 @@ ASOF_OUTPUT_SCHEMA = (
 )
 
 
-def _update(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    if state.hasTimedOut:  # pragma: no cover - TTL not enabled here
-        state.remove()
-        return
-    if state.exists:
-        last_ts, last_value = state.get
-    else:
-        last_ts, last_value = None, None
-
-    (k,) = key
-    batch = pd.concat(list(pdfs), ignore_index=True)
+def _step(key: tuple, batch: pd.DataFrame, state: tuple | None):
+    last_ts, last_value = (None, None) if state is None else state
     # One per-key ordering for the whole micro-batch: event time, then
     # ID (matching the batch as-of join's tie rule -- a same-timestamp
     # reference counts only if its id <= the event's id; ids are unique
@@ -89,16 +78,14 @@ def _update(
             out_ts.append(ts)
             out_val.append(last_value)
 
-    state.update((last_ts, last_value))
-    if out_id:
-        yield pd.DataFrame(
-            {
-                "key": [int(k)] * len(out_id),
-                "event_id": out_id,
-                "ts": out_ts,
-                "asof_value": pd.array(out_val, dtype="float64"),
-            }
-        )
+    return (last_ts, last_value), pd.DataFrame(
+        {
+            "key": [int(key[0])] * len(out_id),
+            "event_id": out_id,
+            "ts": out_ts,
+            "asof_value": pd.array(out_val, dtype="float64"),
+        }
+    )
 
 
 def asof_enrich(
@@ -128,10 +115,6 @@ def asof_enrich(
         F.col(ts_col).alias("ts"),
         F.lit(None).cast("double").alias("value"),
     )
-    return r.unionByName(e).groupBy("key").applyInPandasWithState(
-        _update,
-        outputStructType=ASOF_OUTPUT_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return fold_stream(
+        r.unionByName(e), ["key"], _step, _STATE_SCHEMA, ASOF_OUTPUT_SCHEMA
     )

@@ -23,38 +23,26 @@ and state carry across a checkpoint restart.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..operators.inference import auc_tail, model_score_expr
+from .fold import latest, versioned_stream
 
-_STATE_SCHEMA = "cp long, cn long, ver long"
+_STATE_SCHEMA = "cp long, cn long"
 
-AUC_OUTPUT_SCHEMA = "score double, cp long, cn long, ver long"
+AUC_OUTPUT_SCHEMA = "score double, cp long, cn long"
 
 
-def _fold(
-    key: tuple,
-    batches: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    if state.exists:
-        cp, cn, ver = state.get
-    else:
-        cp, cn, ver = 0, 0, 0
-    for pdf in batches:
-        pos = pdf["pos"].to_numpy()
-        cp += int((pos == 1).sum())
-        cn += int((pos == 0).sum())
-    ver += 1
-    state.update((cp, cn, ver))
-    yield pd.DataFrame(
-        {"score": [key[0]], "cp": [cp], "cn": [cn], "ver": [ver]}
-    )
+def _fold(key: tuple, rows: pd.DataFrame, acc: tuple | None) -> tuple:
+    cp, cn = (0, 0) if acc is None else acc
+    pos = rows["pos"].to_numpy()
+    return cp + int((pos == 1).sum()), cn + int((pos == 0).sum())
+
+
+def _emit(key: tuple, acc: tuple) -> pd.DataFrame:
+    return pd.DataFrame({"score": [key[0]], "cp": [acc[0]], "cn": [acc[1]]})
 
 
 def auc_stream(stream: DataFrame, score_grain: int | None = None) -> DataFrame:
@@ -80,24 +68,12 @@ def auc_stream(stream: DataFrame, score_grain: int | None = None) -> DataFrame:
         score.alias("score"),
         F.when(F.col("lang") == "en", 1).otherwise(0).alias("pos"),
     )
-    return t.groupBy("score").applyInPandasWithState(
-        _fold,
-        outputStructType=AUC_OUTPUT_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return versioned_stream(
+        t, ["score"], _fold, _emit, _STATE_SCHEMA, AUC_OUTPUT_SCHEMA
     )
 
 
 def auc_from_state(raw: DataFrame) -> DataFrame:
     """Current AUC from the append-mode output: max-ver snapshot per
     score through the batch operator's auc_tail."""
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("score").orderBy(F.desc("ver"))
-    latest = (
-        raw.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("score", "cp", "cn")
-    )
-    return auc_tail(latest)
+    return auc_tail(latest(raw, ["score"]))

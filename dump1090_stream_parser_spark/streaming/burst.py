@@ -24,7 +24,6 @@ twin's discipline), so stream rows hash-compare with batch rows.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 from datetime import date, timedelta
 from decimal import ROUND_HALF_UP, Decimal
 from math import sqrt
@@ -32,9 +31,9 @@ from math import sqrt
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..operators.timeseries import BURST_WINDOW, BURST_Z
+from .fold import fold_stream
 
 _STATE_SCHEMA = "open_day long, open_cnt long, hist array<long>"
 
@@ -67,26 +66,12 @@ def _score(c: int, hist: list[int]) -> tuple[float, float | None, bool]:
     return mean, None, False
 
 
-def _update(
-    key: tuple,
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    if state.hasTimedOut:  # pragma: no cover - NoTimeout below
-        state.remove()
-        return
-
-    if state.exists:
-        open_day, open_cnt, hist = state.get
-        open_day = int(open_day)
-        open_cnt = int(open_cnt)
-        hist = [int(v) for v in hist]
-    else:
+def _step(key: tuple, rows: pd.DataFrame, state: tuple | None):
+    if state is None:
         open_day, open_cnt, hist = None, 0, []
-
-    rows = pd.concat(list(pdfs), ignore_index=True)
-    if not len(rows):
-        return
+    else:
+        open_day, open_cnt = int(state[0]), int(state[1])
+        hist = [int(v) for v in state[2]]
     days = (
         rows["ts"].dt.normalize().map(lambda t: (t.date() - _EPOCH).days)
     )
@@ -129,25 +114,19 @@ def _update(
                 hist = hist[-BURST_WINDOW:]
         open_day, open_cnt = day_int, cnt
 
-    state.update((open_day, open_cnt, [int(v) for v in hist]))
-    if out["event_type"]:
-        yield pd.DataFrame(out)
+    return (open_day, open_cnt, hist), pd.DataFrame(out)
 
 
 def burst_stream(event_stream: DataFrame) -> DataFrame:
     """Per-type burst alerts over a stream of (event_type, ts) rows:
     one scored row per CLOSED calendar day with a full trailing
     baseline, emitted the moment a later day opens."""
-    return (
-        event_stream.select("event_type", "ts")
-        .groupBy("event_type")
-        .applyInPandasWithState(
-            _update,
-            outputStructType=BURST_OUTPUT_SCHEMA,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return fold_stream(
+        event_stream.select("event_type", "ts"),
+        ["event_type"],
+        _step,
+        _STATE_SCHEMA,
+        BURST_OUTPUT_SCHEMA,
     )
 
 

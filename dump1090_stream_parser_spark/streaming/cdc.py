@@ -25,69 +25,57 @@ them (the streaming KMV precedent for caller-side NULL policy).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from .fold import latest, versioned_stream
 
 _STATE_SCHEMA = (
     "n_ops long, n_deletes long, last_op string, val double,"
-    " ts_us long, event_id long, ver long"
+    " ts_us long, event_id long"
 )
 
 CDC_OUTPUT_SCHEMA = (
     "user_id long, n_ops long, n_deletes long, last_op string,"
-    " current_value double, last_ts timestamp, ver long"
+    " current_value double, last_ts timestamp"
 )
 
+_LIVE_COLS = [
+    "user_id", "n_ops", "n_deletes", "last_op", "current_value", "last_ts"
+]
 
-def _update(
-    key: tuple,
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    if state.hasTimedOut:  # pragma: no cover - NoTimeout below
-        state.remove()
-        return
 
-    rows = pd.concat(list(pdfs), ignore_index=True)
-    if not len(rows):
-        return
-
-    if state.exists:
-        n_ops, n_deletes, last_op, val, ts_us, event_id, ver = state.get
-        n_ops, n_deletes = int(n_ops), int(n_deletes)
-        ts_us, event_id, ver = int(ts_us), int(event_id), int(ver)
-    else:
-        n_ops = n_deletes = ver = 0
+def _fold(key: tuple, rows: pd.DataFrame, acc: tuple | None) -> tuple:
+    if acc is None:
+        n_ops = n_deletes = 0
         last_op, val, ts_us, event_id = None, float("nan"), -1, -1
-
-    n_ops += len(rows)
-    n_deletes += int((rows["op"] == "D").sum())
+    else:
+        n_ops, n_deletes, last_op, val, ts_us, event_id = acc
+    n_ops = int(n_ops) + len(rows)
+    n_deletes = int(n_deletes) + int((rows["op"] == "D").sum())
     # argmax over the data-carried total order -- arrival order is
     # irrelevant, which is what makes the state a mergeable lattice
     us = rows["ts"].astype("int64") // 1000
     best = rows.assign(_us=us).sort_values(["_us", "event_id"]).iloc[-1]
-    if (int(best["_us"]), int(best["event_id"])) > (ts_us, event_id):
+    if (int(best["_us"]), int(best["event_id"])) > (int(ts_us), int(event_id)):
         last_op = str(best["op"])
         val = float(best["value"])
         ts_us = int(best["_us"])
         event_id = int(best["event_id"])
-    ver += 1
-    state.update(
-        (n_ops, n_deletes, last_op, val, ts_us, event_id, ver)
-    )
-    yield pd.DataFrame(
+    return n_ops, n_deletes, last_op, val, ts_us, event_id
+
+
+def _emit(key: tuple, acc: tuple) -> pd.DataFrame:
+    n_ops, n_deletes, last_op, val, ts_us, _ = acc
+    return pd.DataFrame(
         {
             "user_id": [key[0]],
             "n_ops": [n_ops],
             "n_deletes": [n_deletes],
             "last_op": [last_op],
             "current_value": [val],
-            "last_ts": [pd.Timestamp(ts_us * 1000)],
-            "ver": [ver],
+            "last_ts": [pd.Timestamp(int(ts_us) * 1000)],
         }
     )
 
@@ -97,16 +85,13 @@ def cdc_stream(log_stream: DataFrame) -> DataFrame:
     op, value) changelog rows. Emits one row per (key, micro-batch
     that touched it); the current live table is :func:`latest_cdc`
     over the sink."""
-    return (
-        log_stream.select("user_id", "ts", "event_id", "op", "value")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _update,
-            outputStructType=CDC_OUTPUT_SCHEMA,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return versioned_stream(
+        log_stream.select("user_id", "ts", "event_id", "op", "value"),
+        ["user_id"],
+        _fold,
+        _emit,
+        _STATE_SCHEMA,
+        CDC_OUTPUT_SCHEMA,
     )
 
 
@@ -154,30 +139,15 @@ def live_cdc_snapshot(spark, table_dir: str, version: int | None = None):
     return (
         read_snapshot(spark, table_dir, version=version)
         .filter(F.col("last_op") != "D")
-        .select(
-            "user_id",
-            "n_ops",
-            "n_deletes",
-            "last_op",
-            "current_value",
-            "last_ts",
-        )
+        .select(*_LIVE_COLS)
     )
 
 
 def latest_cdc(rows: DataFrame) -> DataFrame:
     """Batch helper over an emitted-rows sink: each key's max-``ver``
     emission with tombstones dropped, shaped like q_cdc_apply."""
-    latest = rows.groupBy("user_id").agg(F.max("ver").alias("ver"))
     return (
-        rows.join(latest, ["user_id", "ver"])
+        latest(rows, ["user_id"])
         .filter(F.col("last_op") != "D")
-        .select(
-            "user_id",
-            "n_ops",
-            "n_deletes",
-            "last_op",
-            "current_value",
-            "last_ts",
-        )
+        .select(*_LIVE_COLS)
     )

@@ -19,43 +19,24 @@ checkpoint restart.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..operators.pipeline_ops import compaction_plan_from_inventory
+from .fold import latest, versioned_stream
 
-_STATE_SCHEMA = "size_rows long, ver long"
+_STATE_SCHEMA = "size_rows long"
 
-COMPACT_OUTPUT_SCHEMA = (
-    "d timestamp, hr int, size_rows long, ver long"
-)
+COMPACT_OUTPUT_SCHEMA = "d timestamp, hr int, size_rows long"
 
 
-def _fold(
-    key: tuple,
-    batches: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    if state.exists:
-        size, ver = state.get
-    else:
-        size, ver = 0, 0
-    for pdf in batches:
-        size += int(len(pdf))
-    ver += 1
-    state.update((size, ver))
-    yield pd.DataFrame(
-        {
-            "d": [key[0]],
-            "hr": [key[1]],
-            "size_rows": [size],
-            "ver": [ver],
-        }
-    )
+def _fold(key: tuple, rows: pd.DataFrame, acc: tuple | None) -> tuple:
+    return ((0 if acc is None else acc[0]) + len(rows),)
+
+
+def _emit(key: tuple, acc: tuple) -> pd.DataFrame:
+    return pd.DataFrame({"d": [key[0]], "hr": [key[1]], "size_rows": [acc[0]]})
 
 
 def compaction_stream(stream: DataFrame) -> DataFrame:
@@ -65,24 +46,12 @@ def compaction_stream(stream: DataFrame) -> DataFrame:
         F.date_trunc("day", "ts").alias("d"),
         F.hour("ts").alias("hr"),
     )
-    return keyed.groupBy("d", "hr").applyInPandasWithState(
-        _fold,
-        outputStructType=COMPACT_OUTPUT_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return versioned_stream(
+        keyed, ["d", "hr"], _fold, _emit, _STATE_SCHEMA, COMPACT_OUTPUT_SCHEMA
     )
 
 
 def plan_from_state(raw: DataFrame) -> DataFrame:
     """Current compaction plan: max-ver fragment sizes through the
     batch operator's packing stages."""
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("d", "hr").orderBy(F.desc("ver"))
-    latest = (
-        raw.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("d", "hr", "size_rows")
-    )
-    return compaction_plan_from_inventory(latest)
+    return compaction_plan_from_inventory(latest(raw, ["d", "hr"]))

@@ -39,64 +39,48 @@ the over-count guarantee, and state survival across a query restart.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..operators.pipeline_ops import CMS_DEPTH, CMS_WIDTH, cms_bucket
+from .fold import latest, versioned_stream
 
 #: Counters per state row. depth * width / block_w state groups total
 #: (32 at the defaults) -- the stateful stage's parallelism unit.
 CMS_BLOCK_W = 64
 
-_STATE_SCHEMA = "cnts array<long>, ver long"
+_STATE_SCHEMA = "cnts array<long>"
 
-CMS_OUTPUT_SCHEMA = "j int, block int, bucket long, c long, ver long"
+CMS_OUTPUT_SCHEMA = "j int, block int, bucket long, c long"
 
 
-def _make_update(block_w: int):
-    """Bind ``block_w`` at plan time (the state fn gets no side channel)."""
+def _make_fold(block_w: int):
+    """Bind ``block_w`` at plan time (the fold gets no side channel)."""
 
-    def _update(
-        key: tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:  # pragma: no cover - NoTimeout below
-            state.remove()
-            return
+    def fold(key: tuple, rows: pd.DataFrame, acc: tuple | None) -> tuple:
+        cnts = np.zeros(block_w, np.int64)
+        if acc is not None:
+            cnts += np.asarray(acc[0], np.int64)
+        vc = rows["slot"].value_counts()
+        cnts[vc.index.to_numpy()] += vc.to_numpy()
+        return ([int(c) for c in cnts],)
 
+    def emit(key: tuple, acc: tuple) -> pd.DataFrame:
         j, block = key
-        if state.exists:
-            cnts_raw, ver = state.get
-            cnts = np.asarray(cnts_raw, dtype=np.int64)
-            ver = int(ver or 0)
-        else:
-            cnts = np.zeros(block_w, dtype=np.int64)
-            ver = 0
-
-        for pdf in pdfs:
-            vc = pdf["slot"].value_counts()
-            cnts[vc.index.to_numpy()] += vc.to_numpy()
-
-        ver += 1
-        state.update(([int(c) for c in cnts], ver))
+        cnts = np.asarray(acc[0], np.int64)
         nz = np.flatnonzero(cnts)
-        yield pd.DataFrame(
+        return pd.DataFrame(
             {
                 "j": np.full(len(nz), j, dtype=np.int32),
                 "block": np.full(len(nz), block, dtype=np.int32),
                 "bucket": block * block_w + nz,
                 "c": cnts[nz],
-                "ver": np.full(len(nz), ver, dtype=np.int64),
             }
         )
 
-    return _update
+    return fold, emit
 
 
 def countmin_stream(
@@ -136,12 +120,9 @@ def countmin_stream(
     # depth * width counters (a few KiB) independent of stream length
     # AND of key cardinality. Evicting a block would silently zero its
     # counters and void the over-count guarantee.
-    return keyed.groupBy("j", "block").applyInPandasWithState(
-        _make_update(block_w),
-        outputStructType=CMS_OUTPUT_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return versioned_stream(
+        keyed, ["j", "block"], *_make_fold(block_w), _STATE_SCHEMA,
+        CMS_OUTPUT_SCHEMA,
     )
 
 
@@ -149,7 +130,4 @@ def latest_cells(rows: DataFrame) -> DataFrame:
     """Batch helper over an emitted-rows sink: reduce to each block's
     max-``ver`` emission (the current global grid), shaped like the
     batch ``countmin_cells`` output -- (j, bucket, c) nonzero cells."""
-    latest = rows.groupBy("j", "block").agg(F.max("ver").alias("ver"))
-    return rows.join(latest, ["j", "block", "ver"]).select(
-        "j", "bucket", "c"
-    )
+    return latest(rows, ["j", "block"]).select("j", "bucket", "c")

@@ -30,55 +30,42 @@ third file.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..operators.pipeline_ops import (
     DIGEST_BUCKETS,
     DIGEST_SUM_MOD,
     digest_row_hash,
 )
+from .fold import latest, versioned_stream
 
-_STATE_SCHEMA = "n long, x long, s long, ver long"
+_STATE_SCHEMA = "n long, x long, s long"
 
 DIGEST_OUTPUT_SCHEMA = (
-    "bucket long, n_rows long, xor_digest long, sum_digest long, ver long"
+    "bucket long, n_rows long, xor_digest long, sum_digest long"
 )
 
 
-def _fold(
-    key: tuple,
-    batches: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    if state.exists:
-        n, x, s, ver = state.get
-    else:
-        n, x, s, ver = 0, 0, 0, 0
-    for pdf in batches:
-        hs = pdf["h"].to_numpy()
-        n += int(len(hs))
-        if len(hs):
-            # XOR is overflow-free in int64 -- vectorized reduce; the
-            # SUM is not (60-bit hashes wrap past ~8e3 rows), so it
-            # folds in arbitrary-precision Python ints
-            import numpy as np
+def _fold(key: tuple, rows: pd.DataFrame, acc: tuple | None) -> tuple:
+    n, x, s = (0, 0, 0) if acc is None else acc
+    hs = rows["h"].to_numpy()
+    # XOR is overflow-free in int64 -- vectorized reduce; the SUM is
+    # not (60-bit hashes wrap past ~8e3 rows), so it folds in
+    # arbitrary-precision Python ints
+    x ^= int(np.bitwise_xor.reduce(hs))
+    s = (s + sum(int(v) for v in hs)) % DIGEST_SUM_MOD
+    return n + len(hs), x, s
 
-            x ^= int(np.bitwise_xor.reduce(hs))
-            s = (s + int(sum(int(v) for v in hs))) % DIGEST_SUM_MOD
-    ver += 1
-    state.update((n, x, s, ver))
-    yield pd.DataFrame(
+
+def _emit(key: tuple, acc: tuple) -> pd.DataFrame:
+    return pd.DataFrame(
         {
             "bucket": [key[0]],
-            "n_rows": [n],
-            "xor_digest": [x],
-            "sum_digest": [s],
-            "ver": [ver],
+            "n_rows": [acc[0]],
+            "xor_digest": [acc[1]],
+            "sum_digest": [acc[2]],
         }
     )
 
@@ -90,23 +77,12 @@ def digest_stream(stream: DataFrame) -> DataFrame:
     keyed = stream.select(
         (h % DIGEST_BUCKETS).alias("bucket"), h.alias("h")
     )
-    return keyed.groupBy("bucket").applyInPandasWithState(
-        _fold,
-        outputStructType=DIGEST_OUTPUT_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return versioned_stream(
+        keyed, ["bucket"], _fold, _emit, _STATE_SCHEMA, DIGEST_OUTPUT_SCHEMA
     )
 
 
 def latest_digest(raw: DataFrame) -> DataFrame:
     """Current digest table from the append-mode output: max-ver row
     per bucket."""
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("bucket").orderBy(F.desc("ver"))
-    return (
-        raw.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("bucket", "n_rows", "xor_digest", "sum_digest")
-    )
+    return latest(raw, ["bucket"])

@@ -25,58 +25,30 @@ and a checkpoint restart).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..operators.statistics import ks_pairs_from_counts
+from .fold import latest, versioned_stream
 
-_STATE_SCHEMA = "vals array<long>, cnts array<long>, ver long"
+_STATE_SCHEMA = "vals array<long>, cnts array<long>"
 
-DRIFT_OUTPUT_SCHEMA = (
-    "grp string, ver long, n long,"
-    " vals array<long>, cnts array<long>"
-)
+DRIFT_OUTPUT_SCHEMA = "grp string, n long, vals array<long>, cnts array<long>"
 
 
-def _update(
-    key: tuple,
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    if state.hasTimedOut:  # pragma: no cover - NoTimeout below
-        state.remove()
-        return
-
-    if state.exists:
-        vals, cnts, ver = state.get
-        hist = dict(zip((int(v) for v in vals), (int(c) for c in cnts)))
-        ver = int(ver)
-    else:
-        hist, ver = {}, 0
-
-    rows = pd.concat(list(pdfs), ignore_index=True)
-    if not len(rows):
-        return
+def _fold(key: tuple, rows: pd.DataFrame, acc: tuple | None) -> tuple:
+    hist = {} if acc is None else dict(zip(map(int, acc[0]), map(int, acc[1])))
     for v, c in rows["v"].value_counts().items():
-        v = int(v)
-        hist[v] = hist.get(v, 0) + int(c)
-    ver += 1
+        hist[int(v)] = hist.get(int(v), 0) + int(c)
     ordered = sorted(hist)
-    state.update(
-        (ordered, [hist[v] for v in ordered], ver)
-    )
-    yield pd.DataFrame(
-        {
-            "grp": [key[0]],
-            "ver": [ver],
-            "n": [sum(hist.values())],
-            "vals": [ordered],
-            "cnts": [[hist[v] for v in ordered]],
-        }
+    return ordered, [hist[v] for v in ordered]
+
+
+def _emit(key: tuple, acc: tuple) -> pd.DataFrame:
+    vals, cnts = acc
+    return pd.DataFrame(
+        {"grp": [key[0]], "n": [sum(cnts)], "vals": [vals], "cnts": [cnts]}
     )
 
 
@@ -84,16 +56,13 @@ def drift_stream(value_stream: DataFrame) -> DataFrame:
     """Versioned per-cohort histogram snapshots over a stream of
     (grp, v) rows -- v an exact integer (cent-scale money upstream).
     Feed the sink's latest snapshots to :func:`ks_from_snapshots`."""
-    return (
-        value_stream.select("grp", "v")
-        .groupBy("grp")
-        .applyInPandasWithState(
-            _update,
-            outputStructType=DRIFT_OUTPUT_SCHEMA,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return versioned_stream(
+        value_stream.select("grp", "v"),
+        ["grp"],
+        _fold,
+        _emit,
+        _STATE_SCHEMA,
+        DRIFT_OUTPUT_SCHEMA,
     )
 
 
@@ -102,9 +71,8 @@ def ks_from_snapshots(rows: DataFrame) -> DataFrame:
     explode the histograms back to the (grp, v, cnt) collapse and run
     ks_pairs_from_counts -- the batch query's OWN pair stage, so the
     result is bit-identical to q_ks_test over the same data."""
-    latest = rows.groupBy("grp").agg(F.max("ver").alias("ver"))
     c = (
-        rows.join(latest, ["grp", "ver"])
+        latest(rows, ["grp"])
         .select(
             "grp",
             F.explode(F.arrays_zip("vals", "cnts")).alias("e"),

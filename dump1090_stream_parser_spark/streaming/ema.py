@@ -26,21 +26,17 @@ batch q_ema row for the same prefix.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 from decimal import ROUND_HALF_UP, Decimal
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..operators.timeseries import EMA_ALPHA
+from .fold import latest, versioned_stream
 
-_STATE_SCHEMA = "ema double, n long, ver long"
+_STATE_SCHEMA = "ema double, n long"
 
-EMA_OUTPUT_SCHEMA = (
-    "user_id long, n_events long, ema_value double, ver long"
-)
+EMA_OUTPUT_SCHEMA = "user_id long, n_events long, ema_value double"
 
 
 def _round6(x: float) -> float:
@@ -51,26 +47,11 @@ def _round6(x: float) -> float:
     )
 
 
-def _update(
-    key: tuple,
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    if state.hasTimedOut:  # pragma: no cover - NoTimeout below
-        state.remove()
-        return
-
-    if state.exists:
-        ema, n, ver = state.get
-        n = int(n)
-        ver = int(ver)
-    else:
-        ema, n, ver = None, 0, 0
-
-    rows = pd.concat(list(pdfs), ignore_index=True)
+def _fold(key: tuple, rows: pd.DataFrame, acc: tuple | None):
+    ema, n = (None, 0) if acc is None else (acc[0], int(acc[1]))
     rows = rows[rows["value"].notna()]
     if not len(rows):
-        return
+        return None
     rows = rows.sort_values(["ts", "event_id"])
     one_minus = 1.0 - EMA_ALPHA
     for x in rows["value"]:
@@ -78,15 +59,15 @@ def _update(
         # the batch fold's exact op sequence: NULL-seed, then one
         # multiply-add chain per row (no FMA on either engine)
         ema = x if ema is None else ema * one_minus + EMA_ALPHA * x
-    n += len(rows)
-    ver += 1
-    state.update((float(ema), n, ver))
-    yield pd.DataFrame(
+    return float(ema), n + len(rows)
+
+
+def _emit(key: tuple, acc: tuple) -> pd.DataFrame:
+    return pd.DataFrame(
         {
             "user_id": [key[0]],
-            "n_events": [n],
-            "ema_value": [_round6(float(ema))],
-            "ver": [ver],
+            "n_events": [acc[1]],
+            "ema_value": [_round6(acc[0])],
         }
     )
 
@@ -95,23 +76,19 @@ def ema_stream(event_stream: DataFrame) -> DataFrame:
     """Running per-user EMA over a stream of (user_id, ts, event_id,
     value) rows. Emits one row per (key, micro-batch that touched it);
     the current table is :func:`latest_ema` over the sink."""
-    return (
-        event_stream.select("user_id", "ts", "event_id", "value")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _update,
-            outputStructType=EMA_OUTPUT_SCHEMA,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return versioned_stream(
+        event_stream.select("user_id", "ts", "event_id", "value"),
+        ["user_id"],
+        _fold,
+        _emit,
+        _STATE_SCHEMA,
+        EMA_OUTPUT_SCHEMA,
     )
 
 
 def latest_ema(rows: DataFrame) -> DataFrame:
     """Batch helper over an emitted-rows sink: each key's max-``ver``
     emission, shaped like q_ema's output."""
-    latest = rows.groupBy("user_id").agg(F.max("ver").alias("ver"))
-    return rows.join(latest, ["user_id", "ver"]).select(
+    return latest(rows, ["user_id"]).select(
         "user_id", "n_events", "ema_value"
     )

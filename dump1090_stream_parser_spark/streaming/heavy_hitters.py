@@ -32,15 +32,13 @@ the bucket's distinct-key count the summary is EXACT
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..functions.hashing import portable_hash64
 from ..functions.sketches import mg_merge
+from .fold import latest, versioned_stream
 
 #: Key-space parallelism: buckets are the stateful-stage partitioning
 #: unit, so throughput scales to min(N_HH_BUCKETS, cores).
@@ -50,61 +48,43 @@ N_HH_BUCKETS = 16
 #: volume per batch is <= active_buckets * cap rows).
 HH_STREAM_CAP = 64
 
-_STATE_SCHEMA = "keys array<long>, cnts array<long>, dec long, ver long"
+_STATE_SCHEMA = "keys array<long>, cnts array<long>, dec long"
 
-HH_OUTPUT_SCHEMA = "bucket int, key long, cnt long, dec long, ver long"
+HH_OUTPUT_SCHEMA = "bucket int, key long, cnt long, dec long"
 
 
-def _make_update(cap: int):
-    """Bind ``cap`` at plan time (the state fn gets no side channel)."""
+def _make_fold(cap: int):
+    """Bind ``cap`` at plan time (the fold gets no side channel)."""
 
-    def _update(
-        key: tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:  # pragma: no cover - TTL not enabled here
-            state.remove()
-            return
-
-        if state.exists:
-            keys_raw, cnts_raw, dec, ver = state.get
-            summary = pd.Series(
-                list(cnts_raw or []), index=list(keys_raw or []), dtype="int64"
-            )
-            dec = int(dec or 0)
-            ver = int(ver or 0)
-        else:
-            summary = pd.Series([], dtype="int64")
-            dec, ver = 0, 0
-
-        (bucket,) = key
-        for pdf in pdfs:
-            summary, d = mg_merge(summary, pdf["key"].value_counts(), cap)
-            dec += d
-
-        ver += 1
-        keys = [int(k) for k in summary.index]
-        cnts = [int(c) for c in summary.values]
-        state.update((keys, cnts, dec, ver))
-        # ALWAYS emit on a processed batch -- a decrement can empty the
-        # summary entirely (cap+1 equal counts), and suppressing that
-        # emission would leave max-ver consumers holding a stale summary
-        # whose dec no longer covers the dropped keys. An empty summary
-        # emits one NULL-key ledger row carrying (dec, ver).
-        out_keys = keys if keys else [None]
-        out_cnts = cnts if keys else [0]
-        yield pd.DataFrame(
-            {
-                "bucket": [bucket] * len(out_keys),
-                "key": pd.array(out_keys, dtype="Int64"),
-                "cnt": out_cnts,
-                "dec": [dec] * len(out_keys),
-                "ver": [ver] * len(out_keys),
-            }
+    def fold(key: tuple, rows: pd.DataFrame, acc: tuple | None) -> tuple:
+        keys, cnts, dec = ([], [], 0) if acc is None else acc
+        summary = pd.Series(list(cnts), index=list(keys), dtype="int64")
+        summary, d = mg_merge(summary, rows["key"].value_counts(), cap)
+        return (
+            [int(k) for k in summary.index],
+            [int(c) for c in summary.values],
+            int(dec) + d,
         )
 
-    return _update
+    return fold
+
+
+def _emit(key: tuple, acc: tuple) -> pd.DataFrame:
+    keys, cnts, dec = acc
+    # ALWAYS emit on a processed batch -- a decrement can empty the
+    # summary entirely (cap+1 equal counts), and suppressing that
+    # emission would leave max-ver consumers holding a stale summary
+    # whose dec no longer covers the dropped keys. An empty summary
+    # emits one NULL-key ledger row carrying (dec, ver).
+    out_keys = keys if keys else [None]
+    return pd.DataFrame(
+        {
+            "bucket": [key[0]] * len(out_keys),
+            "key": pd.array(out_keys, dtype="Int64"),
+            "cnt": cnts if keys else [0],
+            "dec": [dec] * len(out_keys),
+        }
+    )
 
 
 def heavy_hitters_stream(
@@ -136,12 +116,9 @@ def heavy_hitters_stream(
     # length and of the number of distinct keys. Evicting a bucket would
     # silently reset its decrement ledger and void the sketch's
     # (count - dec*) error bound.
-    return keyed.groupBy("bucket").applyInPandasWithState(
-        _make_update(cap),
-        outputStructType=HH_OUTPUT_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return versioned_stream(
+        keyed, ["bucket"], _make_fold(cap), _emit, _STATE_SCHEMA,
+        HH_OUTPUT_SCHEMA,
     )
 
 
@@ -150,7 +127,4 @@ def latest_summary(rows: DataFrame) -> DataFrame:
     max-``ver`` summary (the current global sketch). NULL-key rows are
     empty-summary ledger markers (dec/ver only) and are dropped -- the
     dec they carry applies to a summary with no reportable keys."""
-    latest = rows.groupBy("bucket").agg(F.max("ver").alias("ver"))
-    return rows.join(latest, ["bucket", "ver"]).filter(
-        F.col("key").isNotNull()
-    )
+    return latest(rows, ["bucket"]).filter(F.col("key").isNotNull())

@@ -36,58 +36,35 @@ sketch equality across micro-batch splits and a checkpoint restart.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..functions.hashing import portable_hash64
 from ..operators.pipeline_ops import K_KMV
+from .fold import latest, versioned_stream
 
-_STATE_SCHEMA = "mins array<long>, ver long"
+_STATE_SCHEMA = "mins array<long>"
 
-KMV_OUTPUT_SCHEMA = "source string, h long, ver long"
+KMV_OUTPUT_SCHEMA = "source string, h long"
 
 
-def _make_update(k: int):
-    """Bind ``k`` at plan time (the state fn gets no side channel)."""
+def _make_fold(k: int):
+    """Bind ``k`` at plan time (the fold gets no side channel)."""
 
-    def _update(
-        key: tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:  # pragma: no cover - NoTimeout below
-            state.remove()
-            return
+    def fold(key: tuple, rows: pd.DataFrame, acc: tuple | None) -> tuple:
+        mins = np.asarray([] if acc is None else acc[0], dtype=np.int64)
+        h = np.unique(np.concatenate([mins, rows["h"].to_numpy(np.int64)]))
+        return ([int(v) for v in h[:k]],)
 
-        (source,) = key
-        if state.exists:
-            mins_raw, ver = state.get
-            mins = np.asarray(mins_raw, dtype=np.int64)
-            ver = int(ver or 0)
-        else:
-            mins = np.empty(0, dtype=np.int64)
-            ver = 0
+    return fold
 
-        for pdf in pdfs:
-            batch = pdf["h"].to_numpy(dtype=np.int64)
-            mins = np.unique(np.concatenate([mins, batch]))[:k]
 
-        ver += 1
-        state.update(([int(h) for h in mins], ver))
-        yield pd.DataFrame(
-            {
-                "source": [source] * len(mins),
-                "h": mins,
-                "ver": np.full(len(mins), ver, dtype=np.int64),
-            }
-        )
-
-    return _update
+def _emit(key: tuple, acc: tuple) -> pd.DataFrame:
+    return pd.DataFrame(
+        {"source": [key[0]] * len(acc[0]), "h": np.asarray(acc[0], np.int64)}
+    )
 
 
 def kmv_stream(
@@ -122,12 +99,9 @@ def kmv_stream(
         .filter(F.col("k").isNotNull() & (F.col("k") != ""))
         .select("source", portable_hash64(F.col("k")).alias("h"))
     )
-    return keyed.groupBy("source").applyInPandasWithState(
-        _make_update(k),
-        outputStructType=KMV_OUTPUT_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return versioned_stream(
+        keyed, ["source"], _make_fold(k), _emit, _STATE_SCHEMA,
+        KMV_OUTPUT_SCHEMA,
     )
 
 
@@ -135,5 +109,4 @@ def latest_sketch(rows: DataFrame) -> DataFrame:
     """Batch helper over an emitted-rows sink: reduce to each source's
     max-``ver`` emission (the current sketch), shaped like the batch
     query's ``ks`` stage -- (source, h) bottom-k rows."""
-    latest = rows.groupBy("source").agg(F.max("ver").alias("ver"))
-    return rows.join(latest, ["source", "ver"]).select("source", "h")
+    return latest(rows, ["source"]).select("source", "h")

@@ -11,7 +11,7 @@ reference's reconnect loop restarts its socket (Appendix A L155-L166)
 from __future__ import annotations
 
 import logging
-import time
+import threading
 
 from pyspark.sql.streaming import StreamingQueryListener
 
@@ -48,12 +48,20 @@ class IngestCounters(StreamingQueryListener):
         pass
 
 
-def supervise(start_query, attempt_limit: int = 10, delay: float = 5.0):
+def supervise(
+    start_query,
+    attempt_limit: int = 10,
+    delay: float = 5.0,
+    stop: threading.Event | None = None,
+):
     """Restart-on-failure loop around a streaming query factory.
 
     ``start_query()`` must return a started StreamingQuery. Mirrors the
     reference's connect_attempt_limit/_delay semantics at the query
     level; returns when the query stops cleanly or attempts exhaust.
+    Once ``stop`` is set (the CLI's SIGINT/SIGTERM handler sets it and
+    stops the query) it returns instead of restarting: however the
+    stopped query ends, that is not a failure.
     A query that read input rows before it failed resets the budget, as
     the sources' connect loops reset theirs on a connect: only failures
     in a row without input use it up. A progress event alone is not
@@ -64,12 +72,19 @@ def supervise(start_query, attempt_limit: int = 10, delay: float = 5.0):
     """
     last: Exception | None = None
     attempt = 0
+    stop = stop or threading.Event()
     while attempt < attempt_limit:
+        if stop.is_set():
+            return
         query = start_query()
+        if stop.is_set():
+            query.stop()  # the signal came while the query started
         try:
             query.awaitTermination()
             return  # clean stop
         except Exception as exc:
+            if stop.is_set():
+                return
             last = exc
             read = any(p["numInputRows"] > 0 for p in query.recentProgress)
             attempt = 1 if read else attempt + 1
@@ -77,7 +92,7 @@ def supervise(start_query, attempt_limit: int = 10, delay: float = 5.0):
                 "stream failed (attempt %d of %d)",
                 attempt, attempt_limit, exc_info=exc,
             )
-            time.sleep(delay)
+            stop.wait(delay)  # a stop ends the wait early
     raise RuntimeError(
         f"stream failed {attempt_limit} times in a row; giving up"
     ) from last

@@ -37,16 +37,14 @@ only -- novelty never overcounts).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..functions.hashing import portable_hash64
 from ..operators.dedup import SPAN_GRAM
 from ..operators.text import tokens_col
+from .fold import fold_stream
 
 #: Seen-set shards. More shards = smaller per-group state and wider
 #: parallelism; the per-doc score is shard-additive either way.
@@ -84,20 +82,8 @@ def doc_gram_stream(doc_stream: DataFrame) -> DataFrame:
     )
 
 
-def _update(
-    key: tuple,
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    if state.hasTimedOut:  # pragma: no cover - NoTimeout below
-        state.remove()
-        return
-
-    seen = set(int(v) for v in state.get[0]) if state.exists else set()
-
-    rows = pd.concat(list(pdfs), ignore_index=True)
-    if not len(rows):
-        return
+def _step(key: tuple, rows: pd.DataFrame, state: tuple | None):
+    seen = set() if state is None else {int(v) for v in state[0]}
     out: dict[str, list] = {
         "doc_id": [],
         "bucket": [],
@@ -116,24 +102,19 @@ def _update(
         out["bucket"].append(int(key[0]))
         out["n_grams"].append(len(grams))
         out["n_novel"].append(len(novel))
-    state.update((sorted(seen),))
-    yield pd.DataFrame(out)
+    return (sorted(seen),), pd.DataFrame(out)
 
 
 def novelty_stream(doc_stream: DataFrame) -> DataFrame:
     """Per-(doc, shard) novelty partials over a stream of
     (doc_id, text) rows; sum per doc for the q_novelty-shaped score
     (:func:`novelty_from_emissions`)."""
-    return (
-        doc_gram_stream(doc_stream)
-        .groupBy("bucket")
-        .applyInPandasWithState(
-            _update,
-            outputStructType=NOVELTY_OUTPUT_SCHEMA,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return fold_stream(
+        doc_gram_stream(doc_stream),
+        ["bucket"],
+        _step,
+        _STATE_SCHEMA,
+        NOVELTY_OUTPUT_SCHEMA,
     )
 
 

@@ -134,7 +134,7 @@ def silver_batch_writer(out_dir: str):
     write plans no Exchange, so each task's observed list is merged
     exactly once, retries included. The dead letters of one batch pass
     through the driver, so the source must bound a batch:
-    ``max_lines_per_batch`` does for ``sbs1`` and ``sbs1-jvm``, and
+    ``max_lines_per_batch`` does for ``sbs1-jvm``, and
     :data:`FILE_REPLAY_BYTES_PER_TRIGGER` does for
     :func:`bronze_from_file_replay`. A stream without such a cap sends
     every malformed line of a batch through the driver.

@@ -35,15 +35,13 @@ deliveries of an already-admitted vec_id are idempotent (no re-emit).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..functions.vector import cosine_similarity
 from ..operators.similarity import _bucket_col
+from .fold import fold_stream
 
 #: Default per-bucket retention (matches the batch KNN_K tier).
 TOPK_K = 10
@@ -53,33 +51,15 @@ _STATE_SCHEMA = "ids array<long>, sims array<double>"
 TOPK_OUTPUT_SCHEMA = "bucket int, vec_id long, cos_sim double"
 
 
-def _make_update(k: int):
-    """Build the per-bucket state-update fn with ``k`` bound at plan
-    time (applyInPandasWithState gives the fn no side channel)."""
+def _make_step(k: int):
+    """Build the per-bucket fold step with ``k`` bound at plan time
+    (the step gets no side channel)."""
 
-    def _update_topk(
-        key: tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:  # pragma: no cover - TTL not enabled here
-            state.remove()
-            return
-
-        if state.exists:
-            ids_raw, sims_raw = state.get
-            ids = list(ids_raw) if ids_raw is not None else []
-            sims = list(sims_raw) if sims_raw is not None else []
-        else:
-            ids, sims = [], []
-
-        (bucket,) = key
-        rows: list[tuple[float, int]] = []
-        for pdf in pdfs:
-            rows.extend(
-                (float(s), int(v))
-                for s, v in zip(pdf["cos_sim"], pdf["vec_id"])
-            )
+    def step(key: tuple, pdf: pd.DataFrame, state: tuple | None):
+        ids, sims = ([], []) if state is None else map(list, state)
+        rows = [
+            (float(s), int(v)) for s, v in zip(pdf["cos_sim"], pdf["vec_id"])
+        ]
         # Deterministic admission regardless of delivery order inside
         # the batch: best-first, ties to the lower vec_id.
         rows.sort(key=lambda t: (-t[0], t[1]))
@@ -108,17 +88,11 @@ def _make_update(k: int):
                 out_v.append(vid)
                 out_s.append(score)
 
-        state.update((ids, sims))
-        if out_v:
-            yield pd.DataFrame(
-                {
-                    "bucket": [bucket] * len(out_v),
-                    "vec_id": out_v,
-                    "cos_sim": out_s,
-                }
-            )
+        return (ids, sims), pd.DataFrame(
+            {"bucket": key[0], "vec_id": out_v, "cos_sim": out_s}
+        )
 
-    return _update_topk
+    return step
 
 
 def _query_lit(query_vec: list[float]) -> Column:
@@ -150,10 +124,6 @@ def topk_stream(
     # CONSTANT -- O(256 * k) -- independent of stream length. Evicting
     # would discard the standing query's running top-k (a correctness
     # loss), and buys back no memory worth having.
-    return scored.groupBy("bucket").applyInPandasWithState(
-        _make_update(k),
-        outputStructType=TOPK_OUTPUT_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return fold_stream(
+        scored, ["bucket"], _make_step(k), _STATE_SCHEMA, TOPK_OUTPUT_SCHEMA
     )

@@ -24,59 +24,39 @@ split and a checkpoint restart.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..functions.hashing import portable_hash64
 from ..operators.statistics import SS_REPLICAS, subsample_ci_tail
+from .fold import latest, versioned_stream
 
-_STATE_SCHEMA = (
-    "n long, s long, sb array<long>, cb array<long>, ver long"
-)
+_STATE_SCHEMA = "n long, s long, sb array<long>, cb array<long>"
 
 SUBSAMPLE_OUTPUT_SCHEMA = (
-    "grp string, n long, s long, sb array<long>, cb array<long>,"
-    " ver long"
+    "grp string, n long, s long, sb array<long>, cb array<long>"
 )
 
 
-def _fold(
-    key: tuple,
-    batches: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    if state.exists:
-        n, s, sb, cb, ver = state.get
-        sb, cb = list(sb), list(cb)
+def _fold(key: tuple, rows: pd.DataFrame, acc: tuple | None) -> tuple:
+    if acc is None:
+        n, s, sb, cb = 0, 0, [0] * SS_REPLICAS, [0] * SS_REPLICAS
     else:
-        n, s, ver = 0, 0, 0
-        sb, cb = [0] * SS_REPLICAS, [0] * SS_REPLICAS
-    for pdf in batches:
-        cents = pdf["cents"].to_numpy()
-        hs = pdf["h"].to_numpy()
-        n += int(len(cents))
-        s += int(sum(int(v) for v in cents))
-        for b in range(SS_REPLICAS):
-            mask = (hs >> b) & 1 == 1
-            if mask.any():
-                cb[b] += int(mask.sum())
-                sb[b] += int(sum(int(v) for v in cents[mask]))
-    ver += 1
-    state.update((n, s, sb, cb, ver))
-    yield pd.DataFrame(
-        {
-            "grp": [key[0]],
-            "n": [n],
-            "s": [s],
-            "sb": [sb],
-            "cb": [cb],
-            "ver": [ver],
-        }
+        n, s, sb, cb = acc[0], acc[1], list(acc[2]), list(acc[3])
+    cents = rows["cents"].to_numpy()
+    hs = rows["h"].to_numpy()
+    for b in range(SS_REPLICAS):
+        mask = (hs >> b) & 1 == 1
+        cb[b] += int(mask.sum())
+        sb[b] += sum(int(v) for v in cents[mask])
+    return n + len(cents), s + sum(int(v) for v in cents), sb, cb
+
+
+def _emit(key: tuple, acc: tuple) -> pd.DataFrame:
+    n, s, sb, cb = acc
+    return pd.DataFrame(
+        {"grp": [key[0]], "n": [n], "s": [s], "sb": [sb], "cb": [cb]}
     )
 
 
@@ -90,12 +70,8 @@ def subsample_stream(stream: DataFrame) -> DataFrame:
         .alias("cents"),
         portable_hash64(F.col("o_orderkey")).alias("h"),
     )
-    return keyed.groupBy("grp").applyInPandasWithState(
-        _fold,
-        outputStructType=SUBSAMPLE_OUTPUT_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return versioned_stream(
+        keyed, ["grp"], _fold, _emit, _STATE_SCHEMA, SUBSAMPLE_OUTPUT_SCHEMA
     )
 
 
@@ -103,13 +79,8 @@ def ci_from_state(raw: DataFrame) -> DataFrame:
     """Current CI table: max-ver state snapshot per cohort, closed
     forms evaluated by the batch operator's subsample_ci_tail over the
     exact same Spark expressions."""
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("grp").orderBy(F.desc("ver"))
-    latest = (
-        raw.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
+    return subsample_ci_tail(
+        latest(raw, ["grp"]).select(
             "grp",
             "n",
             "s",
@@ -117,4 +88,3 @@ def ci_from_state(raw: DataFrame) -> DataFrame:
             *[F.col("cb")[b].alias(f"c{b}") for b in range(SS_REPLICAS)],
         )
     )
-    return subsample_ci_tail(latest)

@@ -19,41 +19,24 @@ split and state carry across a checkpoint restart.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..operators.statistics import theil_sen_from_daily
+from .fold import latest, versioned_stream
 
-_STATE_SCHEMA = "y long, ver long"
+_STATE_SCHEMA = "y long"
 
-TS_OUTPUT_SCHEMA = "event_type string, x long, y long, ver long"
+TS_OUTPUT_SCHEMA = "event_type string, x long, y long"
 
 
-def _fold(
-    key: tuple,
-    batches: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    if state.exists:
-        y, ver = state.get
-    else:
-        y, ver = 0, 0
-    for pdf in batches:
-        y += int(len(pdf))
-    ver += 1
-    state.update((y, ver))
-    yield pd.DataFrame(
-        {
-            "event_type": [key[0]],
-            "x": [key[1]],
-            "y": [y],
-            "ver": [ver],
-        }
-    )
+def _fold(key: tuple, rows: pd.DataFrame, acc: tuple | None) -> tuple:
+    return ((0 if acc is None else acc[0]) + len(rows),)
+
+
+def _emit(key: tuple, acc: tuple) -> pd.DataFrame:
+    return pd.DataFrame({"event_type": [key[0]], "x": [key[1]], "y": [acc[0]]})
 
 
 def theil_sen_stream(stream: DataFrame) -> DataFrame:
@@ -65,24 +48,13 @@ def theil_sen_stream(stream: DataFrame) -> DataFrame:
         .cast("long")
         .alias("x"),
     )
-    return keyed.groupBy("event_type", "x").applyInPandasWithState(
-        _fold,
-        outputStructType=TS_OUTPUT_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return versioned_stream(
+        keyed, ["event_type", "x"], _fold, _emit, _STATE_SCHEMA,
+        TS_OUTPUT_SCHEMA,
     )
 
 
 def theil_sen_from_state(raw: DataFrame) -> DataFrame:
     """Current trend table: max-ver day counts through the batch
     operator's theil_sen_from_daily."""
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("event_type", "x").orderBy(F.desc("ver"))
-    latest = (
-        raw.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("event_type", "x", "y")
-    )
-    return theil_sen_from_daily(latest)
+    return theil_sen_from_daily(latest(raw, ["event_type", "x"]))

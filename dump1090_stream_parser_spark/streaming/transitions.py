@@ -17,12 +17,11 @@ checkpoint restart).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from .fold import fold_stream
 
 _STATE_SCHEMA = "last_type string, ts_us long, event_id long"
 
@@ -31,26 +30,10 @@ TRANSITIONS_OUTPUT_SCHEMA = (
 )
 
 
-def _update(
-    key: tuple,
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    if state.hasTimedOut:  # pragma: no cover - NoTimeout below
-        state.remove()
-        return
-
-    rows = pd.concat(list(pdfs), ignore_index=True)
-    if not len(rows):
-        return
+def _step(key: tuple, rows: pd.DataFrame, state: tuple | None):
     rows = rows.assign(_us=rows["ts"].astype("int64") // 1000)
     rows = rows.sort_values(["_us", "event_id"])
-
-    if state.exists:
-        last_type, ts_us, event_id = state.get
-    else:
-        last_type = None
-
+    last_type = None if state is None else state[0]
     deltas: dict[tuple, int] = {}
     for etype in rows["event_type"]:
         if last_type is not None:
@@ -58,10 +41,7 @@ def _update(
             deltas[k] = deltas.get(k, 0) + 1
         last_type = str(etype)
     tail = rows.iloc[-1]
-    state.update((last_type, int(tail["_us"]), int(tail["event_id"])))
-    if not deltas:
-        return
-    yield pd.DataFrame(
+    out = pd.DataFrame(
         {
             "user_id": [key[0]] * len(deltas),
             "prev_type": [k[0] for k in deltas],
@@ -69,22 +49,19 @@ def _update(
             "n": list(deltas.values()),
         }
     )
+    return (last_type, int(tail["_us"]), int(tail["event_id"])), out
 
 
 def transitions_stream(event_stream: DataFrame) -> DataFrame:
     """Per-micro-batch transition-count deltas over a stream of
     (user_id, ts, event_id, event_type) rows. Deltas are mergeable:
     sum them (:func:`transition_matrix`) for the current matrix."""
-    return (
-        event_stream.select("user_id", "ts", "event_id", "event_type")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _update,
-            outputStructType=TRANSITIONS_OUTPUT_SCHEMA,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return fold_stream(
+        event_stream.select("user_id", "ts", "event_id", "event_type"),
+        ["user_id"],
+        _step,
+        _STATE_SCHEMA,
+        TRANSITIONS_OUTPUT_SCHEMA,
     )
 
 

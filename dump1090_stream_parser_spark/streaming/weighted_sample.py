@@ -33,14 +33,13 @@ from __future__ import annotations
 
 import hashlib
 import math
-from collections.abc import Iterator
 from decimal import ROUND_HALF_UP, Decimal
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..operators.pipeline_ops import _MERSENNE31, WEIGHTED_SAMPLE_K
+from .fold import fold_stream
 
 _STATE_SCHEMA = "ids array<long>, prios array<double>"
 
@@ -84,71 +83,43 @@ def es_priority(doc_id: int, n_chars: int) -> float:
     )
 
 
-def _make_update(k: int):
-    """Per-source update fn with the sample size closed over."""
+def _make_step(k: int):
+    """Per-source fold step with the sample size closed over."""
 
-    def _update_source(
-        key: tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            ids_raw, prios_raw = state.get
-            members = {
-                int(i): float(p)
-                for i, p in zip(ids_raw or [], prios_raw or [])
-            }
-        else:
-            members = {}
-
-        (source,) = key
+    def step(key: tuple, pdf: pd.DataFrame, state: tuple | None):
+        members = {} if state is None else {
+            int(i): float(p) for i, p in zip(*state)
+        }
         out: dict[str, list] = {
-            "doc_id": [], "n_chars": [], "priority": [],
+            "doc_id": [], "source": [], "n_chars": [], "priority": [],
             "admitted": [], "displaced": [],
         }
-        for pdf in pdfs:
-            for vid, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                vid, n_chars = int(vid), int(n_chars)
-                if vid in members:  # replayed delivery of a member
-                    continue
-                prio = es_priority(vid, n_chars)
-                # batch rank: priority DESC, doc_id ASC -- so "worst
-                # member" minimizes (priority, -doc_id)
-                admitted, displaced = True, None
-                if len(members) >= k:
-                    worst = min(
-                        members, key=lambda i: (members[i], -i)
-                    )
-                    if (prio, -vid) > (members[worst], -worst):
-                        displaced = worst
-                        del members[worst]
-                    else:
-                        admitted = False
-                if admitted:
-                    members[vid] = prio
-                out["doc_id"].append(vid)
-                out["n_chars"].append(n_chars)
-                out["priority"].append(prio)
-                out["admitted"].append(admitted)
-                out["displaced"].append(displaced)
+        for vid, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
+            vid, n_chars = int(vid), int(n_chars)
+            if vid in members:  # replayed delivery of a member
+                continue
+            prio = es_priority(vid, n_chars)
+            # batch rank: priority DESC, doc_id ASC -- so "worst
+            # member" minimizes (priority, -doc_id)
+            admitted, displaced = True, None
+            if len(members) >= k:
+                worst = min(members, key=lambda i: (members[i], -i))
+                if (prio, -vid) > (members[worst], -worst):
+                    displaced = worst
+                    del members[worst]
+                else:
+                    admitted = False
+            if admitted:
+                members[vid] = prio
+            out["doc_id"].append(vid)
+            out["source"].append(key[0])
+            out["n_chars"].append(n_chars)
+            out["priority"].append(prio)
+            out["admitted"].append(admitted)
+            out["displaced"].append(displaced)
+        return (list(members), list(members.values())), pd.DataFrame(out)
 
-        state.update((
-            [int(i) for i in members],
-            [float(members[i]) for i in members],
-        ))
-        if out["doc_id"]:
-            yield pd.DataFrame(
-                {
-                    "doc_id": out["doc_id"],
-                    "source": [source] * len(out["doc_id"]),
-                    "n_chars": out["n_chars"],
-                    "priority": out["priority"],
-                    "admitted": out["admitted"],
-                    "displaced": out["displaced"],
-                }
-            )
-
-    return _update_source
+    return step
 
 
 def weighted_sample_stream(
@@ -158,10 +129,6 @@ def weighted_sample_stream(
     n_chars) document stream. NoTimeout: the source inventory is
     pipeline config and state per source is exactly K entries, so
     there is nothing to age out."""
-    return doc_stream.groupBy("source").applyInPandasWithState(
-        _make_update(k),
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return fold_stream(
+        doc_stream, ["source"], _make_step(k), _STATE_SCHEMA, OUTPUT_SCHEMA
     )

@@ -38,6 +38,16 @@ def _run(spark, src, out, ckpt):
     q.awaitTermination(180)
 
 
+def test_stream_auc_equals_batch(spark):
+    """auc_stream's own projection, fold and emit on the static
+    documents (the kernel's batch branch), through auc_from_state,
+    equal q_auc."""
+    docs = load_table(spark, SF_DIR, "documents").select(*_COLS)
+    got = auc_from_state(auc_stream(docs)).collect()
+    want = q_auc(spark, SF_DIR).collect()
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+
+
 def test_stream_auc_equals_batch_and_survives_restart(spark, tmp_path):
     docs = load_table(spark, SF_DIR, "documents").select(*_COLS)
     med = docs.approxQuantile("doc_id", [0.5], 0.0)[0]
@@ -69,37 +79,15 @@ def test_stream_auc_equals_batch_and_survives_restart(spark, tmp_path):
     assert 0.0 <= after["auc"] <= 1.0
 
 
-def test_score_grain_bounds_the_state_grid(spark, tmp_path):
+def test_score_grain_bounds_the_state_grid(spark):
     """ADVICE r10: auc_stream's score_grain must round scores BEFORE
     the stateful groupBy, so a continuous score domain maps onto a
-    bounded state grid. Pin (a) the grained stream's distinct-score
-    state rows <= the ungrained run's, (b) every state key sits on the
+    bounded state grid. Pin (a) the grained fold's distinct-score
+    state rows <= the ungrained fold's, (b) every state key sits on the
     10^-grain lattice, (c) totals are preserved."""
     docs = load_table(spark, SF_DIR, "documents").select(*_COLS)
-    src = tmp_path / "docs_in"
-    docs.coalesce(1).write.parquet(str(src / "a.parquet"))
-
-    def run(grain, tag):
-        stream = (
-            spark.readStream.schema(_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(src) + "/*")
-        )
-        out = str(tmp_path / f"out_{tag}")
-        q = (
-            auc_stream(stream, score_grain=grain)
-            .writeStream.format("parquet")
-            .outputMode("append")
-            .option("path", out)
-            .option("checkpointLocation", str(tmp_path / f"ckpt_{tag}"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-        return spark.read.parquet(out)
-
-    exact = run(None, "exact")
-    grained = run(2, "grained")
+    exact = auc_stream(docs)
+    grained = auc_stream(docs, score_grain=2)
     n_exact = exact.select("score").distinct().count()
     n_grained = grained.select("score").distinct().count()
     assert n_grained <= n_exact

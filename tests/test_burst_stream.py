@@ -76,13 +76,11 @@ def _rows(df):
     }
 
 
-def test_burst_stream_equals_batch_closed_days(spark, tmp_path):
-    src = tmp_path / "ev_in"
-    _split_by_time(spark, src)
-    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    _run(spark, src, out, ckpt)
-
-    got = _rows(spark.read.parquet(out))
+def test_burst_stream_equals_batch_closed_days(spark):
+    """burst_stream's own projection, fold and emit on the static
+    events (the kernel's batch branch) equal q_burst over every closed
+    day."""
+    got = _rows(burst_stream(load_table(spark, SF_DIR, "events")))
     expect = _rows(closed_day_rows(q_burst(spark, SF_DIR)))
     assert got == expect
     assert got, "closed scored days expected"

@@ -5,16 +5,20 @@ across a checkpoint restart."""
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import functions as F
 
 from dump1090_stream_parser_spark.operators.cdc import q_cdc_apply
+from dump1090_stream_parser_spark.streaming import cdc
 from dump1090_stream_parser_spark.streaming.cdc import (
     cdc_stream,
     latest_cdc,
 )
+from dump1090_stream_parser_spark.streaming.fold import versioned
 from dump1090_stream_parser_spark.tables import load_table
 
 from .conftest import SF_DIR
+from .fold_check import canon, fold_batches, latest
 
 _SCHEMA = (
     "user_id long, ts timestamp, event_id long, op string, value double"
@@ -92,25 +96,36 @@ def _live(spark, out):
     }
 
 
-def test_stream_equals_batch_forward_replay(spark, tmp_path):
-    src = tmp_path / "in"
-    src.mkdir()
-    _write_files(spark, src, [F.asc("ts"), F.asc("event_id")])
-    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    _run(spark, src, out, ckpt)
-    assert _live(spark, out) == _batch(spark)
+def test_stream_equals_batch_forward_replay(spark):
+    """cdc_stream's own projection, fold and emit on the static log
+    (the kernel's batch branch) equal q_cdc_apply."""
+    assert {
+        r["user_id"]: (
+            r["n_ops"],
+            r["n_deletes"],
+            r["last_op"],
+            r["current_value"],
+            r["last_ts"],
+        )
+        for r in latest_cdc(cdc_stream(_log(spark))).collect()
+    } == _batch(spark)
 
 
-def test_stream_equals_batch_reverse_replay(spark, tmp_path):
-    """The lattice claim: replaying the NEWEST data first converges to
-    the same live view -- counts are additive, last-writer is an
-    argmax over the data-carried order, so arrival order is free."""
-    src = tmp_path / "in"
-    src.mkdir()
-    _write_files(spark, src, [F.desc("ts"), F.desc("event_id")])
-    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    _run(spark, src, out, ckpt)
-    assert _live(spark, out) == _batch(spark)
+def test_stream_equals_batch_reverse_replay(spark):
+    """The lattice claim: folding the log NEWEST slice first, in three
+    micro-batches, converges to the q_cdc_apply live view -- counts
+    are additive, last-writer is an argmax over the data-carried
+    order, so arrival order is free."""
+    log = _log(spark).toPandas().sort_values(
+        ["ts", "event_id"], ascending=False
+    )
+    rows = fold_batches(
+        versioned(cdc._fold, cdc._emit),
+        ["user_id"],
+        np.array_split(log, 3),
+    )
+    live = latest(rows, ["user_id"]).query("last_op != 'D'")
+    assert canon(live) == canon(q_cdc_apply(spark, SF_DIR).toPandas())
 
 
 def test_stream_on_snapshot_table_equals_batch(spark, tmp_path):

@@ -1,10 +1,20 @@
 """CLI option surface (A13): the reference-mirroring flags plus the
 multi-receiver ``--hosts`` selector parse, default sanely, and resolve
-to one receiver list."""
+to one receiver list; Ctrl-C stops a running CLI."""
 
 from __future__ import annotations
 
+import os
+import signal
+import socketserver
+import subprocess
+import sys
+import threading
+import time
+
 from dump1090_stream_parser_spark.cli import build_parser, receivers
+
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_defaults_mirror_reference():
@@ -46,3 +56,59 @@ def test_option_surface():
         "batch_seconds", "connect_attempt_limit", "connect_attempt_delay",
         "hosts", "master",
     }
+
+
+def test_sigint_stops_the_cli(tmp_path):
+    """Ctrl-C ends the CLI: SIGINT after the first committed batch
+    stops the query and exits 0, without a restart -- a restarted query
+    would open a second connection to the feed."""
+    connections = []
+
+    class Counter(socketserver.BaseRequestHandler):
+        def handle(self):
+            connections.append(self.client_address)
+            i = 0
+            try:
+                while True:
+                    self.request.sendall(
+                        f"MSG,8,1,1,{i % 0xFFFFFF:06X},1,,,,,,,,,,,,,,,,0\n"
+                        .encode()
+                    )
+                    i += 1
+                    time.sleep(0.01)
+            except OSError:
+                pass
+
+    server = socketserver.ThreadingTCPServer(("127.0.0.1", 0), Counter)
+    server.daemon_threads = True
+    threading.Thread(target=server.serve_forever, daemon=True).start()
+    out = tmp_path / "out"
+    commits = out / "_checkpoint" / "commits"
+    with open(tmp_path / "cli.log", "wb") as log:
+        proc = subprocess.Popen(
+            [
+                sys.executable, "-m", "dump1090_stream_parser_spark",
+                "-l", "127.0.0.1", "-p", str(server.server_address[1]),
+                "-d", str(out), "--batch-seconds", "1",
+                "--connect-attempt-delay", "1", "--master", "local[2]",
+            ],
+            cwd=_REPO,
+            env={**os.environ, "SPARK_GRAFT_DRIVER_MEM": "1g"},
+            stdout=log,
+            stderr=subprocess.STDOUT,
+        )
+    try:
+        deadline = time.monotonic() + 120
+        while not (commits.is_dir() and any(commits.iterdir())):
+            assert proc.poll() is None, "the CLI exited before a batch"
+            assert time.monotonic() < deadline, "no batch committed"
+            time.sleep(0.5)
+        proc.send_signal(signal.SIGINT)
+        assert proc.wait(timeout=60) == 0
+        assert len(connections) == 1
+    finally:
+        if proc.poll() is None:
+            proc.kill()
+            proc.wait()
+        server.shutdown()
+        server.server_close()

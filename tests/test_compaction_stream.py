@@ -18,6 +18,7 @@ from dump1090_stream_parser_spark.streaming.compaction import (
 from dump1090_stream_parser_spark.tables import load_table
 
 from .conftest import SF_DIR
+from .fold_check import latest
 
 _SCHEMA = "event_id long, ts timestamp"
 
@@ -38,6 +39,16 @@ def _run(spark, src, out, ckpt):
         .start()
     )
     q.awaitTermination(180)
+
+
+def test_stream_plan_equals_batch(spark):
+    """compaction_stream's own projection, fold and emit on the static
+    events (the kernel's batch branch), through plan_from_state, equal
+    q_compaction_plan."""
+    ev = load_table(spark, SF_DIR, "events")
+    got = plan_from_state(compaction_stream(ev)).collect()
+    want = q_compaction_plan(spark, SF_DIR).collect()
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
 
 
 def test_stream_plan_equals_batch_and_survives_restart(spark, tmp_path):

@@ -62,19 +62,15 @@ def _batch_grid(spark):
     }
 
 
-def test_stream_grid_equals_batch_grid(spark, tmp_path):
-    src = tmp_path / "ev_in"
-    _split_two_files(spark, src)
-    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    _run(spark, src, out, ckpt)
-
-    raw = spark.read.parquet(out)
+def test_stream_grid_equals_batch_grid(spark):
+    """countmin_stream's own projection, fold and emit on the static
+    events (the kernel's batch branch), through latest_cells, equal
+    the batch grid bit-for-bit."""
+    raw = countmin_stream(load_table(spark, SF_DIR, "events"), "user_id")
     got = {
         (r["j"], r["bucket"]): r["c"]
         for r in latest_cells(raw).collect()
     }
-    # bit-for-bit the batch grid: counter addition is commutative, so
-    # the micro-batch split cannot change any cell
     assert got == _batch_grid(spark)
     # the parallelism claim: state spread over many (j, block) groups,
     # not one monolith per depth row
@@ -88,19 +84,15 @@ def test_stream_grid_equals_batch_grid(spark, tmp_path):
     assert len(set(per_j.values())) == 1 and len(per_j) == CMS_DEPTH
 
 
-def test_stream_point_estimates_overcount(spark, tmp_path):
-    src = tmp_path / "ev_in"
-    _split_two_files(spark, src)
-    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+def test_stream_point_estimates_overcount(spark):
+    ev = load_table(spark, SF_DIR, "events")
     # narrow grid so collisions exist and the estimate is a real min
     # (events at this sf has ~15 distinct user_ids -> width 8 collides)
-    _run(spark, src, out, ckpt, width=8, block_w=4)
-
+    raw = countmin_stream(ev, "user_id", width=8, block_w=4)
     grid = {
         (r["j"], r["bucket"]): r["c"]
-        for r in latest_cells(spark.read.parquet(out)).collect()
+        for r in latest_cells(raw).collect()
     }
-    ev = load_table(spark, SF_DIR, "events")
     exact = {
         r["user_id"]: r["n"]
         for r in ev.groupBy("user_id").agg(F.count("*").alias("n")).collect()

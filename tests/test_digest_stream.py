@@ -68,6 +68,15 @@ def _digest_of(df):
     }
 
 
+def test_stream_digest_equals_batch(spark):
+    """digest_stream's own projection, fold and emit on the static
+    lineitem (the kernel's batch branch), through latest_digest, equal
+    the batch digest cells."""
+    li = load_table(spark, SF_DIR, "lineitem").select(*_COLS)
+    got = _digest_of(latest_digest(digest_stream(li)))
+    assert got == _digest_of(digest_cells(li))
+
+
 def test_stream_digest_equals_batch_and_survives_restart(
     spark, tmp_path
 ):

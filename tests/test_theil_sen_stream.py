@@ -16,6 +16,7 @@ from dump1090_stream_parser_spark.streaming.theil_sen import (
 from dump1090_stream_parser_spark.tables import load_table
 
 from .conftest import SF_DIR
+from .fold_check import latest
 
 _SCHEMA = "event_id long, ts timestamp, event_type string"
 
@@ -36,6 +37,16 @@ def _run(spark, src, out, ckpt):
         .start()
     )
     q.awaitTermination(180)
+
+
+def test_stream_trend_equals_batch(spark):
+    """theil_sen_stream's own projection, fold and emit on the static
+    events (the kernel's batch branch), through theil_sen_from_state,
+    equal q_theil_sen."""
+    ev = load_table(spark, SF_DIR, "events")
+    got = theil_sen_from_state(theil_sen_stream(ev)).collect()
+    want = q_theil_sen(spark, SF_DIR).collect()
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
 
 
 def test_stream_trend_equals_batch_and_survives_restart(spark, tmp_path):

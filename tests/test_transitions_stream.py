@@ -5,9 +5,13 @@ restart."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+import numpy as np
+import pandas as pd
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from dump1090_stream_parser_spark.operators.sequence import q_transitions
+from dump1090_stream_parser_spark.streaming import transitions
 from dump1090_stream_parser_spark.streaming.transitions import (
     transition_matrix,
     transitions_stream,
@@ -15,6 +19,7 @@ from dump1090_stream_parser_spark.streaming.transitions import (
 from dump1090_stream_parser_spark.tables import load_table
 
 from .conftest import SF_DIR
+from .fold_check import assert_any_split_folds_alike, canon
 
 _SCHEMA = (
     "user_id long, ts timestamp, event_id long, event_type string"
@@ -78,13 +83,21 @@ def _stream(spark, out):
     }
 
 
-def test_stream_equals_batch_across_microbatches(spark, tmp_path):
-    src = tmp_path / "in"
-    src.mkdir()
-    _write_files(spark, src)
-    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    _run(spark, src, out, ckpt)
-    assert _stream(spark, out) == _batch(spark)
+def test_stream_equals_batch_across_microbatches(spark):
+    """transitions_stream's own projection and fold on the static
+    events (the kernel's batch branch), summed by transition_matrix,
+    equal q_transitions; test_delta_counts_are_mergeable carries that
+    to any ordered micro-batch split."""
+    ev = load_table(spark, SF_DIR, "events")
+    got = transition_matrix(transitions_stream(ev))
+    assert {
+        (r["prev_type"], r["next_type"]): (
+            r["n_trans"],
+            r["row_total"],
+            r["p"],
+        )
+        for r in got.collect()
+    } == _batch(spark)
 
 
 def test_stream_survives_checkpoint_restart(spark, tmp_path):
@@ -104,16 +117,30 @@ def test_stream_survives_checkpoint_restart(spark, tmp_path):
     assert _stream(spark, out) == _batch(spark)
 
 
-def test_delta_counts_are_mergeable(spark, tmp_path):
-    """The stateful stage emits DELTAS (per-key state is O(1), never
-    the matrix): total emitted n across all rows equals the batch
-    transition total, and per-key deltas never double-count."""
-    src = tmp_path / "in"
-    src.mkdir()
-    _write_files(spark, src)
-    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    _run(spark, src, out, ckpt)
-    emitted = spark.read.parquet(out)
-    total = emitted.agg(F.sum("n")).collect()[0][0]
-    batch_total = sum(v[0] for v in _batch(spark).values())
-    assert total == batch_total
+@settings(max_examples=25, deadline=None, derandomize=True)
+@given(seed=st.integers(0, 2**32 - 1))
+def test_delta_counts_are_mergeable(seed):
+    """The fold emits DELTAS (per-key state is O(1), never the
+    matrix): over any ordered split the summed deltas equal one fold's
+    counts, so no pair is dropped or double-counted at a cut."""
+    rng = np.random.default_rng(seed)
+    n = 300
+    rows = pd.DataFrame(
+        {
+            "user_id": rng.integers(0, 6, n),
+            "ts": pd.Timestamp("2024-01-01")
+            + pd.to_timedelta(rng.integers(0, 10**6, n), unit="s"),
+            "event_id": rng.permutation(n),
+            "event_type": rng.choice(["view", "click", "buy"], n),
+        }
+    )
+    assert_any_split_folds_alike(
+        transitions._step,
+        ["user_id"],
+        rows,
+        lambda out: canon(
+            out.groupby(["prev_type", "next_type"], as_index=False)["n"].sum()
+        ),
+        rng,
+        order=["ts", "event_id"],
+    )

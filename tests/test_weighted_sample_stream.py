@@ -6,10 +6,6 @@ JVM/DuckDB pow/ln value on this corpus)."""
 
 from __future__ import annotations
 
-import time
-
-from pyspark.sql import functions as F
-
 from dump1090_stream_parser_spark.operators.pipeline_ops import (
     WEIGHTED_SAMPLE_K,
     q_weighted_sample,
@@ -31,58 +27,33 @@ def test_python_priority_matches_batch_values(spark):
         assert es_priority(r.doc_id, r.n_chars) == r.priority, r
 
 
-def test_stream_sample_matches_batch_topk(spark, tmp_path):
+def _kept(ledger):
+    """The current sample: admitted minus displaced, per source."""
+    admitted = ledger[ledger["admitted"]]
+    gone = set(ledger["displaced"].dropna().astype("int64"))
+    return {
+        (r.source, r.doc_id, r.priority)
+        for r in admitted.itertuples()
+        if r.doc_id not in gone
+    }
+
+
+def test_stream_sample_matches_batch_topk(spark):
+    """weighted_sample_stream's own fold on the static documents (the
+    kernel's batch branch): one ledger row per document, and the
+    admitted-minus-displaced set equals q_weighted_sample's top-K."""
     docs = load_table(spark, SF_DIR, "documents").select(
         "doc_id", "source", "n_chars"
     )
-    n = docs.count()
-    half = n // 2
-    batch = {}
-    for r in q_weighted_sample(spark, SF_DIR).collect():
-        batch.setdefault(r.source, {})[r.doc_id] = r.priority
-    # cross-boundary coverage: some kept doc arrives in the second half
-    assert any(
-        d >= half for kept in batch.values() for d in kept
-    ), "fixture should admit second-delivery docs"
-
-    src = tmp_path / "docs_in"
-    docs.filter(F.col("doc_id") < half).coalesce(1).write.parquet(
-        str(src / "a.parquet")
-    )
-    docs.filter(F.col("doc_id") >= half).coalesce(1).write.parquet(
-        str(src / "b.parquet")
-    )
-    stream = (
-        spark.readStream.schema(
-            "doc_id long, source string, n_chars long"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src) + "/*")
-    )
-    q = (
-        weighted_sample_stream(stream)
-        .writeStream.format("memory")
-        .queryName("ws_ledger")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    deadline = time.time() + 180
-    rows = spark.sql("SELECT * FROM ws_ledger").collect()
-    while len(rows) < n and time.time() < deadline:
-        time.sleep(1)
-        rows = spark.sql("SELECT * FROM ws_ledger").collect()
-    q.stop()
-    q.awaitTermination(60)
-
-    assert len(rows) == n  # one ledger row per document
-    kept: dict[str, dict[int, float]] = {}
-    for r in sorted(rows, key=lambda r: r.doc_id):
-        if r.admitted:
-            kept.setdefault(r.source, {})[r.doc_id] = r.priority
-            if r.displaced is not None:
-                del kept[r.source][r.displaced]
+    ledger = weighted_sample_stream(docs).toPandas()
+    assert len(ledger) == docs.count()  # one ledger row per document
+    batch = {
+        (r.source, r.doc_id, r.priority)
+        for r in q_weighted_sample(spark, SF_DIR).collect()
+    }
+    kept = _kept(ledger)
     assert kept == batch
-    for sample in kept.values():
-        assert len(sample) == WEIGHTED_SAMPLE_K
+    for source in {s for s, _, _ in kept}:
+        assert sum(s == source for s, _, _ in kept) == WEIGHTED_SAMPLE_K
+
+
