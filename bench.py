@@ -17,6 +17,13 @@ The per-query means are still printed -- on their OWN earlier line
 contract line is asserted < 1900 chars so it can never silently
 regress past the tail window again.
 
+Positional query names bench just those queries (any registered
+name) through the same loop, e.g. ``python bench.py q_triangles q_pmi``.
+The ``bench_detail`` line's ``layers`` dict splits each query's fastest
+run into plan build (``build_s``) and execution (``exec_s``) and carries
+that run's stage-meter counters (plans/metrics.py): jobs, stages,
+executor run ms, shuffle records and bytes.
+
 Execution is measured with the noop sink (full plan runs, nothing is
 collected to the driver), matching how a production job consumes these
 operators.
@@ -37,10 +44,10 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from dump1090_stream_parser_spark.plans.metrics import metered_run
 from dump1090_stream_parser_spark.session import get_spark
 
 #: Headline queries: one per physical shape that matters at scale.
@@ -162,61 +169,61 @@ HEADLINE = [
 # would swamp the steady-state headline signal.
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
-
+def run(spark, sf_dir: str, names: list[str], reps: int) -> tuple[dict, str]:
+    """Bench ``names`` (default: HEADLINE) on a live session; return the
+    ``bench_detail`` record and the contract line."""
     import __spark_entry__ as entry_mod
 
     queries = entry_mod.queries()
-    spark = get_spark(
-        master=f"local[{cpus}]",
-        app_name="bench",
-        shuffle_partitions=int(cpus),
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    unknown = [n for n in names if n not in queries]
+    if unknown:
+        raise KeyError(f"unknown queries: {unknown}")
+    names = names or [n for n in HEADLINE if n in queries]
+    sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
 
     # Warm the JVM/codegen once (not timed): tiny query.
     queries["q_group_topk"](spark, sf_dir).write.format("noop").mode(
         "overwrite"
     ).save()
 
-    reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
     # Rep loop OUTER (whole set per rep, not n back-to-back runs of one
     # query): successive reps of the same query would share a hot page
     # cache + JIT state that round-robin execution, like the driver's
     # own per-round single pass, does not enjoy.
-    samples: dict[str, list[float]] = {}
+    samples: dict[str, list[dict]] = {n: [] for n in names}
     for _ in range(reps):
-        for name in HEADLINE:
-            fn = queries.get(name)
-            if fn is None:
-                continue
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            samples.setdefault(name, []).append(time.perf_counter() - t0)
+        for name in names:
+            fn = queries[name]
+            samples[name].append(metered_run(spark, lambda: fn(spark, sf_dir)))
 
-    per_query = {n: round(min(v), 3) for n, v in samples.items()}
+    fastest = {
+        n: min(v, key=lambda r: r["wall_s"]) for n, v in samples.items()
+    }
+    per_query = {n: round(r["wall_s"], 3) for n, r in fastest.items()}
     per_query_mean = {
-        n: round(sum(v) / len(v), 3) for n, v in samples.items()
+        n: round(sum(r["wall_s"] for r in v) / len(v), 3)
+        for n, v in samples.items()
     }
     total = round(sum(per_query.values()), 3)
     total_mean = round(sum(per_query_mean.values()), 3)
-    # Detail line first: anything after it may be all the driver sees.
-    # Full 3-decimal mins and means both live here.
-    print(
-        json.dumps(
-            {
-                "metric": "bench_detail",
-                "reps": reps,
-                "value_mean": total_mean,
-                "queries_min": per_query,
-                "queries_mean": per_query_mean,
-            },
-            separators=(",", ":"),
-        )
-    )
+    # Full 3-decimal mins and means both live on the detail line, with
+    # each query's fastest run split into plan build vs execution and
+    # its stage-meter counters.
+    detail = {
+        "metric": "bench_detail",
+        "reps": reps,
+        "value_mean": total_mean,
+        "queries_min": per_query,
+        "queries_mean": per_query_mean,
+        "layers": {
+            n: {
+                k: round(v, 3) if isinstance(v, float) else v
+                for k, v in r.items()
+                if k != "wall_s"
+            }
+            for n, r in fastest.items()
+        },
+    }
     # Contract line (round-10 form, VERDICT r9 ask #8): the full
     # per-query grain lives ONLY on the bench_detail line above --
     # 3-decimal mins and means for every query, never degraded. The
@@ -258,6 +265,22 @@ def main() -> None:
     # Driver tail window is ~2000 chars; keep headroom for a trailing
     # newline plus any stray log flush between us and process exit.
     assert len(line) < 1900, f"contract line too long: {len(line)}"
+    return detail, line
+
+
+def main() -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
+    spark = get_spark(
+        master=f"local[{cpus}]",
+        app_name="bench",
+        shuffle_partitions=int(cpus),
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+    detail, line = run(spark, sf_dir, sys.argv[1:], reps)
+    # Detail line first: anything after it may be all the driver sees.
+    print(json.dumps(detail, separators=(",", ":")))
     print(line)
     spark.stop()
 

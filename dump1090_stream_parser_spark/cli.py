@@ -151,6 +151,10 @@ def main(argv: list[str] | None = None) -> None:
         delay=args.connect_attempt_delay,
         stop=stop,
     )
+    # stop the session while the py4j callback server is still up:
+    # SparkContext.stop drains the listener bus, so the stopped query's
+    # last progress event is delivered instead of failing at exit
+    spark.stop()
 
 
 if __name__ == "__main__":

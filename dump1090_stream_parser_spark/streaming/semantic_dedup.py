@@ -48,8 +48,7 @@ from collections.abc import Iterator
 from decimal import ROUND_HALF_UP, Decimal
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..operators.similarity import SEMANTIC_DEDUP_TAU, _nearest_cell_expr

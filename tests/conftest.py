@@ -21,9 +21,6 @@ def spark():
         shuffle_partitions=8,
         extra_conf={
             "spark.sql.autoBroadcastJoinThreshold": "1MB",
-            # the stage-level shuffle meter (plans/metrics.py) reads the
-            # UI REST status store; get_spark disables the UI by default
-            "spark.ui.enabled": "true",
             # the sbs1-jvm source class must be on the classpath at JVM
             # launch (DataSource V2 lookup; addJar cannot extend it);
             # resolved relative to the package so non-/root checkouts

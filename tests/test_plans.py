@@ -7,6 +7,11 @@ are column-pruned, small dims broadcast, codegen covers the hot path.
 
 from __future__ import annotations
 
+import glob
+import os
+import re
+from pathlib import Path
+
 from dump1090_stream_parser_spark.operators.joins import q_join_star
 from dump1090_stream_parser_spark.operators.relational import (
     q_filter_range,
@@ -721,38 +726,90 @@ def test_embedding_lsh_near_dup_blocks_on_bucket(spark):
 
 
 def test_stage_shuffle_meter_counts_a_known_exchange(spark):
-    """The stage-level shuffle meter (plans/metrics.py) must attribute a
-    run's exchange volume to the delta taken around it: a groupBy over N
+    """The stage meter (plans/metrics.py) must attribute a run's
+    exchange volume to the read taken after it: a groupBy over N
     distinct keys shuffles >= N records through its map-side-combined
-    exchange, and a drained snapshot taken AFTER the action must be
-    stable (no straggling listener events counted against the next
-    run)."""
+    exchange, a narrow scan shuffles nothing but still runs a stage,
+    and a drained read taken AFTER the action must be stable (no
+    straggling listener events, no stage counted twice)."""
     from pyspark.sql import functions as F
 
-    from dump1090_stream_parser_spark.plans.metrics import (
-        stage_shuffle_delta,
-        stage_shuffle_snapshot,
-    )
+    from dump1090_stream_parser_spark.plans.metrics import stage_meter
 
-    snap0 = stage_shuffle_snapshot(spark)
-    df = (
-        spark.range(10_000)
-        .select((F.col("id") % 97).alias("k"))
-        .groupBy("k")
-        .count()
-    )
-    df.write.format("noop").mode("overwrite").save()
-    snap1 = stage_shuffle_snapshot(spark)
-    delta = stage_shuffle_delta(snap0, snap1)
-    assert delta["n_stages"] >= 2  # map side + reduce side
+    meter = stage_meter(spark)
+    meter.take()
+    spark.range(10_000).select((F.col("id") % 97).alias("k")).groupBy(
+        "k"
+    ).count().write.format("noop").mode("overwrite").save()
+    wide = meter.take()
+    assert wide["stages"] >= 2  # map side + reduce side
+    assert wide["jobs"] >= 1
     # partial aggregation caps the exchange at (map tasks) * 97 rows --
     # spark.range parallelism is defaultParallelism, NOT
     # shuffle_partitions -- and floors it at the 97 distinct keys
     n_map = spark.sparkContext.defaultParallelism
-    assert 97 <= delta["shuffle_records"] <= 97 * n_map
-    # drained snapshots are stable: nothing new without new work
-    again = stage_shuffle_delta(snap1, stage_shuffle_snapshot(spark))
-    assert again["n_stages"] == 0
+    assert 97 <= wide["shuffle_records"] <= 97 * n_map
+    assert wide["shuffle_bytes"] > 0
+    spark.range(0, 200_000, 1, 4).write.format("noop").mode(
+        "overwrite"
+    ).save()
+    narrow = meter.take()
+    assert narrow["shuffle_bytes"] == 0 and narrow["stages"] >= 1, narrow
+    # drained reads are stable: nothing new without new work
+    assert meter.take()["stages"] == 0
+
+
+def test_signature_window_brackets_the_build(spark):
+    """A lazy localCheckpoint runs its subtree's shuffle map stage while
+    the DataFrame is BUILT; executed_stage_signature must count it (an
+    action-only window reads 0 records here)."""
+    from pyspark.sql import functions as F
+
+    from dump1090_stream_parser_spark.plans.metrics import (
+        executed_stage_signature,
+    )
+
+    sig = executed_stage_signature(
+        spark,
+        lambda: spark.range(10_000)
+        .groupBy((F.col("id") % 97).alias("k"))
+        .count()
+        .localCheckpoint(eager=False),
+    )
+    assert sig["shuffle_records"] >= 97, sig
+
+
+#: A UI switched on in code: a conf pair or a --conf flag.
+_UI_ON = re.compile(
+    r"""["']spark\.ui\.enabled["']\s*[:,]\s*["']true["']"""
+    r"|spark\.ui\.enabled=true",
+    re.IGNORECASE,
+)
+
+
+def test_no_code_turns_the_spark_ui_on():
+    """The stage meter reads the status store with the UI off, so
+    nothing needs the UI: no module of the package, tools/, tests/ or
+    bench.py may switch it on (the old REST meter made nine tool sites
+    and the test session do so)."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    files = (
+        glob.glob(f"{repo}/dump1090_stream_parser_spark/**/*.py", recursive=True)
+        + glob.glob(f"{repo}/tools/*.py")
+        + glob.glob(f"{repo}/tests/*.py")
+        + [f"{repo}/bench.py"]
+    )
+    assert len(files) > 100
+    on = [
+        f
+        for f in files
+        if f != os.path.abspath(__file__) and _UI_ON.search(Path(f).read_text())
+    ]
+    assert not on, on
+    assert _UI_ON.search('extra_conf={"spark.ui.enabled": "true"}')
+    assert _UI_ON.search(".config('spark.ui.enabled',\n 'TRUE')")
+    assert _UI_ON.search("--conf spark.ui.enabled=true")
+    assert not _UI_ON.search('.config("spark.ui.enabled", "false")')
 
 
 def test_bloom_geometry_guards_reject_bad_word_counts(spark):
@@ -774,26 +831,6 @@ def test_bloom_geometry_guards_reject_bad_word_counts(spark):
         _bloom_word_bit("gh", 1 << 28)
     with pytest.raises(ValueError, match="power of two"):
         _bloom_word_bit("gh", 0)
-
-
-def test_stage_meter_demands_the_ui_status_store():
-    """stage_shuffle_snapshot on a UI-disabled session must fail with
-    the actionable error, not a cryptic urlopen crash (get_spark
-    disables the UI by default, so this is the likely misuse)."""
-    import pytest
-
-    from dump1090_stream_parser_spark.plans.metrics import (
-        stage_shuffle_snapshot,
-    )
-
-    class _FakeSC:
-        uiWebUrl = None
-
-    class _FakeSpark:
-        sparkContext = _FakeSC()
-
-    with pytest.raises(RuntimeError, match="spark.ui.enabled"):
-        stage_shuffle_snapshot(_FakeSpark())
 
 
 def test_cell_bucketed_semantic_dedup_groups_without_exchange(spark):

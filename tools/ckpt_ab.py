@@ -1,8 +1,8 @@
 """A/B a set of queries with localCheckpoint enabled vs no-op'd:
-per-query min-of-3 noop-sink seconds plus executed shuffle-record
-totals, to decide which lazy checkpoints are load-bearing (lineage
-re-run guards) and which are pure overhead (ReuseExchange already
-covers the fan-out).
+per-query min-of-3 noop-sink seconds plus that run's executed shuffle
+records and stages, to decide which lazy checkpoints are load-bearing
+(lineage re-run guards) and which are pure overhead (ReuseExchange
+already covers the fan-out).
 
 Usage: python tools/ckpt_ab.py q_a q_b ...
 
@@ -18,7 +18,6 @@ from __future__ import annotations
 import contextlib
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -48,16 +47,13 @@ def main() -> None:
 
     import __spark_entry__ as entry_mod
     from dump1090_stream_parser_spark.plans.inspect import formatted_plan
-    from dump1090_stream_parser_spark.plans.metrics import (
-        executed_stage_signature,
-    )
+    from dump1090_stream_parser_spark.plans.metrics import metered_run
 
     queries = entry_mod.queries()
     spark = get_spark(
         master=f"local[{cpus}]",
         app_name="ckpt_ab",
         shuffle_partitions=int(cpus),
-        extra_conf={"spark.ui.enabled": "true"},
     )
     spark.sparkContext.setLogLevel("ERROR")
     queries["q_group_topk"](spark, sf_dir).write.format("noop").mode(
@@ -65,14 +61,8 @@ def main() -> None:
     ).save()
 
     def run(name):
-        fn = queries[name]
-        reps = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            reps.append(time.perf_counter() - t0)
-        sig = executed_stage_signature(spark, lambda: fn(spark, sf_dir))
-        return min(reps), sig["shuffle_records"], sig["n_stages"]
+        r = metered_run(spark, lambda: queries[name](spark, sf_dir), reps=3)
+        return r["wall_s"], r["shuffle_records"], r["stages"]
 
     for name in names:
         t_on, rec_on, st_on = run(name)

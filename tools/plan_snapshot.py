@@ -170,10 +170,7 @@ def main() -> None:
     spark = get_spark(
         master="local[4]",
         shuffle_partitions=8,
-        extra_conf={
-            "spark.sql.autoBroadcastJoinThreshold": "1MB",
-            "spark.ui.enabled": "true",  # the executed meter needs it
-        },
+        extra_conf={"spark.sql.autoBroadcastJoinThreshold": "1MB"},
     )
     spark.sparkContext.setLogLevel("ERROR")
     if "--executed" in sys.argv:

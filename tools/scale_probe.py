@@ -27,6 +27,8 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from dump1090_stream_parser_spark.plans.metrics import metered_run  # noqa: E402
+
 SRC = "/root/testdata/sf0.1"
 
 #: Operators probed: scan/agg, narrow maps, dedup (exact + LSH), ANN,
@@ -236,6 +238,20 @@ def replicate(spark, factor: int, out_dir: str) -> None:
         df.write.mode("overwrite").parquet(f"{out_dir}/{name}.parquet")
 
 
+def metered(spark, fn, reps: int = 2, warm: bool = True) -> tuple[float, dict]:
+    """The fastest of ``reps`` metered runs of ``fn`` (after one untimed
+    warm run): its wall seconds and its stage-level shuffle volume
+    (plans/metrics.py -- robust to AQE empty-relation surgery and
+    checkpoint lineage cuts)."""
+    if warm:
+        fn().write.format("noop").mode("overwrite").save()
+    r = metered_run(spark, fn, reps)
+    return round(r["wall_s"], 3), {
+        "records": r["shuffle_records"],
+        "bytes": r["shuffle_bytes"],
+    }
+
+
 def main() -> None:
     max_factor = int(sys.argv[1]) if len(sys.argv) > 1 else 16
     scratch = sys.argv[2] if len(sys.argv) > 2 else "/tmp/scale_probe"
@@ -329,8 +345,6 @@ def fork_main() -> None:
         master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]",
         app_name="contam_fork_probe",
         shuffle_partitions=32,
-        # stage-level shuffle accounting reads the UI REST status store
-        extra_conf={"spark.ui.enabled": "true"},
     )
     spark.sparkContext.setLogLevel("ERROR")
     exact = e.queries()["q_contamination"]
@@ -381,29 +395,10 @@ def fork_main() -> None:
                 ),
             ),
         ):
-            # measured exchange volume (plans/metrics.py stage-level
-            # accounting -- robust to AQE empty-relation surgery and
-            # checkpoint lineage cuts): wall-clock at local[32] is
-            # md5-scan-bound, but exchange volume is the term that
-            # rules at cluster scale, so report both
-            from dump1090_stream_parser_spark.plans.metrics import (
-                stage_shuffle_delta,
-                stage_shuffle_snapshot,
-            )
-
-            fn().write.format("noop").mode("overwrite").save()  # warm
-            times = []
-            snap0 = stage_shuffle_snapshot(spark)
-            for _ in range(2):
-                t0 = time.perf_counter()
-                fn().write.format("noop").mode("overwrite").save()
-                times.append(time.perf_counter() - t0)
-            delta = stage_shuffle_delta(snap0, stage_shuffle_snapshot(spark))
-            row[label] = round(min(times), 3)
-            row[f"{label}_shuffle"] = {
-                "records": delta["shuffle_records"] // 2,
-                "bytes": delta["shuffle_bytes"] // 2,
-            }
+            # wall-clock at local[32] is md5-scan-bound, but exchange
+            # volume is the term that rules at cluster scale, so
+            # report both
+            row[label], row[f"{label}_shuffle"] = metered(spark, fn)
         # both variants must agree (same oracle); cheap cross-check
         a = {tuple(r) for r in exact(spark, sf_dir).collect()}
         b = {
@@ -453,10 +448,6 @@ def emb_main() -> None:
         emb_lsh_candidate_pairs,
         emb_lsh_near_dup_pairs,
     )
-    from dump1090_stream_parser_spark.plans.metrics import (
-        stage_shuffle_delta,
-        stage_shuffle_snapshot,
-    )
     from dump1090_stream_parser_spark.session import get_spark
 
     max_factor = int(sys.argv[2]) if len(sys.argv) > 2 else 64
@@ -475,7 +466,6 @@ def emb_main() -> None:
         app_name="emb_blocking_probe",
         shuffle_partitions=32,
         extra_conf={
-            "spark.ui.enabled": "true",
             # At probe sizes every join side fits under the 10 MB
             # broadcast threshold, which would hide the exchange
             # structure entirely (shuffle=0). At 100 TB no embedding
@@ -606,19 +596,9 @@ def emb_main() -> None:
             )
             v["surviving_pairs"] = stats["n"]
             v["planted_recall"] = round(stats["found"] / planted, 4)
-            reps = 1 if name == "all_pairs" else 2
-            times = []
-            snap0 = stage_shuffle_snapshot(spark)
-            for _ in range(reps):
-                t0 = time.perf_counter()
-                fn().write.format("noop").mode("overwrite").save()
-                times.append(time.perf_counter() - t0)
-            delta = stage_shuffle_delta(snap0, stage_shuffle_snapshot(spark))
-            v["wall_s"] = round(min(times), 3)
-            v["shuffle"] = {
-                "records": delta["shuffle_records"] // reps,
-                "bytes": delta["shuffle_bytes"] // reps,
-            }
+            v["wall_s"], v["shuffle"] = metered(
+                spark, fn, reps=1 if name == "all_pairs" else 2, warm=False
+            )
             row[name] = v
             print(json.dumps({f"x{factor}": {name: v}}), flush=True)
         out[f"x{factor}"] = row
@@ -660,10 +640,6 @@ def sem_main() -> None:
     from dump1090_stream_parser_spark.operators.similarity import (
         _nearest_cell_expr,
     )
-    from dump1090_stream_parser_spark.plans.metrics import (
-        stage_shuffle_delta,
-        stage_shuffle_snapshot,
-    )
     from dump1090_stream_parser_spark.session import get_spark
 
     max_factor = int(sys.argv[2]) if len(sys.argv) > 2 else 64
@@ -675,7 +651,6 @@ def sem_main() -> None:
         app_name="semantic_dedup_probe",
         shuffle_partitions=32,
         extra_conf={
-            "spark.ui.enabled": "true",
             # Same rationale as embsweep: at probe sizes every join
             # side broadcasts, hiding the exchange structure the probe
             # exists to measure.
@@ -858,16 +833,12 @@ def sem_main() -> None:
                 f"nprobe{p}": probe_recall(cents, p) for p in (1, 2)
             }
             # assignment strategies: build+exec wall for each
-            t0 = time.perf_counter()
-            lit = assign_literal_chain(emb, cents)
-            v["literal_build_s"] = round(time.perf_counter() - t0, 3)
-            t0 = time.perf_counter()
-            lit.write.format("noop").mode("overwrite").save()
-            v["literal_exec_s"] = round(time.perf_counter() - t0, 3)
+            lit = metered_run(spark, lambda: assign_literal_chain(emb, cents))
+            v["literal_build_s"] = round(lit["build_s"], 3)
+            v["literal_exec_s"] = round(lit["exec_s"], 3)
             assigned = assign_matmul(emb, cents)
-            t0 = time.perf_counter()
-            assigned.write.format("noop").mode("overwrite").save()
-            v["matmul_exec_s"] = round(time.perf_counter() - t0, 3)
+            mm = metered_run(spark, lambda: assigned)
+            v["matmul_exec_s"] = round(mm["exec_s"], 3)
             # pair space from the cell histogram (no pair materialized)
             hist = (
                 assigned.groupBy("cell_id")
@@ -909,19 +880,9 @@ def sem_main() -> None:
             )
             v["surviving_pairs"] = stats["n"]
             v["planted_recall"] = round(stats["found"] / planted, 4)
-            snap0 = stage_shuffle_snapshot(spark)
-            t0 = time.perf_counter()
-            within_cell_pairs(assigned).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            v["pair_join_wall_s"] = round(time.perf_counter() - t0, 3)
-            delta = stage_shuffle_delta(
-                snap0, stage_shuffle_snapshot(spark)
+            v["pair_join_wall_s"], v["shuffle"] = metered(
+                spark, lambda: within_cell_pairs(assigned), reps=1, warm=False
             )
-            v["shuffle"] = {
-                "records": delta["shuffle_records"],
-                "bytes": delta["shuffle_bytes"],
-            }
             row[f"C{n_cells}"] = v
             print(json.dumps({f"x{factor}": {f"C{n_cells}": v}}), flush=True)
         out[f"x{factor}"] = row
@@ -959,10 +920,6 @@ def span_main() -> None:
     """
     from pyspark.sql import functions as F
 
-    from dump1090_stream_parser_spark.plans.metrics import (
-        stage_shuffle_delta,
-        stage_shuffle_snapshot,
-    )
     from dump1090_stream_parser_spark.session import get_spark
 
     import __spark_entry__ as e
@@ -974,7 +931,6 @@ def span_main() -> None:
         app_name="span_fork_probe",
         shuffle_partitions=32,
         extra_conf={
-            "spark.ui.enabled": "true",
             "spark.sql.autoBroadcastJoinThreshold": "-1",
             "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
         },
@@ -1026,23 +982,9 @@ def span_main() -> None:
             "templates": max(n // 100, 1),
         }
         for label, fn in (("exact", exact), ("bloom", bloom)):
-            fn(spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()  # warm
-            times = []
-            snap0 = stage_shuffle_snapshot(spark)
-            for _ in range(2):
-                t0 = time.perf_counter()
-                fn(spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                times.append(time.perf_counter() - t0)
-            delta = stage_shuffle_delta(snap0, stage_shuffle_snapshot(spark))
-            row[label] = round(min(times), 3)
-            row[f"{label}_shuffle"] = {
-                "records": delta["shuffle_records"] // 2,
-                "bytes": delta["shuffle_bytes"] // 2,
-            }
+            row[label], row[f"{label}_shuffle"] = metered(
+                spark, lambda: fn(spark, sf_dir)
+            )
         a = {tuple(r) for r in exact(spark, sf_dir).collect()}
         b = {tuple(r) for r in bloom(spark, sf_dir).collect()}
         row["agree"] = a == b
@@ -1089,10 +1031,6 @@ def tri_main() -> None:
     from dump1090_stream_parser_spark.operators.basket import (
         triangle_census,
     )
-    from dump1090_stream_parser_spark.plans.metrics import (
-        stage_shuffle_delta,
-        stage_shuffle_snapshot,
-    )
     from dump1090_stream_parser_spark.session import get_spark
 
     max_factor = int(sys.argv[2]) if len(sys.argv) > 2 else 4
@@ -1101,7 +1039,6 @@ def tri_main() -> None:
         master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]",
         app_name="triangle_skew_probe",
         shuffle_partitions=32,
-        extra_conf={"spark.ui.enabled": "true"},
     )
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -1158,19 +1095,7 @@ def tri_main() -> None:
                 .collect()[0][0]
             )
             v: dict = {"wedge_paths": int(paths or 0)}
-            tri.write.format("noop").mode("overwrite").save()  # warm
-            times = []
-            snap0 = stage_shuffle_snapshot(spark)
-            for _ in range(2):
-                t0 = time.perf_counter()
-                tri.write.format("noop").mode("overwrite").save()
-                times.append(time.perf_counter() - t0)
-            delta = stage_shuffle_delta(snap0, stage_shuffle_snapshot(spark))
-            v["wall_s"] = round(min(times), 3)
-            v["shuffle"] = {
-                "records": delta["shuffle_records"] // 2,
-                "bytes": delta["shuffle_bytes"] // 2,
-            }
+            v["wall_s"], v["shuffle"] = metered(spark, lambda: tri)
             v["n_triangles"] = tri.collect()[0]["n_triangles"]
             row[orient] = v
             print(json.dumps({f"x{factor}": {orient: v}}), flush=True)
@@ -1205,10 +1130,6 @@ def cms_main() -> None:
     from dump1090_stream_parser_spark.operators.pipeline_ops import (
         countmin_cells,
     )
-    from dump1090_stream_parser_spark.plans.metrics import (
-        stage_shuffle_delta,
-        stage_shuffle_snapshot,
-    )
     from dump1090_stream_parser_spark.session import get_spark
 
     max_factor = int(sys.argv[2]) if len(sys.argv) > 2 else 64
@@ -1217,7 +1138,6 @@ def cms_main() -> None:
         master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]",
         app_name="cms_probe",
         shuffle_partitions=32,
-        extra_conf={"spark.ui.enabled": "true"},
     )
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -1238,19 +1158,7 @@ def cms_main() -> None:
             ("exact", lambda: keys.groupBy("user_id").count()),
             ("cms", lambda: countmin_cells(keys, "user_id")),
         ):
-            fn().write.format("noop").mode("overwrite").save()  # warm
-            times = []
-            snap0 = stage_shuffle_snapshot(spark)
-            for _ in range(2):
-                t0 = time.perf_counter()
-                fn().write.format("noop").mode("overwrite").save()
-                times.append(time.perf_counter() - t0)
-            delta = stage_shuffle_delta(snap0, stage_shuffle_snapshot(spark))
-            row[label] = round(min(times), 3)
-            row[f"{label}_shuffle"] = {
-                "records": delta["shuffle_records"] // 2,
-                "bytes": delta["shuffle_bytes"] // 2,
-            }
+            row[label], row[f"{label}_shuffle"] = metered(spark, fn)
         out[f"x{factor}"] = row
         print(json.dumps({f"x{factor}": row}))
 
@@ -1300,10 +1208,6 @@ def sov_main() -> None:
         _SOV_UNION_EST,
     )
     from dump1090_stream_parser_spark.operators.text import tokens_col
-    from dump1090_stream_parser_spark.plans.metrics import (
-        stage_shuffle_delta,
-        stage_shuffle_snapshot,
-    )
     from dump1090_stream_parser_spark.session import get_spark
     from dump1090_stream_parser_spark.tables import load_table
 
@@ -1316,7 +1220,6 @@ def sov_main() -> None:
         app_name="sov_fork_probe",
         shuffle_partitions=32,
         extra_conf={
-            "spark.ui.enabled": "true",
             "spark.sql.autoBroadcastJoinThreshold": "-1",
             "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
         },
@@ -1438,21 +1341,7 @@ def sov_main() -> None:
             ("exact", lambda d=sf_dir: exact(spark, d)),
             ("kmv", lambda d=sf_dir: sketch_arm(d)),
         ):
-            fn().write.format("noop").mode("overwrite").save()  # warm
-            times = []
-            snap0 = stage_shuffle_snapshot(spark)
-            for _ in range(2):
-                t0 = time.perf_counter()
-                fn().write.format("noop").mode("overwrite").save()
-                times.append(time.perf_counter() - t0)
-            delta = stage_shuffle_delta(
-                snap0, stage_shuffle_snapshot(spark)
-            )
-            row[label] = round(min(times), 3)
-            row[f"{label}_shuffle"] = {
-                "records": delta["shuffle_records"] // 2,
-                "bytes": delta["shuffle_bytes"] // 2,
-            }
+            row[label], row[f"{label}_shuffle"] = metered(spark, fn)
         ex = {
             (r["source_a"], r["source_b"]): r["jaccard"]
             for r in exact(spark, sf_dir).collect()
