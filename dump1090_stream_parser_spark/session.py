@@ -12,6 +12,16 @@ that we convert to microsecond timestamps ourselves.
 Everything in ``RUNTIME_CONF`` is runtime-settable, so the same settings
 can be applied to a SparkSession we did not create (the driver harness
 owns the session used by ``__spark_entry__``).
+
+:func:`get_spark` also turns PySpark's call-site capture off. On every
+DataFrame/Column function call, PySpark's ``_with_origin`` wrapper would
+otherwise look up the active session, read a conf, and set and clear the
+JVM-side origin: about five py4j round trips per call, a quarter of a
+warm plan build. What that loses is the PySpark ``file:line`` lines in a
+DataFrame error's context; Spark's error classes and messages stay. The
+flag is a static SQL conf (``spark.conf.set`` rejects it) that PySpark
+reads once per process, at its first wrapped call, so it is set where
+the session is created and a foreign session keeps its owner's choice.
 """
 
 from __future__ import annotations
@@ -77,6 +87,8 @@ def get_spark(
         # static: Spark's default of 100 generated classes thrashes on
         # query sets above about 100 classes, recompiling every pass
         .config("spark.sql.codegen.cache.maxEntries", "2000")
+        # static: no PySpark call-site capture (module docstring)
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for key, value in RUNTIME_CONF.items():
         builder = builder.config(key, value)

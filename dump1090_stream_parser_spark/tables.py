@@ -32,14 +32,22 @@ from .session import apply_runtime_conf
 #: :func:`clear_plan_caches` (ADVICE r13).
 _SCHEMA_CACHE: dict[str, "object"] = {}
 
+#: Finished :func:`load_table` frames, keyed on (session, path, spread)
+#: under the same immutability contract as ``_SCHEMA_CACHE``. The key
+#: holds the session object itself, so a frame is never served to
+#: another session; one whose SparkContext has stopped is dropped.
+_FRAME_CACHE: dict[tuple[SparkSession, str, bool], DataFrame] = {}
+
 
 def clear_plan_caches() -> None:
     """Explicit invalidation hook for the process-lifetime plan-build
-    caches (schemas, driver-side fixture rows, rendered ADC texts).
+    caches (schemas, scan frames, driver-side fixture rows, rendered
+    ADC texts).
     The caches key on file paths under an immutability contract;
     regeneration flows that rewrite those paths in-process call this
-    so stale schemas/rows are never served silently (ADVICE r13)."""
+    so stale schemas/rows/frames are never served silently (ADVICE r13)."""
     _SCHEMA_CACHE.clear()
+    _FRAME_CACHE.clear()
     from .operators import similarity as _sim
 
     _sim._DIM_CACHE.clear()
@@ -233,9 +241,26 @@ def load_table(
     operators whose scan stage carries heavy per-row compute (text
     tokenization, md5 fingerprints, array folds) and would otherwise
     serialize on an unsplittable input.
+
+    The finished frame is memoized per live session, path and
+    ``spread`` (``_FRAME_CACHE``): a warm call costs no py4j round trip,
+    where a build re-applies ``RUNTIME_CONF`` (one ``conf.set`` each)
+    and re-resolves the parquet relation, about 20 round trips. The
+    relation lists its files when the frame is built, so, as with the
+    schema cache, a file rewritten or added under a memoized path is not
+    seen until :func:`clear_plan_caches` runs. Two calls for the same
+    table return the same frame: self-join it through aliases or
+    renamed columns.
     """
+    path = table_path(sf_dir, name)
+    key = (spark, path, spread)
+    df = _FRAME_CACHE.get(key)
+    if df is not None and spark.sparkContext._jsc is not None:
+        return df
+    for k in list(_FRAME_CACHE):
+        if k[0].sparkContext._jsc is None:  # a stopped session's frame
+            _FRAME_CACHE.pop(k, None)
     apply_runtime_conf(spark)
-    path = f"{sf_dir.rstrip('/')}/{name}.parquet"
     # Schema-inference skip (r13 opt, guide §1.2 "per-task work" at the
     # driver): spark.read.parquet() infers the schema from the footer on
     # EVERY call (~130 ms); with an explicit schema the same read costs
@@ -257,6 +282,7 @@ def load_table(
         )
     if spread:
         df = scan_spread(spark, df, path)
+    _FRAME_CACHE[key] = df
     return df
 
 

@@ -36,6 +36,15 @@ def test_query_parity(spark, oracle, name):
     assert not problems, f"{name}: " + "; ".join(problems)
 
 
+def test_near_dedup_ngram_parity(spark, oracle):
+    """q_near_dedup_ngram sits deep in the derived window, so the
+    canary rule rarely puts it in the default run; its compare takes
+    about 7 s at sf0.001, so it is checked on every commit here."""
+    name = "q_near_dedup_ngram"
+    problems = compare(QUERIES[name](spark, SF_DIR), oracle, ORACLES[name])
+    assert not problems, f"{name}: " + "; ".join(problems)
+
+
 # -- the derived oracle window (operators/registry.py window_order) --------
 
 #: The drifted set of the seed ledger: the parked queries whose

@@ -1,8 +1,8 @@
 """A/B a set of queries with localCheckpoint enabled vs no-op'd:
-per-query min-of-3 noop-sink seconds plus that run's executed shuffle
-records and stages, to decide which lazy checkpoints are load-bearing
-(lineage re-run guards) and which are pure overhead (ReuseExchange
-already covers the fan-out).
+per-query min-of-3 noop-sink seconds plus that run's executor run ms,
+executed shuffle records and stages, to decide which lazy checkpoints
+are load-bearing (lineage re-run guards) and which are pure overhead
+(ReuseExchange already covers the fan-out).
 
 Usage: python tools/ckpt_ab.py q_a q_b ...
 
@@ -62,10 +62,10 @@ def main() -> None:
 
     def run(name):
         r = metered_run(spark, lambda: queries[name](spark, sf_dir), reps=3)
-        return r["wall_s"], r["shuffle_records"], r["stages"]
+        return r["wall_s"], r["executor_run_ms"], r["shuffle_records"], r["stages"]
 
     for name in names:
-        t_on, rec_on, st_on = run(name)
+        t_on, ms_on, rec_on, st_on = run(name)
         with checkpoints_off():
             plan = formatted_plan(queries[name](spark, sf_dir))
             found = [m for m in CHECKPOINT_MARKERS if m in plan]
@@ -73,11 +73,11 @@ def main() -> None:
                 raise RuntimeError(
                     f"{name}: off arm still checkpoints ({', '.join(found)} in plan)"
                 )
-            t_off, rec_off, st_off = run(name)
+            t_off, ms_off, rec_off, st_off = run(name)
         verdict = "SAME-RECORDS" if rec_on == rec_off else "RECORDS-DIFFER"
         print(
-            f"{name}: on {t_on:.3f}s/{rec_on}rec/{st_on}st"
-            f" | off {t_off:.3f}s/{rec_off}rec/{st_off}st  [{verdict}]"
+            f"{name}: on {t_on:.3f}s/{ms_on}ms/{rec_on}rec/{st_on}st"
+            f" | off {t_off:.3f}s/{ms_off}ms/{rec_off}rec/{st_off}st  [{verdict}]"
         )
 
     spark.stop()
