@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.exact import rank_cuts, scaled_int
 from ..tables import keyed_spread, load_table, table_path
 from .registry import query
 
@@ -592,16 +593,19 @@ def q_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     smallest price whose cumulative quantity weight reaches half the
     group's total (the lower weighted median).
 
-    Three stages, all exact: (1) a hash aggregation collapses the fact
+    Two stages, all exact: (1) a hash aggregation collapses the fact
     to (group, DISTINCT price) rows with summed cent-scaled integer
     weights -- the corpus-proportional step, mergeable map-side, after
     which everything is bounded by the price domain, not the row
-    count; (2) one per-group window pass computes the running and
-    total weights (both integer sums over the collapsed rows); (3) the
-    pick is the integer predicate 2*cumw >= tot followed by MIN --
-    no float interpolation exists anywhere, so there is no rounding
-    policy to share and the engines agree bitwise by construction
-    (the only doubles are the display /100.0 at the end).
+    count; (2) in the same group partition, ``rank_cuts``
+    (functions/exact.py) picks the median as the integer predicate
+    2*cumw >= tot over the running weight, and one ``groupBy(rf)``
+    reads it off next to the row count -- no float interpolation
+    exists anywhere, so there is no rounding policy to share and the
+    engines agree bitwise by construction (the only doubles are the
+    display /100.0 at the end). The spread is keyed on the group
+    alone, so at undershooting split counts one exchange serves the
+    collapse, the window and the final aggregate.
 
     Scale: the pre-aggregation is the same trick q_approx_percentile's
     value histogram uses -- the window never sees raw rows, only
@@ -616,45 +620,24 @@ def q_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     at-or-below >= half, weight strictly-below < half.
     """
     li = load_table(spark, sf_dir, "lineitem")
-    # keyed spread on the near-unique collapse key (see q_winsorize).
+    # keyed spread on the group alone (see q_winsorize).
     proj = li.select(
         F.col("l_returnflag").alias("rf"),
-        F.round(F.col("l_extendedprice") * 100, 0)
-        .cast("long")
-        .alias("price_c"),
-        F.round(F.col("l_quantity") * 100, 0)
-        .cast("long")
-        .alias("w_c"),
+        scaled_int(F.col("l_extendedprice")).alias("price_c"),
+        scaled_int(F.col("l_quantity")).alias("w_c"),
     )
-    proj = keyed_spread(
-        spark, proj, table_path(sf_dir, "lineitem"), ["rf", "price_c"]
-    )
+    proj = keyed_spread(spark, proj, table_path(sf_dir, "lineitem"), ["rf"])
     c = proj.groupBy("rf", "price_c").agg(
         F.sum("w_c").alias("w"),
         F.count(F.lit(1)).alias("n"),
     )
-    from pyspark.sql.window import Window
-
-    cum = c.select(
-        "rf",
-        "price_c",
-        F.sum("w")
-        .over(
-            Window.partitionBy("rf")
-            .orderBy("price_c")
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        .alias("cumw"),
-        F.sum("w").over(Window.partitionBy("rf")).alias("tot"),
-        F.sum("n").over(Window.partitionBy("rf")).alias("n_rows"),
-    )
     return (
-        cum.filter(2 * F.col("cumw") >= F.col("tot"))
+        rank_cuts(c, "rf", "price_c", "w", {"med": (1, 2)})
         .groupBy(F.col("rf").alias("l_returnflag"))
         .agg(
-            (F.min("price_c") / 100.0).alias("weighted_median_price"),
+            (F.max("med") / 100.0).alias("weighted_median_price"),
             (F.max("tot").cast("double") / 100.0).alias("total_weight"),
-            F.max("n_rows").alias("n_rows"),
+            F.sum("n").alias("n_rows"),
         )
     )
 
@@ -1343,17 +1326,19 @@ def q_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     statistics, then average -- emitted next to the raw mean so the
     tail influence is visible.
 
-    Three exact stages: (1) the q_weighted_median value collapse (one
+    Two exact stages: (1) the q_weighted_median value collapse (one
     hash aggregation to (group, DISTINCT cent-price, count) rows --
     the corpus-proportional step, after which everything is bounded by
-    the value domain); (2) cut-point selection as pure integer
-    predicates over one per-group cumulative-count window pass
-    (100*cum >= p*n -- the smallest value at or above the p-th
-    percentile, no interpolation policy to share cross-engine);
-    (3) the clipped aggregation reuses the SAME collapsed rows (counts
-    times clipped values -- integer products), broadcast-joined to the
-    3-row cut table. Only the two final display divisions are floats,
-    shared as one text.
+    the value domain); (2) in the same group partition, ``rank_cuts``
+    (functions/exact.py) selects both cut points as window columns --
+    pure integer predicates over one per-group cumulative-count
+    window (100*cum >= p*n: the smallest value at or above the p-th
+    percentile, no interpolation policy to share cross-engine) --
+    and one ``groupBy(rf)`` sums counts times clipped values (integer
+    products) over those same rows. The spread is keyed on the group
+    alone, so at undershooting split counts one exchange serves the
+    collapse, the window and the clipped sums. Only the two final
+    display divisions are floats, shared as one text.
 
     Scale: identical posture to q_weighted_median -- the window scans
     distinct values per group, groups hash-spread, and an unbounded
@@ -1364,50 +1349,23 @@ def q_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     pure Python (third-engine check) and pins the invariants
     p01 <= p99 and min <= winsor_mean <= max.
     """
-    from pyspark.sql.window import Window
-
     li = load_table(spark, sf_dir, "lineitem")
-    # keyed spread: (rf, price_c) is near-unique (~594k distinct cent
-    # prices from 600k rows at sf0.1), so partial aggregation buys
-    # nothing and the spread exchange doubles as the collapse
-    # exchange (see q_ks_test / tables.keyed_spread).
+    # keyed spread on the group alone: HashPartitioning(rf) satisfies
+    # the collapse's groupBy(rf, price_c), the cut window's
+    # partitionBy(rf) and the final groupBy(rf), so one exchange
+    # serves all three (see tables.keyed_spread).
     proj = li.select(
         F.col("l_returnflag").alias("rf"),
-        F.round(F.col("l_extendedprice") * 100, 0)
-        .cast("long")
-        .alias("price_c"),
+        scaled_int(F.col("l_extendedprice")).alias("price_c"),
     )
-    proj = keyed_spread(
-        spark, proj, table_path(sf_dir, "lineitem"), ["rf", "price_c"]
-    )
+    proj = keyed_spread(spark, proj, table_path(sf_dir, "lineitem"), ["rf"])
     c = proj.groupBy("rf", "price_c").agg(F.count(F.lit(1)).alias("cnt"))
-    cum = c.select(
+    cut = rank_cuts(
+        c,
         "rf",
         "price_c",
         "cnt",
-        F.sum("cnt")
-        .over(
-            Window.partitionBy("rf")
-            .orderBy("price_c")
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        .alias("cumn"),
-        F.sum("cnt").over(Window.partitionBy("rf")).alias("n"),
-    )
-    cuts = cum.groupBy("rf").agg(
-        F.max("n").alias("n"),
-        F.min(
-            F.when(
-                100 * F.col("cumn") >= WINSOR_LO * F.col("n"),
-                F.col("price_c"),
-            )
-        ).alias("lo_c"),
-        F.min(
-            F.when(
-                100 * F.col("cumn") >= WINSOR_HI * F.col("n"),
-                F.col("price_c"),
-            )
-        ).alias("hi_c"),
+        {"lo_c": (WINSOR_LO, 100), "hi_c": (WINSOR_HI, 100)},
     )
     clipped = F.when(
         F.col("price_c") < F.col("lo_c"), F.col("lo_c")
@@ -1415,10 +1373,9 @@ def q_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("price_c")
     )
     return (
-        c.join(F.broadcast(cuts), "rf")
-        .groupBy(F.col("rf").alias("l_returnflag"))
+        cut.groupBy(F.col("rf").alias("l_returnflag"))
         .agg(
-            F.max("n").alias("n_rows"),
+            F.max("tot").alias("n_rows"),
             (F.max("lo_c") / 100.0).alias("p01"),
             (F.max("hi_c") / 100.0).alias("p99"),
             # Sum the cnt*price products as decimal(38,0): DuckDB's
@@ -1429,7 +1386,7 @@ def q_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum(
                     (F.col("cnt") * F.col("price_c")).cast("decimal(38,0)")
                 ).cast("double")
-                / F.max("n").cast("double")
+                / F.max("tot").cast("double")
                 / 100.0,
                 6,
             ).alias("raw_mean"),
@@ -1437,7 +1394,7 @@ def q_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum(
                     (F.col("cnt") * clipped).cast("decimal(38,0)")
                 ).cast("double")
-                / F.max("n").cast("double")
+                / F.max("tot").cast("double")
                 / 100.0,
                 6,
             ).alias("winsor_mean"),

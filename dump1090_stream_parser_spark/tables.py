@@ -158,6 +158,15 @@ def keyed_spread(
     (guide §2.4 "two operations keyed the same way can often share one
     exchange").
 
+    Spreading on a grouping PREFIX goes further: HashPartitioning(rf)
+    satisfies a collapse's groupBy(rf, price_c), a partitionBy(rf)
+    window over the collapsed rows and a final groupBy(rf) alike, so
+    the whole chain runs on ONE exchange (q_winsorize and
+    q_weighted_median spread on ``["rf"]`` for their rank cuts). The
+    price is parallelism: the prefix must have enough distinct values
+    to spread the collapse, or the following window would have
+    gathered each group into one task anyway.
+
     Same undershoot condition as :func:`scan_spread` -- at production
     split counts this returns ``df`` untouched and the plan is the
     normal partial-agg -> exchange -> final-agg shape. Deterministic

@@ -51,6 +51,8 @@ def test_near_dedup_ngram_parity(spark, oracle):
 #: hand-kept round-14 rationale acknowledged a code change since their
 #: last green driver row with a ``block <hex>`` stamp. A query
 #: re-certified after round 14 leaves the comparison on both sides.
+#: q_weighted_median and q_winsorize joined when their blocks changed
+#: (exact rank cuts as window columns).
 SEED_ROUND = 14
 SEED_DRIFT = frozenset({
     "q_ann_ivf", "q_ann_ivf_join", "q_ann_ivf_trained",
@@ -62,6 +64,7 @@ SEED_DRIFT = frozenset({
     "q_rolling_fingerprint", "q_sbs1_gold_deadletter", "q_semantic_dedup",
     "q_set_overlap_kmv", "q_source_divergence", "q_source_overlap_kmv",
     "q_spatial_join", "q_subsample_ci", "q_table_digest", "q_train_split",
+    "q_weighted_median", "q_winsorize",
 })
 
 
@@ -70,8 +73,8 @@ def _seed_scope(names, ledger):
 
 
 def test_seed_ledger_drift_is_the_stamped_set():
-    """The seed ledger reproduces the hand-kept one: exactly the 32
-    stamped queries are drifted, so they (and no other query certified
+    """The seed ledger reproduces the hand-kept one: exactly the
+    SEED_DRIFT queries are drifted, so they (and no other query certified
     by round 14) lead the window. A change that edits another query's
     block fails here by name, as the rule intends: add the query to
     SEED_DRIFT in that change. Each name drops out of the check once a

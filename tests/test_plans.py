@@ -1124,3 +1124,76 @@ def test_keyed_spread_is_a_noop_at_production_split_counts(spark):
         assert out is orders
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
+
+
+def test_keyed_spread_on_the_group_prefix_serves_window_and_aggregate(spark):
+    """A spread keyed on the grouping PREFIX (``["grp"]``, not the
+    collapse key ``["grp", "v"]``): HashPartitioning(grp) satisfies the
+    collapse's groupBy(grp, v), a partitionBy(grp) window and a final
+    groupBy(grp), so the whole chain plans ONE exchange."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.window import Window
+
+    from dump1090_stream_parser_spark.tables import (
+        keyed_spread,
+        load_table,
+        table_path,
+    )
+
+    orders = load_table(spark, SF_DIR, "orders")
+    proj = orders.select(
+        F.col("o_orderpriority").alias("grp"),
+        F.round(F.col("o_totalprice") * 100, 0).cast("long").alias("v"),
+    )
+    proj = keyed_spread(spark, proj, table_path(SF_DIR, "orders"), ["grp"])
+    c = proj.groupBy("grp", "v").agg(F.count(F.lit(1)).alias("cnt"))
+    ranked = c.select(
+        "*", F.sum("cnt").over(Window.partitionBy("grp")).alias("tot")
+    )
+    out = ranked.groupBy("grp").agg(F.max("tot"), F.sum("cnt"))
+    final = formatted_plan(out).split("== Initial Plan ==")[0]
+    assert final.count(") Exchange") == 1, final
+    assert "hashpartitioning(grp" in final, final
+    assert spread_exchange_count(final) == 0, final
+
+
+def _rank_cut_plans(spark):
+    from dump1090_stream_parser_spark.operators.statistics import (
+        q_weighted_median,
+        q_winsorize,
+    )
+
+    return {
+        fn.__name__: formatted_plan(fn(spark, SF_DIR)).split(
+            "== Initial Plan =="
+        )[0]
+        for fn in (q_winsorize, q_weighted_median)
+    }
+
+
+def test_rank_cut_queries_plan_one_exchange(spark):
+    """q_winsorize and q_weighted_median pick their exact cuts as
+    window columns in the rf partition (functions/exact.rank_cuts):
+    at the undershooting sf0.001 split count the group-keyed spread is
+    the ONLY exchange -- no broadcast join-back of a cut table, no
+    second collapse, no final-aggregate exchange -- over one scan."""
+    for name, final in _rank_cut_plans(spark).items():
+        assert final.count(") Exchange") == 1, (name, final)
+        assert "hashpartitioning(rf" in final, (name, final)
+        assert "Join" not in final, (name, final)
+        assert final.count("/lineitem.parquet]") == 1, (name, final)
+
+
+def test_rank_cut_queries_scan_once_at_production_split_counts(spark):
+    """With keyed_spread a no-op (splits reach defaultParallelism),
+    the cut queries still plan no join and read lineitem once."""
+    prev = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "1k")
+    try:
+        plans = _rank_cut_plans(spark)
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
+    for name, final in plans.items():
+        assert "REPARTITION_BY_NUM" not in final, (name, final)
+        assert "Join" not in final, (name, final)
+        assert final.count("/lineitem.parquet]") == 1, (name, final)

@@ -832,3 +832,52 @@ def test_rank_sum_algebra_properties():
         assert abs(auc + neg_auc - 1.0) < 1e-12
 
     check()
+
+
+def test_rank_cuts_boundaries(spark):
+    """functions/exact.rank_cuts against pure-Python expected values on
+    a synthetic frame that lands ON the cut boundaries:
+
+    - group "a" has exactly 100 unit-weight rows with tied values
+      (0, 1, 1, 2, 2, ..., 49, 49, 50), so ``100 * cum == 1 * tot``
+      holds with equality at the first row and ``100 * cum == 99 *
+      tot`` inside the last tied run: ``>=`` picks 0 and 49, where a
+      strict ``>`` would pick 1 and 50;
+    - group "b" has even total weight 8 with running weights 1, 4, 6,
+      8, so the (1, 2) cut meets ``2 * cum == tot`` exactly at 20;
+    - group "c" holds a single (tied) value, which every cut returns.
+    """
+    import random
+
+    from dump1090_stream_parser_spark.functions.exact import rank_cuts
+
+    rows = [("a", (i + 1) // 2, 1) for i in range(100)]
+    rows += [("b", v, w) for v, w in ((10, 1), (20, 3), (30, 2), (40, 2))]
+    rows += [("c", 7, 2), ("c", 7, 5)]
+    random.Random(7).shuffle(rows)
+    cuts = {"lo": (1, 100), "med": (1, 2), "hi": (99, 100)}
+    df = spark.createDataFrame(rows, "g string, v long, w long")
+    got = rank_cuts(df, "g", "v", "w", cuts).collect()
+
+    def expected(pts, num, den):
+        tot = sum(w for _, w in pts)
+        cum = 0
+        for v, w in sorted(pts):
+            cum += w
+            if den * cum >= num * tot:
+                return v
+
+    by_g = {}
+    for g, v, w in rows:
+        by_g.setdefault(g, []).append((v, w))
+    assert len(got) == len(rows)
+    assert sorted(r["g"] for r in got) == sorted(g for g, _, _ in rows)
+    for r in got:
+        pts = by_g[r["g"]]
+        assert r["tot"] == sum(w for _, w in pts)
+        for name, (num, den) in cuts.items():
+            assert r[name] == expected(pts, num, den), (r, name)
+    pick = {r["g"]: r for r in got}
+    assert (pick["a"]["lo"], pick["a"]["med"], pick["a"]["hi"]) == (0, 25, 49)
+    assert pick["b"]["med"] == 20
+    assert (pick["c"]["lo"], pick["c"]["med"], pick["c"]["hi"]) == (7, 7, 7)
