@@ -254,15 +254,16 @@ def q_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     docstring documented): a hub then receives all its edges as
     targets, its out-degree stays bounded by its higher-degree
     neighbor count, and total path count is O(m^1.5) regardless of
-    skew -- measured on a scrambled-label power-law graph in
-    tools/scale_probe.py trisweep (docs/SCALE.md round-9 table),
-    where id order is uncorrelated with degree and the id-ordered
-    join's wedge-path input is the quadratic hub term. The orientation
-    cannot change the answer (any acyclic total order counts each
-    triangle exactly once -- tests/test_basket.py pins id == degree
-    census equality), so the oracle is unchanged. All legs are hash
-    equi-joins on node keys -- shuffles carry (node, node) integer
-    pairs, AQE handles residual skew. The edge derivation inherits
+    skew -- checked on a scrambled-label power-law graph by
+    tests/test_scale_claims.py::test_degree_orientation_splits_hub_wedges
+    (docs/SCALE.md round-9 table), where id order is uncorrelated with
+    degree and the id-ordered join's wedge-path input is the quadratic
+    hub term. The orientation cannot change the answer (any acyclic
+    total order counts each triangle exactly once --
+    tests/test_basket.py pins id == degree census equality), so the
+    oracle is unchanged. All legs are hash equi-joins on node keys --
+    shuffles carry (node, node) integer pairs, AQE handles residual
+    skew. The edge derivation inherits
     q_cooccur's basket-bounded argument; everything downstream is
     edge-proportional, never basket-proportional.
 
@@ -287,8 +288,8 @@ def _orient_edges(edges: DataFrame, orient: str) -> DataFrame:
     """Acyclic orientation of an undirected (u < v) edge set. "id"
     keeps the id order; "degree" re-orients each edge from the
     lower-(degree, node) endpoint to the higher -- the comparator that
-    splits a hub's quadratic wedge space (measured: tools/scale_probe
-    trisweep, docs/SCALE.md round-9 table). Any total order counts
+    splits a hub's quadratic wedge space (tests/test_scale_claims.py;
+    docs/SCALE.md round-9 table). Any total order counts
     each triangle exactly once, so the census is orientation-
     independent; only the closing join's input size changes."""
     if orient == "id":
@@ -324,7 +325,8 @@ def triangle_census(
     come from the UNDIRECTED set (orientation-independent by
     definition); the 3-clique join runs over the chosen acyclic
     orientation. ``_oriented_only`` exposes the oriented edge frame so
-    the skew probe can measure the closing join's exact input size."""
+    tests/test_scale_claims.py can count the closing join's exact input
+    size."""
     if not _oriented_only:
         # Lazy checkpoint back IN after the round-13 array-side pair
         # rewrite: edges now ends in the pair-count FINAL aggregation

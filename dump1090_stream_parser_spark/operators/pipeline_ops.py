@@ -648,13 +648,12 @@ def bloom_bitmap_from_grams(
     )
 
 
-def contamination_bloom_from(
-    spark: SparkSession, sf_dir: str, bloom_words: int = BLOOM_WORDS
-) -> DataFrame:
-    """q_contamination_bloom's body with the filter geometry as a
-    parameter: the registered query runs the BLOOM_WORDS default; the
-    scaling probe (tools/scale_probe.py) grows ``bloom_words`` with a
-    widened synthetic eval split, per the documented n/m sizing rule."""
+def contamination_bloom_from(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """q_contamination_bloom's body, at the BLOOM_WORDS geometry. A
+    larger eval split takes a larger power of two per the documented
+    n/m sizing rule (docs/SCALE.md's historical contamination fork
+    section ran 2^20 words); tests/test_scale_claims.py checks the
+    fork's exchange relation at this geometry."""
     staged, grams = _contam_grams(spark, sf_dir)
     eval_grams = (
         grams.filter(F.col("bucket") >= _EVAL_GE).select("gh").distinct()
@@ -663,8 +662,8 @@ def contamination_bloom_from(
     # semi-join) read eval_grams; its distinct exchange is replayed by
     # ReuseExchange per consumer, so the former lazy checkpoint was
     # removed in round 13 (A/B: identical executed shuffle records).
-    w, mask = _bloom_word_bit("gh", bloom_words)
-    bloom = bloom_bitmap_from_grams(eval_grams, bloom_words)
+    w, mask = _bloom_word_bit("gh")
+    bloom = bloom_bitmap_from_grams(eval_grams)
     probe = grams.filter(F.col("bucket") < _TRAIN_LT).select(
         "doc_id", "source", "gh", w.alias("w"), mask.alias("mask")
     )

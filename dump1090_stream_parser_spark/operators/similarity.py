@@ -1390,18 +1390,16 @@ def _plane_dots_col(emb: Column, planes: list[list[float]]) -> Column:
     )
 
 
-def _band_bucket_from_dots_sql(
-    band: int, planes_per_band: int = EMB_LSH_PLANES
-) -> str:
+def _band_bucket_from_dots_sql(band: int) -> str:
     """Band bucket (R sign bits) off the staged ``_dots`` array column,
     as SQL text: the Column-API form (R chained F.when/+ calls per
     band) cost ~6 py4j round trips per bit -- rendered text is one
     ``selectExpr`` for ALL bands. Identical expression tree (F.when
     compiles to this CASE WHEN; same bit order, same INT literals)."""
     return " + ".join(
-        f"(CASE WHEN _dots[{band * planes_per_band + r}] > 0"
+        f"(CASE WHEN _dots[{band * EMB_LSH_PLANES + r}] > 0"
         f" THEN {1 << r} ELSE 0 END)"
-        for r in range(planes_per_band)
+        for r in range(EMB_LSH_PLANES)
     )
 
 
@@ -1419,22 +1417,16 @@ def _band_bucket_sql(emb: str, band: int) -> str:
     )
 
 
-def emb_lsh_candidate_pairs(
-    emb: DataFrame,
-    dim: int,
-    *,
-    bands: int = EMB_LSH_BANDS,
-    planes_per_band: int = EMB_LSH_PLANES,
-) -> DataFrame:
+def emb_lsh_candidate_pairs(emb: DataFrame, dim: int) -> DataFrame:
     """Banded hyperplane-LSH candidate pairs (vec_id_1 < vec_id_2),
-    each emitted EXACTLY ONCE at its first agreeing band -- the
-    parameterized core of q_near_dedup_embedding_lsh (that query's
-    docstring carries the full shape/scale argument). ``bands`` is the
-    recall dial, ``planes_per_band`` (R) the block-size dial (expected
-    block n/2^R): the registered query runs R=4/B=8 for this corpus's
-    weak 0.4 threshold; a production cos>=0.9 run uses R=8..16
-    (tools/scale_probe.py embsweep measures that regime)."""
-    planes = _planes_py_n(dim, bands * planes_per_band)
+    each emitted EXACTLY ONCE at its first agreeing band -- the core of
+    q_near_dedup_embedding_lsh (that query's docstring carries the full
+    shape/scale argument). EMB_LSH_BANDS is the recall dial,
+    EMB_LSH_PLANES (R) the block-size dial (expected block n/2^R):
+    R=4/B=8 fits this corpus's weak 0.4 threshold; a production
+    cos>=0.9 run uses R=8..16 (docs/SCALE.md's historical embedding
+    blocking section measured that regime)."""
+    planes = _planes_py_n(dim, EMB_LSH_BANDS * EMB_LSH_PLANES)
     staged = emb.select(
         "vec_id",
         _plane_dots_col(F.col("embedding"), planes).alias("_dots"),
@@ -1442,8 +1434,8 @@ def emb_lsh_candidate_pairs(
     sigs = staged.selectExpr(
         "vec_id",
         *[
-            f"({_band_bucket_from_dots_sql(b, planes_per_band)}) AS b{b}"
-            for b in range(bands)
+            f"({_band_bucket_from_dots_sql(b)}) AS b{b}"
+            for b in range(EMB_LSH_BANDS)
         ],
     )
     # Lazy localCheckpoint: the signature projection (B*R inlined-
@@ -1460,7 +1452,7 @@ def emb_lsh_candidate_pairs(
     sigs = sigs.localCheckpoint(eager=False)
     a, b = sigs.alias("a"), sigs.alias("b")
     branches = []
-    for band in range(bands):
+    for band in range(EMB_LSH_BANDS):
         # Condition as ONE parsed expression: the Column-API chain cost
         # ~2+band py4j round trips per branch (44 across B=8).
         cond = F.expr(
@@ -1477,25 +1469,16 @@ def emb_lsh_candidate_pairs(
     return _functools.reduce(lambda x, y: x.unionByName(y), branches)
 
 
-def emb_lsh_near_dup_pairs(
-    emb: DataFrame,
-    dim: int,
-    *,
-    bands: int = EMB_LSH_BANDS,
-    planes_per_band: int = EMB_LSH_PLANES,
-    threshold: float = EMB_NEAR_DUP_THRESHOLD,
-) -> DataFrame:
+def emb_lsh_near_dup_pairs(emb: DataFrame, dim: int) -> DataFrame:
     """LSH-blocked embedding near-dup: candidates (above) + exact-cosine
-    verify join, keeping cos >= threshold. Norms are per-VECTOR, so
-    compute them once on the 2 n-row sides (HOF fold over n rows)
-    instead of per candidate pair -- same doubles bit-for-bit, ~20% off
-    the end-to-end line at sf0.1. The dot stays the HOF fold
-    deliberately: unrolling it into a flat 64-term expression measured
+    verify join, keeping cos >= EMB_NEAR_DUP_THRESHOLD. Norms are
+    per-VECTOR, so compute them once on the 2 n-row sides (HOF fold
+    over n rows) instead of per candidate pair -- same doubles
+    bit-for-bit, ~20% off the end-to-end line at sf0.1. The dot stays
+    the HOF fold deliberately: unrolling it into a flat 64-term expression measured
     3.5x SLOWER (kicks the stage out of WholeStageCodegen; see
     functions/vector.py module docstring)."""
-    cand = emb_lsh_candidate_pairs(
-        emb, dim, bands=bands, planes_per_band=planes_per_band
-    )
+    cand = emb_lsh_candidate_pairs(emb, dim)
     nrm = norm(F.col("embedding"))
     ea = emb.select(
         F.col("vec_id").alias("vec_id_1"),
@@ -1514,7 +1497,7 @@ def emb_lsh_near_dup_pairs(
         cand.join(ea, "vec_id_1")
         .join(eb, "vec_id_2")
         .select("vec_id_1", "vec_id_2", cos.alias("cos_sim"))
-        .filter(F.col("cos_sim") >= threshold)
+        .filter(F.col("cos_sim") >= EMB_NEAR_DUP_THRESHOLD)
     )
 
 
@@ -1584,13 +1567,7 @@ def q_near_dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-exact across engines."""
     emb = load_table(spark, sf_dir, "embeddings")
     dim = _embedding_dim(emb, sf_dir)
-    return emb_lsh_near_dup_pairs(
-        emb,
-        dim,
-        bands=EMB_LSH_BANDS,
-        planes_per_band=EMB_LSH_PLANES,
-        threshold=EMB_NEAR_DUP_THRESHOLD,
-    )
+    return emb_lsh_near_dup_pairs(emb, dim)
 
 
 # --------------------------------------------------------------------------

@@ -1526,14 +1526,14 @@ def q_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ks_pairs_from_counts(c)
 
 
-def ks_pairs_from_counts(c: DataFrame) -> DataFrame:
-    """q_ks_test's pair stage over a (grp, v, cnt) count-collapse
-    frame -- factored out so the streaming drift monitor
-    (streaming/drift.py) computes the identical integer algebra from
-    its histogram-state snapshots. ``c`` must hold one row per
-    (group, distinct value) with exact integer counts."""
-    from pyspark.sql.window import Window
-
+def _two_sample_stack(c: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The pairwise two-sample front end over a (grp, v, cnt)
+    count-collapse frame, shared by q_ks_test (through
+    :func:`ks_pairs_from_counts`) and q_mann_whitney. Returns
+    ``(pairs, m)``: ``pairs`` holds each cohort pair g1 < g2 with its
+    totals n1 and n2; ``m`` holds one (g1, g2, v, c1, c2) row per pair
+    and per value of either cohort, the count on its own leg and 0 on
+    the other."""
     nt = c.groupBy("grp").agg(F.sum("cnt").alias("n"))
     a, b = nt.alias("a"), nt.alias("b")
     pairs = a.join(b, F.col("a.grp") < F.col("b.grp")).select(
@@ -1564,6 +1564,18 @@ def ks_pairs_from_counts(c: DataFrame) -> DataFrame:
         (F.col("cnt") * F.col("ia")).alias("c1"),
         (F.col("cnt") * (1 - F.col("ia"))).alias("c2"),
     )
+    return pairs, m
+
+
+def ks_pairs_from_counts(c: DataFrame) -> DataFrame:
+    """q_ks_test's pair stage over a (grp, v, cnt) count-collapse
+    frame -- factored out so the streaming drift monitor
+    (streaming/drift.py) computes the identical integer algebra from
+    its histogram-state snapshots. ``c`` must hold one row per
+    (group, distinct value) with exact integer counts."""
+    from pyspark.sql.window import Window
+
+    pairs, m = _two_sample_stack(c)
     # No (g1, g2, v) re-aggregation (round 13): a RANGE frame admits
     # every peer row (same v) into the cumulative sums together, so
     # the two stacked legs of one value both read the FULL cum1/cum2
@@ -2042,35 +2054,7 @@ def q_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, proj, table_path(sf_dir, "orders"), ["grp", "v"]
     )
     c = proj.groupBy("grp", "v").agg(F.count(F.lit(1)).alias("cnt"))
-    nt = c.groupBy("grp").agg(F.sum("cnt").alias("n"))
-    a, b = nt.alias("a"), nt.alias("b")
-    pairs = (
-        a.join(b, F.col("a.grp") < F.col("b.grp"))
-        .select(
-            F.col("a.grp").alias("g1"),
-            F.col("b.grp").alias("g2"),
-            F.col("a.n").alias("n1"),
-            F.col("b.n").alias("n2"),
-        )
-    )
-    # ONE pass over the collapse via the broadcast ROLES dim (the
-    # ks_pairs_from_counts restructure, round 13): identical stacked
-    # rows, one join instead of two legs + Union.
-    sides = pairs.select("g1", "g2")
-    roles = sides.select(
-        F.col("g1").alias("grp"), "g1", "g2", F.lit(1).alias("ia")
-    ).unionAll(
-        sides.select(
-            F.col("g2").alias("grp"), "g1", "g2", F.lit(0).alias("ia")
-        )
-    )
-    m = c.join(F.broadcast(roles), "grp").select(
-        "g1",
-        "g2",
-        "v",
-        (F.col("cnt") * F.col("ia")).alias("c1"),
-        (F.col("cnt") * (1 - F.col("ia"))).alias("c2"),
-    )
+    pairs, m = _two_sample_stack(c)
     # No (g1, g2, v) re-aggregation (round 13, the q_ks_test RANGE-
     # frame discipline): the stacked legs stay as rows, and per-value
     # combined counts come from a PEER frame (range 0..0 -- all rows

@@ -24,11 +24,11 @@ across micro-batch splits and a checkpoint restart).
 State posture: the exact seen-set grows with DISTINCT corpus grams --
 deliberate, like the semantic-dedup twin's cell membership (novelty
 against all history is inherently corpus-stateful). The dials, in
-preference order at scale: RocksDB state store -- WIRED AND MEASURED
-since round 10: docs/SCALE.md's statesweep shows flat ~35 KB executor
-heap with the seen-set in SST files vs the default provider's
-corpus-linear heap, and tests/test_novelty_stream.py pins bit-equal
-output on the RocksDB provider -- then a TTL for windowed novelty
+preference order at scale: RocksDB state store -- wired since round
+10: docs/SCALE.md's statesweep (historical, round 10, not re-measured)
+showed flat ~35 KB executor heap with the seen-set in SST files vs the
+default provider's corpus-linear heap, and tests/test_novelty_stream.py
+pins bit-equal output on the RocksDB provider -- then a TTL for windowed novelty
 ("new in the last 90 days", the near-dup twin's eviction precedent),
 or swapping the per-shard set for the contamination gate's Bloom
 words when a one-sided ESTIMATE is acceptable (false "seen" verdicts

@@ -52,18 +52,22 @@ def test_near_dedup_ngram_parity(spark, oracle):
 #: last green driver row with a ``block <hex>`` stamp. A query
 #: re-certified after round 14 leaves the comparison on both sides.
 #: q_weighted_median and q_winsorize joined when their blocks changed
-#: (exact rank cuts as window columns).
+#: (exact rank cuts as window columns); q_mann_whitney (shared
+#: two-sample front end), q_near_dedup_embedding_lsh (LSH geometry
+#: folded into constants) and q_triangles (docstring cites its scale
+#: test) joined with the same plans.
 SEED_ROUND = 14
 SEED_DRIFT = frozenset({
     "q_ann_ivf", "q_ann_ivf_join", "q_ann_ivf_trained",
     "q_ann_ivf_trained_join", "q_ann_pq", "q_ann_pq_pruned", "q_benford",
     "q_bm25", "q_chunk_docs", "q_containment", "q_countmin",
-    "q_dedup_best", "q_hill", "q_knn_join", "q_lang_id",
-    "q_near_dedup_simhash", "q_ngram_top", "q_opq_encode", "q_percentile",
-    "q_pq_encode", "q_quality_filter", "q_random_projection",
-    "q_rolling_fingerprint", "q_sbs1_gold_deadletter", "q_semantic_dedup",
-    "q_set_overlap_kmv", "q_source_divergence", "q_source_overlap_kmv",
-    "q_spatial_join", "q_subsample_ci", "q_table_digest", "q_train_split",
+    "q_dedup_best", "q_hill", "q_knn_join", "q_lang_id", "q_mann_whitney",
+    "q_near_dedup_embedding_lsh", "q_near_dedup_simhash", "q_ngram_top",
+    "q_opq_encode", "q_percentile", "q_pq_encode", "q_quality_filter",
+    "q_random_projection", "q_rolling_fingerprint",
+    "q_sbs1_gold_deadletter", "q_semantic_dedup", "q_set_overlap_kmv",
+    "q_source_divergence", "q_source_overlap_kmv", "q_spatial_join",
+    "q_subsample_ci", "q_table_digest", "q_train_split", "q_triangles",
     "q_weighted_median", "q_winsorize",
 })
 
@@ -203,3 +207,18 @@ def test_ledger_rounds_are_the_newest_green_rows():
             if q in QUERIES and v.get("rows_match") and v.get("hash_match"):
                 newest[q] = max(newest.get(q, 0), n)
     assert {q: v["round"] for q, v in ledger.items()} == newest
+
+
+def test_query_catalog_matches_its_generator():
+    """docs/QUERIES.md is tools/make_catalog.py's output as committed.
+    Its eval column follows the derived window, so editing a query block
+    changes the file: regenerate it with
+    ``python tools/make_catalog.py > docs/QUERIES.md``."""
+    import subprocess
+    import sys
+
+    out = subprocess.run(
+        [sys.executable, "tools/make_catalog.py"],
+        cwd=str(ROOT), capture_output=True, text=True, check=True,
+    ).stdout
+    assert out == (ROOT / "docs" / "QUERIES.md").read_text()
