@@ -567,37 +567,29 @@ def q_mix_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 BLOOM_WORDS = 1 << 16
 
 
-def _bloom_word_bit(col_name: str, bloom_words: int = BLOOM_WORDS):
+def _bloom_word_bit(col_name: str):
     """(word index, single-bit mask) columns for the named 60-bit
     non-negative hash column. Takes a NAME, not a Column: the mask's
     shift-by-a-column has no Column-API form, so it is built via
     F.expr and must reference the column by name -- taking the name
     makes that contract explicit instead of silently capturing 'gh'.
 
-    Word index uses the LOW bits (pmod by bloom_words); the bit-in-word
+    Word index uses the LOW bits (pmod by BLOOM_WORDS); the bit-in-word
     draws from bits 27-32 (>> 27), DISJOINT from the word index for any
-    bloom_words <= 2^27 -- i.e. the coordinates stay independent over
+    BLOOM_WORDS <= 2^27 -- i.e. the coordinates stay independent over
     the documented geometry range all the way to the 1 GiB sharding
     ceiling, so the n/m false-positive model holds as BLOOM_WORDS
     scales. (Correctness never depended on this -- the exact semi-join
     scrubs false positives -- only the fp-rate model does.)
 
-    ``bloom_words`` must be a power of two: the disjointness argument
-    reads pmod-by-bloom_words as "take the low lg2(bloom_words) bits",
+    BLOOM_WORDS must be a power of two: the disjointness argument
+    reads pmod-by-BLOOM_WORDS as "take the low lg2(BLOOM_WORDS) bits",
     which is only true for powers of two -- a non-power modulus folds
     ALL bits of gh (including 27-32) into the word index and correlates
-    the two coordinates."""
-    if bloom_words & (bloom_words - 1) or bloom_words <= 0:
-        raise ValueError(
-            f"bloom_words must be a power of two, got {bloom_words}"
-        )
-    if bloom_words > 1 << 27:
-        raise ValueError(
-            f"bloom_words above 2^27 overlaps the bit-in-word field"
-            f" (bits 27-32), correlating the bloom coordinates; shard"
-            f" the filter by gh range instead (got {bloom_words})"
-        )
-    w = F.pmod(F.col(col_name), F.lit(bloom_words)).cast("int")
+    the two coordinates. tests/test_plans.py checks both bounds. Every
+    bitmap and every probe shares this one geometry, so a probe cannot
+    miss a bit its bitmap set."""
+    w = F.pmod(F.col(col_name), F.lit(BLOOM_WORDS)).cast("int")
     mask = F.expr(
         f"shiftleft(1L, CAST(pmod(shiftright({col_name}, 27), 64) AS INT))"
     )
@@ -631,16 +623,14 @@ def q_contamination_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     return contamination_bloom_from(spark, sf_dir)
 
 
-def bloom_bitmap_from_grams(
-    grams: DataFrame, bloom_words: int = BLOOM_WORDS
-) -> DataFrame:
+def bloom_bitmap_from_grams(grams: DataFrame) -> DataFrame:
     """``(w, word)`` bitmap rows from a distinct ``gh`` frame: at most
-    ``bloom_words`` rows, MiB-class broadcast at any gram count under
+    ``BLOOM_WORDS`` rows, MiB-class broadcast at any gram count under
     the documented geometry rule. ONE definition shared by the batch
     audit below and the streaming decontamination gate
     (streaming/decontaminate.py), so the two sides' bit layout cannot
     drift."""
-    w, mask = _bloom_word_bit("gh", bloom_words)
+    w, mask = _bloom_word_bit("gh")
     return (
         grams.select(w.alias("w"), mask.alias("mask"))
         .groupBy("w")

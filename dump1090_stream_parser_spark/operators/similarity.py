@@ -1034,17 +1034,6 @@ SEMANTIC_DEDUP_TAU = EMB_NEAR_DUP_THRESHOLD
 _SEM_DEDUP_BLOCK = 2048
 
 
-def _cell_pair_scores_fn(tau: float):
-    """Build the per-cell scorer with the threshold closed over (the
-    registered query passes SEMANTIC_DEDUP_TAU; the trained-quantizer
-    entry point below accepts a production threshold)."""
-
-    def _cell_pair_scores(pdf):
-        return _score_cell_pairs(pdf, tau)
-
-    return _cell_pair_scores
-
-
 def _score_cell_pairs(pdf, tau: float):
     """All near-threshold (lower-id, higher-id) cosines for ONE cell
     (applyInPandas body of q_semantic_dedup).
@@ -1196,9 +1185,7 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def semantic_dedup_manifest(
-    emb: DataFrame, cent_rows: list, tau: float = SEMANTIC_DEDUP_TAU
-) -> DataFrame:
+def semantic_dedup_manifest(emb: DataFrame, cent_rows: list) -> DataFrame:
     """The q_semantic_dedup pipeline over an ARBITRARY quantizer
     (``cent_rows``: anything indexable by 'cell_id'/'embedding' --
     Rows or dicts). The registered query feeds the deterministic seed
@@ -1209,12 +1196,10 @@ def semantic_dedup_manifest(
         "embedding",
         _nearest_cell_expr(cent_rows).alias("cell_id"),
     )
-    return semantic_dedup_from_assigned(assign, tau)
+    return semantic_dedup_from_assigned(assign)
 
 
-def semantic_dedup_from_assigned(
-    assign: DataFrame, tau: float = SEMANTIC_DEDUP_TAU
-) -> DataFrame:
+def semantic_dedup_from_assigned(assign: DataFrame) -> DataFrame:
     """The manifest pipeline from a PRE-ASSIGNED (vec_id, embedding,
     cell_id) relation -- the shape an at-rest
     ``plans.layout.ivf_cell_bucketed_layout`` table provides. Over a
@@ -1223,7 +1208,7 @@ def semantic_dedup_from_assigned(
     group's ClusteredDistribution; asserted in tests/test_plans.py);
     the registered query feeds it the on-the-fly assignment instead."""
     pairs = assign.groupBy("cell_id").applyInPandas(
-        _cell_pair_scores_fn(tau),
+        lambda pdf: _score_cell_pairs(pdf, SEMANTIC_DEDUP_TAU),
         schema=(
             "vec_id bigint, cell_id int, kept_by bigint, cos_raw double"
         ),
@@ -1233,7 +1218,7 @@ def semantic_dedup_from_assigned(
         "cell_id",
         "kept_by",
         F.round(F.col("cos_raw"), 6).alias("cos_sim"),
-    ).filter(F.col("cos_sim") >= tau)
+    ).filter(F.col("cos_sim") >= SEMANTIC_DEDUP_TAU)
     w = Window.partitionBy("vec_id").orderBy(
         F.desc("cos_sim"), F.asc("kept_by")
     )
@@ -1248,7 +1233,6 @@ def semantic_dedup_trained(
     emb: DataFrame,
     k: int = N_CELLS,
     iters: int = 5,
-    tau: float = SEMANTIC_DEDUP_TAU,
 ) -> DataFrame:
     """Production semantic dedup: k-means-train the quantizer
     (``train_ivf_centroids`` -- at 100 TB, on a uniform sample), then
@@ -1259,7 +1243,7 @@ def semantic_dedup_trained(
     cent_rows = [
         {"cell_id": i, "embedding": c} for i, c in enumerate(cents)
     ]
-    return semantic_dedup_manifest(emb, cent_rows, tau)
+    return semantic_dedup_manifest(emb, cent_rows)
 
 
 LSH_PROBE_HAMMING = 2  # multi-probe width: buckets within this hamming

@@ -54,7 +54,7 @@ def auc_stream(stream: DataFrame, score_grain: int | None = None) -> DataFrame:
 
     ``score_grain`` (ADVICE r10): state cardinality is the distinct-
     score grid, and a continuous production score domain would grow it
-    without bound under GroupStateTimeout.NoTimeout. Pass a decimal
+    without bound, since this twin's state has no TTL. Pass a decimal
     grain (e.g. 4) to round scores before the stateful groupBy, capping
     state at 10^grain * range rows -- the q_auc docstring's fixed-grain
     remedy, available in the stream path instead of only documented.

@@ -12,15 +12,13 @@ batch prefilter bit-for-bit -- pinned by
 
 Semantics (why this is sound without the full eval set on the stream):
 
-- The bitmap is the SAME <= bloom_words-row ``(word, bit_or(mask))``
+- The bitmap is the SAME <= BLOOM_WORDS-row ``(word, bit_or(mask))``
   aggregation over the distinct eval grams that
   ``contamination_bloom_from`` broadcasts -- MiB-class at any eval
-  size under the documented geometry rule. It travels as an
-  :class:`EvalBitmap` that CARRIES its geometry: probing with a
-  different ``bloom_words`` than the bitmap was built with would make
-  the word-index join miss silently -- false negatives routed to the
-  FINAL clean sink -- so the API makes the mismatch unrepresentable
-  instead of documented-against.
+  size under the documented geometry rule. Build and probe share the
+  one ``BLOOM_WORDS`` geometry (``pipeline_ops._bloom_word_bit``), so
+  a probe cannot miss a bit its bitmap set: no geometry mismatch can
+  route a false negative to the FINAL clean sink.
 - A Bloom filter has NO false negatives: a document whose grams all
   miss the bitmap certainly shares no word CONTAM_K-gram with the
   eval corpus. Those routes to ``clean/`` are FINAL.
@@ -45,37 +43,15 @@ be planned).
 
 from __future__ import annotations
 
-from typing import NamedTuple
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.pipeline_ops import (
-    BLOOM_WORDS,
     _bloom_word_bit,
     bloom_bitmap_from_grams,
     contam_grams_array,
 )
 from ..operators.text import tokens_col
-
-
-class EvalBitmap(NamedTuple):
-    """A bloom bitmap plus the geometry it was built with. Probe and
-    build MUST share ``bloom_words`` (the word index is gh mod
-    bloom_words on both sides); bundling them makes a geometry
-    mismatch -- which would silently produce false negatives into the
-    final clean sink -- unrepresentable."""
-
-    rows: DataFrame  #: (w, word) rows, <= bloom_words of them
-    bloom_words: int
-
-    def persist(self) -> "EvalBitmap":
-        self.rows.persist()
-        return self
-
-    def unpersist(self) -> "EvalBitmap":
-        self.rows.unpersist()
-        return self
 
 
 def _distinct_grams(docs: DataFrame) -> DataFrame:
@@ -90,22 +66,17 @@ def _distinct_grams(docs: DataFrame) -> DataFrame:
     )
 
 
-def eval_bloom_bitmap(
-    eval_docs: DataFrame, bloom_words: int = BLOOM_WORDS
-) -> EvalBitmap:
-    """Build the gate's bitmap over the eval corpus -- the identical
-    ``bloom_bitmap_from_grams`` aggregation the batch audit broadcasts.
-    ``.persist()`` the result before handing it to
+def eval_bloom_bitmap(eval_docs: DataFrame) -> DataFrame:
+    """Build the gate's ``(w, word)`` bitmap over the eval corpus -- the
+    identical ``bloom_bitmap_from_grams`` aggregation the batch audit
+    broadcasts. ``.persist()`` the result before handing it to
     :func:`decontaminate_gate` (the gate joins it into EVERY
     micro-batch; without persistence Spark would re-derive it from the
     eval corpus each batch)."""
-    return EvalBitmap(
-        bloom_bitmap_from_grams(_distinct_grams(eval_docs), bloom_words),
-        bloom_words,
-    )
+    return bloom_bitmap_from_grams(_distinct_grams(eval_docs))
 
 
-def gate_docs(docs: DataFrame, bitmap: EvalBitmap) -> DataFrame:
+def gate_docs(docs: DataFrame, bitmap: DataFrame) -> DataFrame:
     """Classify documents against the bitmap: input columns plus
     ``n_suspect_grams`` (bit-hit gram occurrences) and ``suspect``.
     Works identically on a batch frame and on a micro-batch inside
@@ -114,10 +85,10 @@ def gate_docs(docs: DataFrame, bitmap: EvalBitmap) -> DataFrame:
     grams = staged.select(
         "doc_id", F.explode(contam_grams_array(F.col("_t"))).alias("gh")
     )
-    w, mask = _bloom_word_bit("gh", bitmap.bloom_words)
+    w, mask = _bloom_word_bit("gh")
     hits = (
         grams.select("doc_id", w.alias("w"), mask.alias("mask"))
-        .join(F.broadcast(bitmap.rows), "w")
+        .join(F.broadcast(bitmap), "w")
         .filter(F.col("word").bitwiseAND(F.col("mask")) != 0)
         .groupBy("doc_id")
         .agg(F.count("*").alias("n_suspect_grams"))
@@ -158,7 +129,7 @@ def adjudicate_suspects(
     )
 
 
-def gate_batch_writer(out_dir: str, bitmap: EvalBitmap):
+def gate_batch_writer(out_dir: str, bitmap: DataFrame):
     """The foreachBatch function for :func:`decontaminate_gate`,
     exposed so tests can drive a batch replay directly. Routes each
     micro-batch to ``clean/`` and ``suspect/`` parquet under a
@@ -189,7 +160,7 @@ def gate_batch_writer(out_dir: str, bitmap: EvalBitmap):
 
 def decontaminate_gate(
     docs_stream: DataFrame,
-    bitmap: EvalBitmap,
+    bitmap: DataFrame,
     out_dir: str,
     checkpoint_dir: str,
     trigger: dict | None = None,

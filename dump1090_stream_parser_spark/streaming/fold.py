@@ -26,10 +26,15 @@ its projection, its step and its schemas:
   (a bottom-k, a grid block, a summary), so the reducer keeps all rows
   at the max, never one row per key.
 
-All twins run with ``GroupStateTimeout.NoTimeout``: their key spaces
-are bounded by construction (see each twin). The TTL twins
-(``stateful``, ``near_dup``, ``semantic_dedup``) keep their own
-``ProcessingTimeTimeout`` updates.
+A twin whose state is bounded by construction runs with
+``GroupStateTimeout.NoTimeout``. A twin whose state must age out
+passes ``ttl_ms`` (``stateful``'s aircraft and ``near_dup``'s band
+keys grow with the stream; ``semantic_dedup``'s idle cells drop their
+member lists): the kernel then runs ``ProcessingTimeTimeout``, removes
+a key's state on its timed-out call (which carries no rows) and
+re-arms the timeout on every call with data, since Spark clears a
+timeout the call does not set again. The static branch has no
+timeouts.
 """
 
 from __future__ import annotations
@@ -56,10 +61,12 @@ def fold_stream(
     step: Step,
     state_ddl: str,
     out_ddl: str,
+    ttl_ms: int | None = None,
 ) -> DataFrame:
     """Fold ``keyed`` per ``keys`` with ``step``: an append-mode
     stream when ``keyed`` streams, else one fold per key over the
-    whole frame."""
+    whole frame. ``ttl_ms`` evicts a key idle that long (processing
+    time)."""
     if not keyed.isStreaming:
 
         def once(key: tuple, rows: pd.DataFrame) -> pd.DataFrame:
@@ -71,10 +78,15 @@ def fold_stream(
     def update(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
+        if state.hasTimedOut:
+            state.remove()
+            return
         rows = pd.concat(list(pdfs), ignore_index=True)
         new, out = step(key, rows, state.get if state.exists else None)
         if new is not None:
             state.update(new)
+        if ttl_ms is not None:
+            state.setTimeoutDuration(ttl_ms)
         if out is not None and len(out):
             yield out
 
@@ -83,7 +95,11 @@ def fold_stream(
         outputStructType=out_ddl,
         stateStructType=state_ddl,
         outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        timeoutConf=(
+            GroupStateTimeout.NoTimeout
+            if ttl_ms is None
+            else GroupStateTimeout.ProcessingTimeTimeout
+        ),
     )
 
 

@@ -7,9 +7,9 @@ batch re-clustering of the whole corpus per delivery is the O(corpus)
 anti-pattern. This operator keeps LSH bucket membership as streaming
 state: the narrow banding map (shared verbatim with the batch operator
 via ``operators.dedup.minhash_bands``) turns each document into
-N_BANDS (band_idx, band_key) rows, and ``applyInPandasWithState``
-keyed by bucket emits a candidate pair whenever a document lands in a
-bucket that already holds earlier documents.
+N_BANDS (band_idx, band_key) rows, and a per-bucket fold
+(``streaming/fold.py``) emits a candidate pair whenever a document
+lands in a bucket that already holds earlier documents.
 
 Emitted pairs are LSH *candidates* -- same contract as the batch
 banding stage; the exact-Jaccard verify runs downstream on candidates
@@ -28,13 +28,11 @@ at (active buckets x bytes per id list).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..operators.dedup import minhash_bands, minhash_shingles
+from .fold import fold_stream
 
 #: Per-bucket membership cap (overflow = degenerate banding signal).
 MAX_BUCKET_DOCS = 64
@@ -50,73 +48,49 @@ PAIR_OUTPUT_SCHEMA = (
 )
 
 
-def _make_update(ttl_ms: int):
-    """Build the per-bucket update fn with the idle TTL closed over (the
-    production default is BUCKET_TTL_MS; tests shrink it to exercise the
-    eviction path deterministically)."""
+def _step(key: tuple, rows: pd.DataFrame, state: tuple | None):
+    """One LSH bucket's update for one micro-batch: every new doc
+    pairs with every doc already in the bucket (carried state +
+    earlier rows of this batch), in deterministic doc_id order.
 
-    def _update_bucket(
-        key: tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        """One LSH bucket's update for one micro-batch: every new doc
-        pairs with every doc already in the bucket (carried state +
-        earlier rows of this batch), in deterministic doc_id order.
+    A bucket idle for the TTL is evicted by the kernel. Cold eviction
+    is SAFE for candidate generation in the archival sense -- pairs
+    among already-seen members were emitted when they formed; what is
+    lost is only future pairing against evicted members, the explicit
+    recency trade that keeps total state bounded by (buckets active
+    within one TTL) x (id list) instead of growing with the stream's
+    whole distinct-band-key history."""
+    seen, n_dropped = ([], 0) if state is None else state
+    seen = [int(d) for d in seen]
 
-        A bucket invoked only by its expired timer (hasTimedOut) has
-        seen no new member for ttl_ms: drop its state. Cold eviction is
-        SAFE for candidate generation in the archival sense -- pairs
-        among already-seen members were emitted when they formed; what
-        is lost is only future pairing against evicted members, the
-        explicit recency trade that keeps total state bounded by
-        (buckets active within one TTL) x (id list) instead of growing
-        with the stream's whole distinct-band-key history."""
-        if state.hasTimedOut:
-            state.remove()
-            return
+    band_idx, band_key = key
+    out_1, out_2 = [], []
+    known = set(seen)
+    for d in sorted(int(d) for d in rows["doc_id"]):
+        if d in known:  # replayed/duplicate delivery of the same doc
+            continue
+        if len(seen) >= MAX_BUCKET_DOCS:
+            n_dropped += 1
+            continue
+        for old in seen:
+            lo, hi = (old, d) if old < d else (d, old)
+            out_1.append(lo)
+            out_2.append(hi)
+        seen.append(d)
+        known.add(d)
 
-        if state.exists:
-            seen_raw, n_dropped = state.get
-            seen = list(seen_raw) if seen_raw is not None else []
-        else:
-            seen, n_dropped = [], 0
-
-        band_idx, band_key = key
-        new_ids: list[int] = []
-        for pdf in pdfs:
-            new_ids.extend(int(d) for d in pdf["doc_id"])
-        new_ids.sort()
-
-        out_1, out_2 = [], []
-        known = set(seen)
-        for d in new_ids:
-            if d in known:  # replayed/duplicate delivery of the same doc
-                continue
-            if len(seen) >= MAX_BUCKET_DOCS:
-                n_dropped += 1
-                continue
-            for old in seen:
-                lo, hi = (old, d) if old < d else (d, old)
-                out_1.append(lo)
-                out_2.append(hi)
-            seen.append(d)
-            known.add(d)
-
-        state.update((seen, n_dropped))
-        state.setTimeoutDuration(ttl_ms)
-        if out_1 or n_dropped:
-            yield pd.DataFrame(
-                {
-                    "band_idx": [band_idx] * len(out_1) or [band_idx],
-                    "band_key": [band_key] * len(out_1) or [band_key],
-                    "doc_id_1": out_1 or [None],
-                    "doc_id_2": out_2 or [None],
-                    "n_dropped": [n_dropped] * max(len(out_1), 1),
-                }
-            )
-
-    return _update_bucket
+    out = None
+    if out_1 or n_dropped:
+        out = pd.DataFrame(
+            {
+                "band_idx": [band_idx] * len(out_1) or [band_idx],
+                "band_key": [band_key] * len(out_1) or [band_key],
+                "doc_id_1": out_1 or [None],
+                "doc_id_2": out_2 or [None],
+                "n_dropped": [n_dropped] * max(len(out_1), 1),
+            }
+        )
+    return (seen, n_dropped), out
 
 
 def near_dup_candidates_stream(
@@ -137,11 +111,11 @@ def near_dup_candidates_stream(
     (ProcessingTimeTimeout), bounding state by the TTL-active working
     set. Eviction + clean re-seeding is exercised by
     tests/test_near_dup_stream.py::test_idle_bucket_evicts_after_ttl."""
-    bands = minhash_bands(minhash_shingles(doc_stream))
-    return bands.groupBy("band_idx", "band_key").applyInPandasWithState(
-        _make_update(bucket_ttl_ms),
-        outputStructType=PAIR_OUTPUT_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+    return fold_stream(
+        minhash_bands(minhash_shingles(doc_stream)),
+        ["band_idx", "band_key"],
+        _step,
+        _STATE_SCHEMA,
+        PAIR_OUTPUT_SCHEMA,
+        ttl_ms=bucket_ttl_ms,
     )

@@ -7,8 +7,8 @@ delivery is the O(corpus) anti-pattern. This operator keeps per-cell
 membership as streaming state: vectors are coarse-quantized to their
 nearest centroid with the batch operator's own assignment expression
 (``_nearest_cell_expr`` -- same ``round(cos, 6)`` ordering, same
-lowest-cell-id tie break), and ``applyInPandasWithState`` keyed by
-``cell_id`` scores each new vector against the cell's stored members.
+lowest-cell-id tie break), and a per-cell fold (``streaming/fold.py``)
+scores each new vector against the cell's stored members.
 
 Decision semantics are the batch policy, verbatim: a vector is DROPPED
 iff some lower-id member of its cell is tau-similar, attributed to the
@@ -30,8 +30,10 @@ unbounded band-key growth, unlike the minhash detector), but per-cell
 state must still be bounded: membership is capped at MAX_CELL_DOCS
 (overflow vectors are still JUDGED against the stored members and
 reported via ``n_overflow``, they just stop evicting future arrivals),
-and cells idle past a processing-time TTL evict entirely. State per
-cell is (ids, raw vectors, norms): MAX_CELL_DOCS * dim doubles.
+and cells idle past a processing-time TTL (``CELL_TTL_MS``) evict
+entirely: verdicts already emitted are never retracted, only future
+pairing against evicted members is lost. State per cell is (ids, raw
+vectors, norms): MAX_CELL_DOCS * dim doubles.
 
 At-least-once caveat: the replay guard covers STORED members only.
 While a cell is under its cap every arrival gets exactly one verdict
@@ -44,14 +46,14 @@ deliveries, not distinct vectors, once overflowing.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 from decimal import ROUND_HALF_UP, Decimal
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..operators.similarity import SEMANTIC_DEDUP_TAU, _nearest_cell_expr
+from .fold import fold_stream
 
 #: Per-cell membership cap: arrivals past the cap are judged but not
 #: stored (a cell this hot means the quantizer needs re-training).
@@ -71,52 +73,38 @@ OUTPUT_SCHEMA = (
 )
 
 
-def _make_update(tau: float, ttl_ms: int, max_docs: int):
-    """Per-cell update fn with the policy dials closed over (tests
-    shrink the TTL/cap to exercise eviction and overflow paths)."""
+def _fold_norm(v: np.ndarray) -> float:
+    # Same sequential fold as the batch/oracle norm expression.
+    nacc = 0.0
+    for d in range(v.shape[0]):
+        nacc = nacc + v[d] * v[d]
+    return float(np.sqrt(nacc))
 
-    def _update_cell(
-        key: tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        import numpy as np
 
-        if state.hasTimedOut:
-            # Idle cell: drop membership. Like the minhash detector's
-            # bucket eviction, this trades future pairing against
-            # evicted members for bounded state -- verdicts already
-            # emitted are never retracted.
-            state.remove()
-            return
+def _make_step(max_docs: int):
+    """Per-cell step with the membership cap closed over (tests shrink
+    it to exercise the overflow path)."""
 
-        if state.exists:
-            ids_raw, vecs_raw, norms_raw, n_overflow = state.get
-            ids = list(ids_raw) if ids_raw is not None else []
-            vecs = [np.asarray(v) for v in (vecs_raw or [])]
-            norms = list(norms_raw) if norms_raw is not None else []
-        else:
+    def step(key: tuple, rows: pd.DataFrame, state: tuple | None):
+        if state is None:
             ids, vecs, norms, n_overflow = [], [], [], 0
+        else:
+            ids, vecs, norms, n_overflow = state
+            ids, norms = list(ids), list(norms)
+            vecs = [np.asarray(v) for v in vecs]
 
         (cell_id,) = key
-        arrivals: list[tuple[int, "np.ndarray"]] = []
-        for pdf in pdfs:
-            for vid, emb in zip(pdf["vec_id"], pdf["embedding"]):
-                arrivals.append(
-                    (int(vid), np.asarray(emb, dtype="float64"))
-                )
         # Deterministic order inside the micro-batch: the batch policy
         # is defined over ids, so judge in id order (across batches the
         # source's delivery order governs -- the stream==batch guarantee
         # assumes ids arrive non-decreasing, the natural ingest order).
-        arrivals.sort(key=lambda t: t[0])
-
-        def _fold_norm(v: "np.ndarray") -> float:
-            # Same sequential fold as the batch/oracle norm expression.
-            nacc = 0.0
-            for d in range(v.shape[0]):
-                nacc = nacc + v[d] * v[d]
-            return float(np.sqrt(nacc))
+        arrivals = sorted(
+            (
+                (int(vid), np.asarray(emb, dtype="float64"))
+                for vid, emb in zip(rows["vec_id"], rows["embedding"])
+            ),
+            key=lambda t: t[0],
+        )
 
         known = set(ids)
         out: dict[str, list] = {
@@ -146,14 +134,14 @@ def _make_update(tau: float, ttl_ms: int, max_docs: int):
                     acc = acc + m[:, d] * raw[d]
                 cos_raw = acc / (np.asarray(norms) * nr)
                 for i, oid in enumerate(ids):
-                    if oid >= vid or cos_raw[i] < tau - 1e-6:
+                    if oid >= vid or cos_raw[i] < SEMANTIC_DEDUP_TAU - 1e-6:
                         continue
                     c = float(
                         Decimal(repr(float(cos_raw[i]))).quantize(
                             Decimal("1e-6"), rounding=ROUND_HALF_UP
                         )
                     )
-                    if c >= tau and (
+                    if c >= SEMANTIC_DEDUP_TAU and (
                         best_cos is None
                         or c > best_cos
                         or (c == best_cos and oid < best_id)
@@ -171,33 +159,30 @@ def _make_update(tau: float, ttl_ms: int, max_docs: int):
                 n_overflow += 1
             known.add(vid)
 
-        state.update((
+        new = (
             [int(i) for i in ids],
             [v.tolist() for v in vecs],
             [float(x) for x in norms],
             int(n_overflow),
-        ))
-        state.setTimeoutDuration(ttl_ms)
-        if out["vec_id"]:
-            yield pd.DataFrame(
-                {
-                    "vec_id": out["vec_id"],
-                    "cell_id": [cell_id] * len(out["vec_id"]),
-                    "dropped": out["dropped"],
-                    "kept_by": out["kept_by"],
-                    "cos_sim": out["cos_sim"],
-                    "n_overflow": [n_overflow] * len(out["vec_id"]),
-                }
-            )
+        )
+        n = len(out["vec_id"])
+        return new, pd.DataFrame(
+            {
+                "vec_id": out["vec_id"],
+                "cell_id": [cell_id] * n,
+                "dropped": out["dropped"],
+                "kept_by": out["kept_by"],
+                "cos_sim": out["cos_sim"],
+                "n_overflow": [n_overflow] * n,
+            }
+        )
 
-    return _update_cell
+    return step
 
 
 def semantic_dedup_stream(
     emb_stream: DataFrame,
     cent_rows: list,
-    tau: float = SEMANTIC_DEDUP_TAU,
-    cell_ttl_ms: int = CELL_TTL_MS,
     max_cell_docs: int = MAX_CELL_DOCS,
 ) -> DataFrame:
     """Per-arrival dedup verdicts from a (vec_id, embedding) stream.
@@ -217,10 +202,11 @@ def semantic_dedup_stream(
         "embedding",
         _nearest_cell_expr(cent_rows).alias("cell_id"),
     )
-    return assigned.groupBy("cell_id").applyInPandasWithState(
-        _make_update(tau, cell_ttl_ms, max_cell_docs),
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+    return fold_stream(
+        assigned,
+        ["cell_id"],
+        _make_step(max_cell_docs),
+        _STATE_SCHEMA,
+        OUTPUT_SCHEMA,
+        ttl_ms=CELL_TTL_MS,
     )

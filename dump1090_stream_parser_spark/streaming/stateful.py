@@ -2,15 +2,17 @@
 
 The reference's only state is its reconnect counter (SURVEY.md §2.2
 "Streaming: stateful custom" -- absent upstream; mandated by the north
-star as `applyInPandasWithState` custom stateful processing). This
-module keeps a per-aircraft running track: last known position/altitude,
-an exponentially-smoothed altitude, and a monotonically-increasing
-message count, updated per micro-batch and evicted after an idle TTL.
+star as custom stateful processing). This module keeps a per-aircraft
+running track: last known position/altitude, an exponentially-smoothed
+altitude, and a monotonically-increasing message count, updated per
+micro-batch and evicted after an idle TTL.
 
-Why `applyInPandasWithState` and not a windowed agg: the smoothing is
-order-dependent (EWMA over event-time-sorted updates) and the state must
-survive across micro-batches indefinitely until the TTL fires -- neither
-is expressible as a watermark-bounded window aggregate.
+Why a per-key fold (``streaming/fold.py``) and not a windowed agg: the
+smoothing is order-dependent (EWMA over event-time-sorted updates) and
+the state must survive across micro-batches indefinitely until the TTL
+fires -- neither is expressible as a watermark-bounded window
+aggregate. The kernel hands the step one aircraft's whole micro-batch
+as one frame, so the event-time sort spans every Arrow chunk of it.
 
 Scale posture: state is partitioned by ``hex_ident`` (the shuffle key),
 a few dozen bytes per aircraft; the world fleet is ~half a million
@@ -20,12 +22,10 @@ processing-time TTL bounds leakage from never-seen-again aircraft.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
-
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from .fold import fold_stream
 
 #: EWMA weight for the newest altitude observation.
 ALPHA = 0.3
@@ -40,108 +40,53 @@ TRACK_STATE_SCHEMA = (
 
 TRACK_OUTPUT_SCHEMA = "hex_ident string, " + TRACK_STATE_SCHEMA
 
+_OUT_COLS = [c.split()[0] for c in TRACK_OUTPUT_SCHEMA.split(", ")]
 
-def _update_track(
-    key: tuple[str],
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    """One aircraft's state update for one micro-batch.
 
-    Rows arrive as Arrow batches; we sort by event time so the EWMA is
-    deterministic, fold them into the carried state, and emit exactly one
-    row: the aircraft's post-batch track.
-    """
-    if state.hasTimedOut:
-        state.remove()
-        return
-
-    if state.exists:
-        n_msgs, last_alt, smooth_alt, last_lat, last_lon, last_seen = (
-            state.get
-        )
-    else:
+def _step(key: tuple, rows: pd.DataFrame, state: tuple | None):
+    """One aircraft's state update for one micro-batch: sort its rows by
+    event time so the EWMA is deterministic, fold them into the carried
+    state, and emit exactly one row: the aircraft's post-batch track."""
+    if state is None:
         n_msgs, last_alt, smooth_alt = 0, None, None
         last_lat = last_lon = last_seen = None
+    else:
+        n_msgs, last_alt, smooth_alt, last_lat, last_lon, last_seen = state
 
-    for pdf in pdfs:
-        pdf = pdf.sort_values("parsed_time")
-        n_msgs += len(pdf)
-        for alt in pdf["altitude"].dropna():
-            last_alt = int(alt)
-            smooth_alt = (
-                float(alt)
-                if smooth_alt is None
-                else ALPHA * float(alt) + (1 - ALPHA) * smooth_alt
-            )
-        pos = pdf.dropna(subset=["lat", "lon"])
-        if len(pos):
-            last_lat = float(pos["lat"].iloc[-1])
-            last_lon = float(pos["lon"].iloc[-1])
-        ts = pdf["parsed_time"].dropna()
-        if len(ts):
-            last_seen = ts.iloc[-1]
+    rows = rows.sort_values("parsed_time", kind="stable")
+    n_msgs += len(rows)
+    for alt in rows["altitude"].dropna():
+        last_alt = int(alt)
+        smooth_alt = (
+            float(alt)
+            if smooth_alt is None
+            else ALPHA * float(alt) + (1 - ALPHA) * smooth_alt
+        )
+    pos = rows.dropna(subset=["lat", "lon"])
+    if len(pos):
+        last_lat = float(pos["lat"].iloc[-1])
+        last_lon = float(pos["lon"].iloc[-1])
+    ts = rows["parsed_time"].dropna()
+    if len(ts):
+        last_seen = ts.iloc[-1]
 
-    state.update((n_msgs, last_alt, smooth_alt, last_lat, last_lon, last_seen))
-    state.setTimeoutDuration(IDLE_TTL_MS)
-    yield pd.DataFrame(
-        {
-            "hex_ident": [key[0]],
-            "n_msgs": [n_msgs],
-            "last_alt": [last_alt],
-            "smooth_alt": [smooth_alt],
-            "last_lat": [last_lat],
-            "last_lon": [last_lon],
-            "last_seen": [last_seen],
-        }
-    )
+    new = (n_msgs, last_alt, smooth_alt, last_lat, last_lon, last_seen)
+    return new, pd.DataFrame([(key[0], *new)], columns=_OUT_COLS)
 
 
 def track_state(silver_df: DataFrame) -> DataFrame:
-    """Per-aircraft track state stream (update output mode).
+    """Per-aircraft track state (append output mode).
 
     Input: the Silver squitters stream. Output: one row per aircraft per
-    micro-batch in which it appeared, carrying its cumulative track.
-    """
-    return (
+    micro-batch in which it appeared, carrying its cumulative track. A
+    static Silver frame gives the batch twin: one row per aircraft."""
+    return fold_stream(
         silver_df.select(
             "hex_ident", "altitude", "lat", "lon", "parsed_time"
-        )
-        .filter(silver_df.hex_ident.isNotNull())
-        .groupBy("hex_ident")
-        .applyInPandasWithState(
-            _update_track,
-            outputStructType=TRACK_OUTPUT_SCHEMA,
-            stateStructType=TRACK_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-        )
+        ).filter(silver_df.hex_ident.isNotNull()),
+        ["hex_ident"],
+        _step,
+        TRACK_STATE_SCHEMA,
+        TRACK_OUTPUT_SCHEMA,
+        ttl_ms=IDLE_TTL_MS,
     )
-
-
-def run_track_state_batch(silver_df: DataFrame) -> list[dict[str, Any]]:
-    """Batch twin for tests: fold the same update function over a static
-    DataFrame grouped by aircraft (no Spark state store involved)."""
-
-    class _FakeState:
-        hasTimedOut = False
-        exists = False
-        get = None
-
-        def update(self, v):
-            self.exists, self.get = True, v
-
-        def setTimeoutDuration(self, ms):
-            pass
-
-        def remove(self):
-            self.exists = False
-
-    out: list[dict[str, Any]] = []
-    pdf = silver_df.select(
-        "hex_ident", "altitude", "lat", "lon", "parsed_time"
-    ).toPandas()
-    for hex_ident, grp in pdf.groupby("hex_ident"):
-        rows = list(_update_track((hex_ident,), iter([grp]), _FakeState()))
-        out.extend(rows[0].to_dict("records"))
-    return out

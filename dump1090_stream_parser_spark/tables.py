@@ -84,6 +84,39 @@ def _parse_bytes(v: str) -> int:
     return int(float(s) * mult)
 
 
+def _data_bytes(path: str) -> int:
+    """On-disk bytes of a table: the file, or every data file under a
+    directory, skipping ``_``/``.`` names (``_SUCCESS``, ``.crc``) as
+    Spark's file index does."""
+    if not os.path.isdir(path):
+        return os.path.getsize(path)
+    total = 0
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        total += sum(
+            os.path.getsize(os.path.join(root, f))
+            for f in files
+            if not f.startswith(("_", "."))
+        )
+    return total
+
+
+def _undershoot(spark: SparkSession, path: str) -> int | None:
+    """``defaultParallelism`` when the scan of ``path`` estimates fewer
+    splits (data bytes / ``spark.sql.files.maxPartitionBytes``) than
+    that, else ``None``: the spread helpers' shared condition. A path
+    that cannot be sized is left alone."""
+    try:
+        size = _data_bytes(path)
+    except OSError:
+        return None
+    max_split = _parse_bytes(
+        spark.conf.get("spark.sql.files.maxPartitionBytes", "128m")
+    )
+    cores = spark.sparkContext.defaultParallelism
+    return cores if max(1, -(-size // max_split)) < cores else None
+
+
 def scan_spread(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
     """Scale-adaptive input spread (optimization guide §2.5 "input
     skew: one huge unsplittable file ... repartition immediately after
@@ -96,8 +129,9 @@ def scan_spread(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
     operator ran 1-of-32-cores before round 13.
 
     The fix is conditional, derived from input size (never a constant
-    tuned for local mode): estimate the split count from the file's
-    on-disk bytes and the session's ``spark.sql.files.maxPartitionBytes``;
+    tuned for local mode): estimate the split count from the table's
+    on-disk data bytes (every data file of a directory table) and the
+    session's ``spark.sql.files.maxPartitionBytes``;
     only when that undershoots ``defaultParallelism`` do we round-robin
     repartition to the core count. At production scale (thousands of
     row groups) the condition is false and the plan is untouched, so
@@ -122,16 +156,8 @@ def scan_spread(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
     before the exchange"), shipping unused payload through the spread
     -- measured +0.3-0.5 s on the orders/lineitem statistics queries.
     """
-    try:
-        size = os.path.getsize(path)
-    except OSError:
-        return df
-    max_split = _parse_bytes(
-        spark.conf.get("spark.sql.files.maxPartitionBytes", "128m")
-    )
-    est_splits = max(1, -(-size // max_split))
-    cores = spark.sparkContext.defaultParallelism
-    if est_splits >= cores:
+    cores = _undershoot(spark, path)
+    if cores is None:
         return df
     return df.repartition(cores, F.xxhash64(df.columns[0]))
 
@@ -171,16 +197,8 @@ def keyed_spread(
     split counts this returns ``df`` untouched and the plan is the
     normal partial-agg -> exchange -> final-agg shape. Deterministic
     under retries (data-derived hash keys, no round-robin)."""
-    try:
-        size = os.path.getsize(path)
-    except OSError:
-        return df
-    max_split = _parse_bytes(
-        spark.conf.get("spark.sql.files.maxPartitionBytes", "128m")
-    )
-    est_splits = max(1, -(-size // max_split))
-    cores = spark.sparkContext.defaultParallelism
-    if est_splits >= cores:
+    cores = _undershoot(spark, path)
+    if cores is None:
         return df
     return df.repartition(cores, *[F.col(c) for c in cols])
 

@@ -77,9 +77,10 @@ import re as _re
 #: recall-vs-brute-force quality sweeps, snapshot-store concurrency
 #: e2e. Run alone with -m "slow or not slow" on a 4-core VM
 #: (SPARK_GRAFT_CPUS=4) they took 635 s; per file below.
-#: test_sbs1_jvm.py is NOT listed: its restart/kill tests are slow by
-#: name (_SLOW_NAME), and the rest keep a socket-source ingest check
-#: in the default run.
+#: test_sbs1_jvm.py and test_near_dup_stream.py are NOT listed: their
+#: restart/kill/TTL tests are slow by name (_SLOW_NAME), and the rest
+#: keep a socket-source ingest check and near_dup's stream == batch
+#: check in the default run.
 _SLOW_FILES = {
     "test_bench_contract.py",   # subprocess bench e2e (~154 s)
     "test_streaming.py",        # checkpoint resume + supervised restart
@@ -88,7 +89,6 @@ _SLOW_FILES = {
     "test_approx.py",           # recall vs brute force sweeps (~110 s)
     "test_snapshots.py",        # snapshot-store e2e + concurrency (~102 s)
     "test_capstone_parity.py",  # cross-store hash equality e2e (~39 s)
-    "test_near_dup_stream.py",  # TTL/eviction/restart e2e (~156 s)
 }
 
 #: Name classes that are slow wherever they appear: checkpoint-restart

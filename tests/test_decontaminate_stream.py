@@ -167,23 +167,3 @@ def test_gate_plus_adjudication_equals_exact_audit(spark, tmp_path):
         assert contaminated == _truly_contaminated(stream_docs, eval_docs)
     finally:
         bitmap.unpersist()
-
-
-def test_gate_bitmap_carries_its_geometry(spark):
-    """The EvalBitmap bundles bloom_words with the rows: building at a
-    scaled geometry and probing through the SAME object must keep the
-    no-false-negative guarantee (the hazard this API exists to close is
-    a caller building at 2^20 and probing at the 2^16 default)."""
-    eval_docs, stream_docs = _splits(spark)
-    scaled = eval_bloom_bitmap(eval_docs, bloom_words=1 << 20).persist()
-    try:
-        assert scaled.bloom_words == 1 << 20
-        suspects = {
-            r["doc_id"]
-            for r in gate_docs(stream_docs, scaled)
-            .filter(F.col("suspect"))
-            .collect()
-        }
-        assert _truly_contaminated(stream_docs, eval_docs) <= suspects
-    finally:
-        scaled.unpersist()

@@ -35,8 +35,11 @@ from dump1090_stream_parser_spark.streaming import (
     ema,
     heavy_hitters,
     kmv,
+    near_dup,
     novelty,
+    semantic_dedup,
     similarity,
+    stateful,
     subsample,
     theil_sen,
     weighted_sample,
@@ -191,6 +194,19 @@ def _top3(out):
     return canon(best.groupby("bucket").head(3))
 
 
+def _last_track(out):
+    # each batch re-emits the aircraft's cumulative track
+    return canon(out.loc[out.groupby("hex_ident")["n_msgs"].idxmax()])
+
+
+def _vectors(dim):
+    return lambda r, n: list(r.normal(size=(n, dim)))
+
+
+def _distinct_ts(r, n):
+    return pd.Timestamp("2024-01-01") + pd.to_timedelta(r.permutation(n), "s")
+
+
 def _sample(out):
     # the current sample: admitted minus displaced
     kept = out["admitted"] & ~out["doc_id"].isin(out["displaced"])
@@ -245,11 +261,29 @@ _SPLITS = {
                 lambda r, n: _frame(doc_id=_ints(40), ghash=_ints(120))(r, n)
                 .drop_duplicates().assign(bucket=lambda f: f["ghash"] % 4),
                 _sum_per_doc, ["doc_id"]),
+    # 16 buckets of ~19 docs: MAX_BUCKET_DOCS (64) is never reached
+    "near_dup": (near_dup._step, ["band_idx", "band_key"],
+                 _frame(band_idx=_ints(2), band_key=_pick(*"abcdefgh"),
+                        doc_id=_ids),
+                 canon, ["doc_id"]),
+    # judged against lower ids: ordered by id; many pairs pass tau in 4-d
+    "semantic_dedup": (semantic_dedup._make_step(semantic_dedup.MAX_CELL_DOCS),
+                       ["cell_id"],
+                       _frame(cell_id=_ints(4), vec_id=_ids,
+                              embedding=_vectors(4)),
+                       canon, ["vec_id"]),
     # a coarse score grid: ties fall to the lower vec_id
     "similarity": (similarity._make_step(3), ["bucket"],
                    _frame(bucket=_ints(4), vec_id=_ids,
                           cos_sim=lambda r, n: r.integers(0, 30, n) / 30),
                    _top3, None),
+    # an EWMA in event-time order: distinct timestamps
+    "stateful": (stateful._step, ["hex_ident"],
+                 _frame(hex_ident=_pick("a", "b", "c"),
+                        altitude=_nan_or(0.2, _ints(40000)),
+                        lat=_nan_or(0.3, _unit), lon=_unit,
+                        parsed_time=_distinct_ts),
+                 _last_track, ["parsed_time"]),
     "subsample": (_v(subsample), ["grp"],
                   _frame(grp=_pick("1-URGENT", "2-HIGH"), cents=_ints(10**8),
                          h=_ints(2**60)),

@@ -812,25 +812,19 @@ def test_no_code_turns_the_spark_ui_on():
     assert not _UI_ON.search('.config("spark.ui.enabled", "false")')
 
 
-def test_bloom_geometry_guards_reject_bad_word_counts(spark):
-    """The documented bloom geometry contract is enforced, not just
-    described: non-power-of-two word counts fold high gh bits into the
-    word index (correlating the two coordinates), and counts above
-    2^27 overlap the bit-in-word field -- both must raise instead of
-    silently degrading the n/m false-positive model."""
-    import pytest
-
+def test_bloom_geometry_guards_reject_bad_word_counts():
+    """The documented bloom geometry contract holds for the one
+    geometry every bitmap and probe share: a non-power-of-two word
+    count would fold high gh bits into the word index (correlating the
+    two coordinates), and a count above 2^27 would overlap the
+    bit-in-word field -- either silently degrades the n/m
+    false-positive model."""
     from dump1090_stream_parser_spark.operators.pipeline_ops import (
-        _bloom_word_bit,
+        BLOOM_WORDS,
     )
 
-    _bloom_word_bit("gh", 1 << 20)  # in-contract geometry is fine
-    with pytest.raises(ValueError, match="power of two"):
-        _bloom_word_bit("gh", 1_000_000)
-    with pytest.raises(ValueError, match="2\\^27"):
-        _bloom_word_bit("gh", 1 << 28)
-    with pytest.raises(ValueError, match="power of two"):
-        _bloom_word_bit("gh", 0)
+    assert BLOOM_WORDS > 0 and BLOOM_WORDS & (BLOOM_WORDS - 1) == 0
+    assert BLOOM_WORDS <= 1 << 27
 
 
 def test_cell_bucketed_semantic_dedup_groups_without_exchange(spark):
@@ -1104,10 +1098,15 @@ def test_keyed_spread_shares_the_collapse_exchange(spark):
     assert spread_exchange_count(final) == 0, final
 
 
-def test_keyed_spread_is_a_noop_at_production_split_counts(spark):
+def test_keyed_spread_is_a_noop_at_production_split_counts(
+    spark, tmp_path
+):
     """With maxPartitionBytes small enough that the scan splits reach
     defaultParallelism, keyed_spread must return the frame untouched
-    (the scale-adaptive condition, not a local constant)."""
+    (the scale-adaptive condition, not a local constant) -- for a
+    single-file table and for a table stored as a directory, which is
+    sized by its data files, not by its directory entry (4 KiB: one
+    split at 8k, so it would always spread)."""
     from dump1090_stream_parser_spark.tables import (
         keyed_spread,
         load_table,
@@ -1115,13 +1114,20 @@ def test_keyed_spread_is_a_noop_at_production_split_counts(spark):
     )
 
     orders = load_table(spark, SF_DIR, "orders")
+    orders_dir = str(tmp_path / "orders")
+    orders.repartition(8).write.parquet(orders_dir)
+    in_dir = spark.read.parquet(orders_dir)
     prev = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    spark.conf.set("spark.sql.files.maxPartitionBytes", "1k")
     try:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", "1k")
         out = keyed_spread(
             spark, orders, table_path(SF_DIR, "orders"), ["o_orderkey"]
         )
         assert out is orders
+        spark.conf.set("spark.sql.files.maxPartitionBytes", "8k")
+        assert in_dir.rdd.getNumPartitions() >= 4
+        out = keyed_spread(spark, in_dir, orders_dir, ["o_orderkey"])
+        assert out is in_dir
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
 

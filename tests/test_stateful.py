@@ -1,5 +1,6 @@
-"""Custom stateful operator (applyInPandasWithState): per-aircraft track
-state, streamed via file replay and cross-checked against the batch twin."""
+"""Custom stateful operator (a TTL fold on streaming/fold.py):
+per-aircraft track state, streamed via file replay and cross-checked
+against the batch twin."""
 
 from __future__ import annotations
 
@@ -13,7 +14,6 @@ from dump1090_stream_parser_spark.streaming.pipeline import (
 )
 from dump1090_stream_parser_spark.streaming.stateful import (
     ALPHA,
-    run_track_state_batch,
     track_state,
 )
 
@@ -31,10 +31,10 @@ EXPECT_SMOOTH = ALPHA * 12000 + (1 - ALPHA) * (
 )
 
 
-def _silver_stream(spark, tmp_path):
+def _silver_stream(spark, tmp_path, lines=LINES):
     src = tmp_path / "in"
     src.mkdir(exist_ok=True)
-    (src / "lines.txt").write_text("\n".join(LINES) + "\n")
+    (src / "lines.txt").write_text("\n".join(lines) + "\n")
     bronze = bronze_from_file_replay(spark, str(src))
     return silver(parse_lines(bronze, parsed_time=F.col("generated_ts")))
 
@@ -44,7 +44,7 @@ def test_track_state_stream(spark, tmp_path):
         track_state(_silver_stream(spark, tmp_path))
         .writeStream.format("memory")
         .queryName("tracks")
-        .outputMode("update")
+        .outputMode("append")
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)
         .start()
@@ -79,7 +79,51 @@ def test_track_state_stream_matches_batch_twin(spark, tmp_path):
     silver_df = silver(
         parse_lines(batch_lines, parsed_time=F.col("generated_ts"))
     )
-    twin = {r["hex_ident"]: r for r in run_track_state_batch(silver_df)}
+    twin = {r["hex_ident"]: r for r in track_state(silver_df).collect()}
     assert twin["AAA111"]["n_msgs"] == 3
     assert math.isclose(twin["AAA111"]["smooth_alt"], EXPECT_SMOOTH)
     assert twin["BBB222"]["last_alt"] == 5000
+
+
+def test_track_state_ewma_spans_arrow_chunks(spark, tmp_path):
+    """One aircraft's micro-batch split over several Arrow chunks
+    (maxRecordsPerBatch=2, four reports in reverse time order) still
+    folds in event-time order: sorting each chunk on its own would
+    fold 12000, 13000, 10000, 11000 and end on last_alt 11000."""
+    import time
+
+    lines = [
+        f"MSG,5,1,1,CCC333,1,2026/08/13,10:0{i}:00.000,"
+        f"2026/08/13,10:0{i}:00.000,,{alt},,,,,,,0,,0,0"
+        for i, alt in reversed(list(enumerate((10000, 11000, 12000, 13000))))
+    ]
+    smooth = 10000.0
+    for alt in (11000, 12000, 13000):
+        smooth = ALPHA * alt + (1 - ALPHA) * smooth
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        q = (
+            track_state(_silver_stream(spark, tmp_path, lines))
+            .writeStream.format("memory")
+            .queryName("tracks_chunked")
+            .outputMode("append")
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        deadline = time.time() + 120
+        rows = []
+        while time.time() < deadline and not rows:
+            time.sleep(1)
+            rows = spark.sql("SELECT * FROM tracks_chunked").collect()
+        q.stop()
+        q.awaitTermination(60)
+    finally:
+        spark.conf.set(key, prev)
+    (row,) = rows
+    assert row["n_msgs"] == 4
+    assert row["last_alt"] == 13000
+    assert math.isclose(row["smooth_alt"], smooth)
